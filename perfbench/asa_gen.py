@@ -17,10 +17,11 @@ sources and ACTIVE/UNUSED status. Every flow is generated inside some
 non-catch-all rule, so each catch-all reads 0 hits.
 
 Every seed gets the same amount of work; the seed draws addresses, ports
-and rule popularity, not sizes. Hit lines per day are fixed; the number
-of hit lines per distinct flow differs per day (``LINES_PER_FLOW``),
-which sets how much work the flow pre-aggregation shares, and the two
-ACLs expand to different rule counts.
+and rule popularity, not sizes. Every day draws the same number of
+distinct flows (``FLOWS_PER_DAY``), so the rule match, whose work grows
+with flows, costs the same each day; the number of hit lines per flow
+differs per day (``LINES_PER_FLOW``), which sets how much work the flow
+pre-aggregation shares. The two ACLs expand to different rule counts.
 Files are written with gzip mtime 0: one seed gives byte-identical
 inputs.
 """
@@ -35,9 +36,15 @@ import random
 from dataclasses import dataclass
 
 DAYS = 3
-FILES_PER_DAY = 2
-HIT_LINES_PER_DAY = 1500
-LINES_PER_FLOW = (50, 10, 2)  # per day, in day order
+FILES_PER_DAY = 4  # gzip is not splittable: one read task per file
+# Sized from measurement (perfbench/README.md): on a 4-core host a warm day
+# costs ~2.5 s of jobs and stages whatever its size, plus ~7 us per line, so
+# the largest day's parse is a third of its time. The largest day comes
+# second: the first day absorbs the session's cold start, so the median of
+# the three first-pass latencies (op_p50_s) is the largest day's, which
+# spread least across seeds.
+FLOWS_PER_DAY = 500
+LINES_PER_FLOW = (40, 400, 120)  # per day, in day order
 OTHER_FRAC = 0.25  # other message IDs, relative to hit lines
 MALFORMED_FRAC = 0.02  # truncated 106100 lines, relative to hit lines
 
@@ -179,13 +186,13 @@ def _other_line(rng: random.Random) -> str:
 
 
 def generate(out_dir: str, seed: int, days: int = DAYS,
-             hit_lines_per_day: int = HIT_LINES_PER_DAY) -> dict:
+             flows_per_day: int = FLOWS_PER_DAY) -> dict:
     """Write config and logs under ``out_dir``; return the manifest.
 
     The manifest holds the stated input size and ``expected``: for each
     day, ``{"<acl>/<rule_id>": [action, hits, n_flows, n_sources, status]}``
-    covering every rule statement. ``days`` and ``hit_lines_per_day``
-    shrink the archive for tests."""
+    covering every rule statement. ``days`` and ``flows_per_day`` shrink
+    the archive for tests."""
     rng = random.Random(seed)
     config, rules = _build_config(rng)
     os.makedirs(out_dir, exist_ok=True)
@@ -199,10 +206,10 @@ def generate(out_dir: str, seed: int, days: int = DAYS,
     total_lines = 0
     for d, lines_per_flow in enumerate(LINES_PER_FLOW[:days]):
         day = f"2024-03-{d + 1:02d}"
-        n_flows = max(1, hit_lines_per_day // lines_per_flow)
+        hit_lines = flows_per_day * lines_per_flow
         usage: dict[tuple[str, int], list] = {}
         lines: list[str] = []
-        for _ in range(n_flows):
+        for _ in range(flows_per_day):
             r = rng.choices(active, weights)[0]
             proto = r.proto if r.proto != "ip" else rng.choice(("tcp", "udp"))
             src = _pick_ip(rng, rng.choice(r.srcs))
@@ -225,11 +232,11 @@ def generate(out_dir: str, seed: int, days: int = DAYS,
             u[0] += hits
             u[1].add((r.acl, proto, src, dst, port))
             u[2].add(src)
-        for _ in range(int(hit_lines_per_day * MALFORMED_FRAC)):
+        for _ in range(int(hit_lines * MALFORMED_FRAC)):
             # cut before "hit-cnt": still a 106100 line, but unparseable
             good = lines[rng.randrange(len(lines))]
             lines.append(good[: good.find(" hit-cnt") - rng.randint(0, 8)])
-        lines += [_other_line(rng) for _ in range(int(hit_lines_per_day * OTHER_FRAC))]
+        lines += [_other_line(rng) for _ in range(int(hit_lines * OTHER_FRAC))]
         rng.shuffle(lines)
         day_dir = os.path.join(out_dir, "logs", day)
         os.makedirs(day_dir, exist_ok=True)
@@ -248,7 +255,7 @@ def generate(out_dir: str, seed: int, days: int = DAYS,
                 else [r.action, 0, 0, 0, "UNUSED"]
             )
         day_info.append({"day": day, "dir": day_dir, "lines": len(lines),
-                     "hit_lines": n_flows * lines_per_flow,
+                     "hit_lines": hit_lines,
                      "flows": sum(len(u[1]) for u in usage.values()),
                      "lines_per_flow": lines_per_flow})
     return {

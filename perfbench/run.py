@@ -12,13 +12,12 @@ after another on ``local[nproc]``; each run is a fresh process. Inputs
 are generated from the seed into ``perfbench/_work`` (untimed, reused by
 later runs in the same checkout). A run then
 
-1. sets up at least ``MIN_SETUPS`` times (more when set-up is cheap):
-   session start (the first one from before the engine's import),
-   session defaults, package shipping, and the workload's own set-up
-   (base-table caching, or reading the ASA config); the last session is
-   kept;
-2. makes one cold first pass over the operations, then warm passes until
-   ``--seconds`` have passed since the first pass began (at least one);
+1. sets up once, timed from before the engine's import: session start
+   (JVM launch), session defaults, package shipping, and the workload's
+   own set-up (base-table caching, or reading the ASA config);
+2. makes one cold first pass over the operations, then the workload's
+   ``warm_passes`` warm passes, and more until ``--seconds`` have passed
+   since the first pass began;
 3. checks every operation's output outside the timed passes;
 4. prints every metric by name and unit, and as its last line one JSON
    object ``{"correct", "attempted", "failed", "metrics"}``: end-to-end
@@ -46,11 +45,6 @@ from dataclasses import dataclass, field
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, "_work")
-# Set-up is repeated at least MIN_SETUPS times, and until the repeats after
-# the first have taken SETUP_REPEAT_S, so a cheap set-up gets more samples.
-MIN_SETUPS = 3
-SETUP_REPEAT_S = 1.5
-MAX_SETUPS = 15
 
 
 def host_memory_gib() -> float:
@@ -68,17 +62,15 @@ def driver_heap() -> str:
     return f"{mib}m"
 
 
-def host_info(cpus: int, heap: str, seed: int) -> dict:
+def host_info(cpus: int, heap: str, seed: int, java: str) -> dict:
     import pyspark
 
-    java = subprocess.run(["java", "-version"], capture_output=True, text=True,
-                          timeout=60).stderr.splitlines()
     return {
         "nproc": cpus,
         "mem_gib": round(host_memory_gib(), 1),
         "python": platform.python_version(),
         "pyspark": pyspark.__version__,
-        "java": java[0] if java else "unknown",
+        "java": java,
         "heap": heap,
         "seed": seed,
         "machine": platform.machine(),
@@ -124,6 +116,23 @@ def metric_units() -> tuple[dict[str, str], dict[str, str]]:
             {m["name"]: m["unit"] for m in spec["per_layer"]})
 
 
+def untraced_first_pass(results: str, workload: str, inputs: dict) -> float | None:
+    """Median ``first_pass_s`` of the untraced runs recorded in this
+    checkout on the same inputs (registry inputs do not depend on the
+    seed, so any seed's run counts), or None when there is none."""
+    from spans import median
+
+    prefix = f"{workload}-seed"
+    values = []
+    for name in os.listdir(results):
+        if name.startswith(prefix) and name.endswith("-trace0.json"):
+            with open(os.path.join(results, name)) as f:
+                run = json.load(f)
+            if run["inputs"] == inputs:
+                values.append(run["end_to_end"]["first_pass_s"])
+    return median(values) if values else None
+
+
 @dataclass
 class Pass:
     """One sequential pass: per-operation latency, traced records and
@@ -154,17 +163,28 @@ def run_pass(wl, spark, tag: str, tr, jvm) -> Pass:
     return p
 
 
+def warm_pass_s(warm: list[Pass]) -> float:
+    """The warm pass as the sum of each operation's median warm latency:
+    a burst of host contention in one pass moves one sample of the
+    operations it hits, not the whole figure."""
+    from spans import median
+
+    return sum(median([w.lat[op] for w in warm]) for op in warm[0].lat)
+
+
 def per_layer(wl, first: Pass, warm: list[Pass], setup_info: dict, cpus: int,
               groups: dict) -> tuple[dict, list[dict]]:
     import sparkstats
-    from spans import covered
+    from spans import covered, median
 
     def total(op: str | None = None, phase: str | None = None) -> sparkstats.GroupStats:
-        """Event-log totals of the first pass; job groups are tag/op/phase."""
+        """Event-log totals of the first pass; job groups are tag/op/phase.
+        Without a phase, the benchmark's own counting jobs are left out."""
         acc = sparkstats.GroupStats()
         for g, s in groups.items():
             tag, g_op, g_phase = (g.split("/") + ["", ""])[:3]
-            if tag == first.tag and op in (None, g_op) and phase in (None, g_phase):
+            if tag == first.tag and op in (None, g_op) and (
+                    g_phase == phase or phase is None and g_phase != "count"):
                 acc.add(s)
         return acc
 
@@ -198,20 +218,19 @@ def per_layer(wl, first: Pass, warm: list[Pass], setup_info: dict, cpus: int,
         "python.nodes": rsum("python_nodes"),
         "python.op_s": sum(first.lat[op] for op, r in first.recs.items()
                            if r.get("python_nodes")),
-        "asa_config.rules": 0,
+        "asa_config.rules": rsum("rules"),
         "asa_config.build_s": rsum("config_s"),
-        "text_logs.lines": 0,
-        "text_logs.hits": 0,
+        "text_logs.lines": rsum("lines"),
+        "text_logs.hits": rsum("hits"),
         "text_logs.parse_s": rsum("parse_s"),
-        "pipeline.flows": 0,
-        "pipeline.flows_per_hit": 0.0,
+        "pipeline.flows": rsum("flows"),
+        "pipeline.flows_per_hit": rsum("flows") / rsum("hits") if rsum("hits") else 0.0,
         "pipeline.match_s": rsum("match_s"),
         "sinks.write_s": rsum("write_s"),
         "sinks.files": rsum("files"),
         "sinks.write_mb": rsum("write_mb"),
         "trace.first_pass_s": first.wall,
     }
-    layer.update(wl.layer_counts())
 
     ledger = []
     for op in wl.ops():
@@ -219,7 +238,7 @@ def per_layer(wl, first: Pass, warm: list[Pass], setup_info: dict, cpus: int,
         ledger.append({
             "op": op,
             "first_s": first.lat[op],
-            "warm_s": warm[0].lat[op],
+            "warm_s": median([w.lat[op] for w in warm]),
             "build_s": r.get("build_s", 0.0),
             "build_jobs": total(op, "build").jobs,
             "jobs": g_all.jobs,
@@ -282,36 +301,32 @@ def main(argv: list[str] | None = None) -> int:
     inputs = wl.prepare(WORK, args.seed)
     phase_s = {"prepare": time.perf_counter() - t_prep}
     tr = Tracer(traced)
-    setups: list[float] = []
-    setup_info: dict = {}
-    spark = None
-    with sparkstats.RssSampler() as rss:
-        while len(setups) < MIN_SETUPS or (
-                sum(setups[1:]) < SETUP_REPEAT_S and len(setups) < MAX_SETUPS):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            with tr.span("setup"):
-                from ruleset_analysis_spark.session import get_spark
+    load0, t_load = sparkstats.host_load(), time.perf_counter()
+    with tr.span("setup"):
+        from ruleset_analysis_spark.session import get_spark
 
-                spark = get_spark(app_name=f"perfbench-{args.workload}", cpus=cpus,
-                                  driver_memory=heap)
-                spark.sparkContext.setLogLevel("ERROR")
-                setup_info = wl.setup(spark, tr)
-            setups.append(time.perf_counter() - t0)
-        jvm = sparkstats.JvmCounters(spark)
-        if traced:
-            setup_info["cached_mb"] = jvm.storage()[1]
-        app_id = spark.sparkContext.applicationId
+        spark = get_spark(app_name=f"perfbench-{args.workload}", cpus=cpus,
+                          driver_memory=heap)
+        spark.sparkContext.setLogLevel("ERROR")
+        setup_info = wl.setup(spark, tr)
+    setup_s = time.perf_counter() - t_load
+    jvm = sparkstats.JvmCounters(spark)
+    if traced:
+        setup_info["cached_mb"] = jvm.storage()[1]
+    app_id = spark.sparkContext.applicationId
+    java = spark._jvm.java.lang.System.getProperty("java.runtime.version")
 
-        t_meas = time.perf_counter()
-        first = run_pass(wl, spark, "p1", tr, jvm)
-        warm: list[Pass] = []
-        while not warm or time.perf_counter() - t_meas < args.seconds:
-            warm.append(run_pass(wl, spark, f"p{len(warm) + 2}", tr, jvm))
-        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
-    phase_s["setup"] = sum(setups)
+    t_meas = time.perf_counter()
+    first = run_pass(wl, spark, "p1", tr, jvm)
+    warm: list[Pass] = []
+    while len(warm) < wl.warm_passes or time.perf_counter() - t_meas < args.seconds:
+        warm.append(run_pass(wl, spark, f"p{len(warm) + 2}", tr, jvm))
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    peak_rss = sparkstats.peak_rss_mb()
+    phase_s["setup"] = setup_s
     phase_s["passes"] = time.perf_counter() - t_meas
+    load = {k: v - load0[k] for k, v in sparkstats.host_load().items()}
+    load["window_s"] = time.perf_counter() - t_load
     t_check = time.perf_counter()
 
     failures: dict[str, str] = {}
@@ -325,10 +340,9 @@ def main(argv: list[str] | None = None) -> int:
         except Exception as e:  # a check that raises is a failed operation
             return f"{type(e).__name__}: {str(e)[:300]}"
 
-    # two checks at a time: one collects from Spark while the other's
-    # DuckDB twin runs
+    # one check per core: Spark collects and DuckDB twins overlap
     todo = [op for op in wl.ops() if op not in failures]
-    with ThreadPoolExecutor(max_workers=2) as pool:
+    with ThreadPoolExecutor(max_workers=cpus) as pool:
         for op, problem in zip(todo, pool.map(check, todo)):
             if problem:
                 failures[op] = problem
@@ -341,52 +355,53 @@ def main(argv: list[str] | None = None) -> int:
     lat = list(first.lat.values())
     pct, tail_s, beyond = tail(lat)
     e2e = {
-        "setup_s": median(setups),
+        "setup_s": setup_s,
         "first_pass_s": first.wall,
-        "warm_pass_s": median([w.wall for w in warm]),
+        "warm_pass_s": warm_pass_s(warm),
         "op_p50_s": median(lat),
         "lines_per_s": wl.input_lines / first.wall,
     }
     e2e_units, layer_units = metric_units()
     summary = {
-        "workload": args.workload, "trace": args.trace, "host": host_info(cpus, heap, args.seed),
-        "inputs": inputs, "phase_s": phase_s, "setups_s": setups,
+        "workload": args.workload, "trace": args.trace, "host": host_info(cpus, heap, args.seed, java),
+        "inputs": inputs, "phase_s": phase_s,
         "warm_passes_s": [w.wall for w in warm],
+        "warm_passes_ops_s": [w.lat for w in warm],
         "op_tail": {"percentile": pct, "samples": len(lat), "beyond": beyond, "value_s": tail_s},
-        "peak_rss_mb": rss.peak_mb,
-        "first_pass_ops_s": first.lat, "failures": failures,
+        "peak_rss_mb": peak_rss, "host_load": load,
+        "first_pass_ops_s": first.lat,
+        "warm_pass_ops_s": {op: median([w.lat[op] for w in warm]) for op in first.lat},
+        "failures": failures,
         "end_to_end": e2e,
     }
     print(f"workload {args.workload}  seed {args.seed}  ops {len(lat)}  "
           f"warm passes {len(warm)}  host {summary['host']}")
     print(f"inputs: {json.dumps(inputs)}")
     for k, v in e2e.items():
-        print(f"{k:>14} {fmt(v):>12} {e2e_units[k]}")
+        print(f"{k:>14} {fmt(v):>12} {e2e_units.get(k, 's')}"
+              + ("" if k in e2e_units else " (not a bounded metric)"))
     print(f"{'failed_frac':>14} {fmt(len(failures) / len(lat)):>12} ratio "
           f"({len(failures)} of {len(lat)} operations)")
     print(f"{'op_tail_s':>14} {fmt(tail_s):>12} s (p{pct:.1f} of {len(lat)} first-pass samples, "
           f"{beyond} beyond it; not a bounded metric)")
-    print(f"{'peak_rss_mb':>14} {fmt(rss.peak_mb):>12} MB (JVM + Python workers; not a bounded metric)")
+    print(f"{'peak_rss_mb':>14} {fmt(peak_rss):>12} MB (summed VmHWM of the JVM and Python workers; not a bounded metric)")
+    print("host load over set-up and passes: "
+          + ", ".join(f"{k} {v:.2f}" for k, v in load.items()))
     for op, why in sorted(failures.items()):
         print(f"FAILED {op}: {why}")
 
     if traced:
         groups = sparkstats.read_event_log(os.path.join(events, app_id))
         layer, ledger = per_layer(wl, first, warm, setup_info, cpus, groups)
-        layer["memory.peak_rss_mb"] = rss.peak_mb
+        layer["memory.peak_rss_mb"] = peak_rss
         self_s = self_time_by_name(tr.spans)
-        untraced = os.path.join(results, f"{args.workload}-seed{args.seed}-trace0.json")
-        overhead = None
-        if os.path.exists(untraced):
-            with open(untraced) as f:
-                base = json.load(f)
-            if base["inputs"] == inputs:
-                overhead = first.wall - base["end_to_end"]["first_pass_s"]
+        base = untraced_first_pass(results, args.workload, inputs)
+        overhead = None if base is None else first.wall - base
         summary.update(per_layer=layer, self_time_s=self_s, tracing_overhead_s=overhead)
         for k, v in layer.items():
             print(f"{k:>24} {fmt(v):>12} {layer_units.get(k, 's')}")
         print("self time by span: " + ", ".join(f"{k} {fmt(v)} s" for k, v in self_s.items()))
-        print("tracing overhead (traced - untraced first_pass_s, same seed): "
+        print("tracing overhead (traced - untraced median first_pass_s, same inputs): "
               + (f"{overhead:+.3f} s" if overhead is not None else "n/a (no untraced run recorded)"))
         stem = os.path.join(results, f"{args.workload}-seed{args.seed}")
         with open(stem + "-ledger.json", "w") as f:

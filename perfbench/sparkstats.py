@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import threading
 from collections import defaultdict
 from dataclasses import dataclass, field
 
@@ -73,6 +72,24 @@ def plan_features(df) -> dict:
     }
 
 
+def host_load() -> dict[str, float]:
+    """Host-wide CPU counters since boot: ``steal_s``, CPU time the
+    hypervisor gave to other guests (summed over CPUs), and, where the
+    kernel reports pressure stall information, ``cpu_stall_s``, time in
+    which some runnable task waited for a CPU. Differences between two
+    readings tell how contended a measured window was."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    out = {"steal_s": int(fields[8]) / os.sysconf("SC_CLK_TCK")}
+    try:
+        with open("/proc/pressure/cpu") as f:
+            some = f.readline().split()
+        out["cpu_stall_s"] = int(some[-1].split("=")[1]) / 1e6
+    except (OSError, IndexError, ValueError):
+        pass
+    return out
+
+
 def descendants() -> list[int]:
     """Live descendant pids of this process."""
     parent: dict[int, int] = {}
@@ -96,39 +113,21 @@ def descendants() -> list[int]:
     return out
 
 
-class RssSampler:
-    """Samples the summed resident memory of this process's descendants
-    (the JVM and the Python workers it forks) and keeps the peak."""
-
-    def __init__(self, interval: float = 0.2) -> None:
-        self.interval = interval
-        self.peak_mb = 0.0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._loop, daemon=True)
-        self._page = os.sysconf("SC_PAGE_SIZE")
-
-    def __enter__(self) -> "RssSampler":
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join(timeout=5)
-        self.sample()
-
-    def _loop(self) -> None:
-        while not self._stop.wait(self.interval):
-            self.sample()
-
-    def sample(self) -> None:
-        total = 0
-        for pid in descendants():
-            try:
-                with open(f"/proc/{pid}/statm") as f:
-                    total += int(f.read().split()[1]) * self._page
-            except OSError:
-                continue
-        self.peak_mb = max(self.peak_mb, total / (1024 * 1024))
+def peak_rss_mb() -> float:
+    """Summed peak resident memory (``VmHWM``) of this process's live
+    descendants: the JVM and the Python workers it forks. The kernel
+    keeps each process's high-water mark, so one reading after the passes
+    covers the run without a sampling thread. Processes may peak at
+    different times, so the sum bounds the peak of the total from above;
+    a worker that has already exited is not counted."""
+    total_kb = 0
+    for pid in descendants():
+        try:
+            with open(f"/proc/{pid}/status") as f:
+                total_kb += next(int(line.split()[1]) for line in f if line.startswith("VmHWM:"))
+        except (OSError, StopIteration):
+            continue
+    return total_kb / 1024
 
 
 @dataclass
