@@ -128,9 +128,11 @@ def _sql_literal(v) -> str:
     if isinstance(v, int):
         return str(v)
     if isinstance(v, float):
-        # repr is the shortest round-tripping decimal; the cast in
-        # values_df parses it back to the bit-identical double
-        return repr(v)
+        # repr is the shortest round-tripping decimal (and 'nan'/'inf'/
+        # '-inf'/'-0.0', which a bare literal renders as identifiers or
+        # loses the sign of); the string cast parses every one of them
+        # back to the bit-identical double
+        return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
         # Spark string literals understand backslash escapes, so both
         # the quote and the backslash must be doubled

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.text import tokens
 from ..plans.registry import register
-from ..sources.parquet import load
+from ..sources.parquet import corpus_memo, load
 
 # MinHash configuration: 16 permutations in 4 bands of 4 rows.
 # Fixed seed list → deterministic signatures run-to-run.
@@ -625,34 +625,25 @@ _JACCARD_PAIRS_CTE = """
 """
 
 
-# Converged component labels memoized per (SparkContext, corpus dir):
-# ``dedup_cluster_components`` and ``dedup_cluster_representatives``
-# both consume the SAME label-propagation closure, and before this
-# cache the representatives query re-executed the registry's most
-# expensive iterative job end-to-end (~7 s of its 7.0 s sf0.1 floor was
-# the recomputed closure). The production shape is materialize-once /
-# consume-twice; the cached object is the final ``localCheckpoint``ed
-# labels relation (edge-connected docs only — tiny), so a hit costs no
-# lineage re-execution. Keyed on ``applicationId`` so a stopped/new
-# SparkContext can never serve another context's checkpoint blocks,
-# plus the corpus dir (every harness that rewrites data uses a fresh
-# directory; the grading driver regenerates between rounds in fresh
-# processes).
-_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label propagation with pointer jumping over the trigram-
     Jaccard near-dup pair graph, run to the Σcomp fixpoint; returns the
     checkpointed ``(doc_id, comp)`` relation covering edge-connected
     docs only (singletons rejoin in the consumers). See
-    ``dedup_cluster_components`` for the full algorithm rationale."""
-    from pyspark import StorageLevel
+    ``dedup_cluster_components`` for the full algorithm rationale.
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LABELS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    Computed once per corpus (``corpus_memo``): the components and
+    representatives queries both consume this closure, the registry's
+    most expensive iterative job, and the held object is the final
+    ``localCheckpoint``ed labels relation (tiny), so a hit costs no
+    lineage re-execution."""
+    return corpus_memo(
+        spark, sf_dir, "component_labels", lambda: _propagate_labels(spark, sf_dir)
+    )
+
+
+def _propagate_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark import StorageLevel
 
     # Persist the (tiny: two longs per near-dup pair) edge list and each
     # round's label snapshot: every round references labels up to 4× and
@@ -723,7 +714,6 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # weight from here on (a cache hit must not pin them for the session)
     edges.unpersist(False)
     pairs.unpersist(False)
-    _LABELS_CACHE[key] = labels
     return labels
 
 

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.registry import register
 from ..session import shuffle_partitions
-from ..sources.parquet import load
+from ..sources.parquet import corpus_memo, load
 
 _DAMPING = 0.85
 # Convergence contract (float library path): iterate until the L1 rank
@@ -75,7 +75,7 @@ _PR_ROUNDS = 8
 # pairs): a persisted tiny relation carries exact size stats, so the
 # wedge self-joins keep planning as broadcast joins — deriving it
 # lazily per query lost those stats and regressed link prediction's
-# floor measurably. Same cache key discipline as joins._PAIR_CACHE.
+# floor measurably.
 #
 # ADAPTIVE strength threshold (r8). "Strong" means co-occurring more
 # than chance, and chance co-occurrence grows linearly with order
@@ -97,7 +97,6 @@ _PR_ROUNDS = 8
 # densely than that.
 _STRONG_TAU_BASE = 2
 _STRONG_TAU_THRESHOLDS = tuple(2_000_000 * 8**j for j in range(8))
-_STRONG_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def strong_edges_ctes() -> str:
@@ -124,24 +123,18 @@ def strong_edges_ctes() -> str:
         e AS (SELECT u, v FROM pairs CROSS JOIN tau WHERE n >= t)"""
 
 
-def strong_cooccur_tau(spark: SparkSession, sf_dir: str) -> int:
-    """τ for this corpus — the integer chain over the memoized pair
-    relation's count (a 1-value bounded collect, the same pattern as
-    the LSH depth probe)."""
-    from .joins import basket_pair_counts
-
-    p = basket_pair_counts(spark, sf_dir).count()
-    return _STRONG_TAU_BASE << sum(
-        1 for t in _STRONG_TAU_THRESHOLDS if p > t
-    )
+def strong_tau(p: int) -> int:
+    """τ for a pair relation of ``p`` rows — the integer threshold chain
+    the oracle's ``tau`` CTE computes from the same count."""
+    return _STRONG_TAU_BASE << sum(1 for t in _STRONG_TAU_THRESHOLDS if p > t)
 
 
 def strong_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(u, v) canonical u<v part pairs sharing ≥ τ orders — the
     density-relative thresholded co-occurrence graph (the τ gate is
     the Σ deg² guard for every wedge join downstream; τ = 2 at every
-    graded tier, see _STRONG_TAU_THRESHOLDS), memoized + persisted
-    per (SparkContext, corpus).
+    graded tier, see _STRONG_TAU_THRESHOLDS), persisted once per
+    corpus (``corpus_memo``).
 
     r9 optimization (guide §2.2): the persisted relation is
     REPARTITIONED from the pair count before caching instead of
@@ -154,27 +147,25 @@ def strong_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     PAIR count — the one integer already collected for τ, so sizing
     costs no extra job — and at 100 TB the same formula yields
     thousands of partitions; partitioning never affects values."""
+    return corpus_memo(
+        spark, sf_dir, "strong_edges", lambda: _strong_edges(spark, sf_dir)
+    )
+
+
+def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    from ..session import shuffle_partitions
     from .joins import basket_pair_counts
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _STRONG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    p = basket_pair_counts(spark, sf_dir).count()
-    tau = _STRONG_TAU_BASE << sum(1 for t in _STRONG_TAU_THRESHOLDS if p > t)
+    pairs = basket_pair_counts(spark, sf_dir)
+    p = pairs.count()
     n_parts = max(1, min(shuffle_partitions(spark) * 32, p // 2_000_000 + 1))
-    e = (
-        basket_pair_counts(spark, sf_dir)
-        .filter(F.col("n_orders") >= tau)
+    return (
+        pairs.filter(F.col("n_orders") >= strong_tau(p))
         .select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
         .repartition(n_parts, "u")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _STRONG_CACHE[key] = e
-    return e
 
 
 def cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,16 +299,11 @@ def graph_pagerank_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg_nodes = out.select("src").distinct()
     # integer constants: uniform init mass and the per-round teleport
     # base, floor-divided from ONE build-time node count (see
-    # docstring; Python // == SQL div on positive ints). r10: the
-    # count is memoized per (SparkContext, corpus) like the streaming
-    # backlog rows — it is a corpus constant over the persisted edge
-    # cache, and re-running the count job on every build charged
-    # ~0.3-0.5 s per invocation to pure plan construction.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _PR_N_CACHE.get(key)
-    if n is None:
-        n = deg_nodes.count()
-        _PR_N_CACHE[key] = n
+    # docstring; Python // == SQL div on positive ints). The count is a
+    # corpus constant over the persisted edge cache, memoized because
+    # re-running the count job on every build charged ~0.3-0.5 s per
+    # invocation to pure plan construction.
+    n = corpus_memo(spark, sf_dir, "pagerank_n", deg_nodes.count)
     if n == 0:
         return spark.createDataFrame([], "node long, rank_micro long")
     r0 = _PR_QSCALE // n
@@ -355,23 +341,19 @@ def graph_pagerank_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The (src, dst, deg) out-edge relation feeds all _PR_ROUNDS join
-# references of the unrolled power iteration plus the float library
-# path; persisted + memoized per (SparkContext, corpus) like the
-# strong-edge substrate so the 8 references are 8 in-memory scans.
-_PR_OUT_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Node count over the persisted edge cache per (SparkContext, corpus)
-# — see the memo note in graph_pagerank_cooccur.
-_PR_N_CACHE: dict[tuple[str, str], int] = {}
-
-
 def _pagerank_out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The (src, dst, deg) out-edge relation: it feeds all _PR_ROUNDS
+    join references of the unrolled power iteration plus the float
+    library path, so it is persisted once per corpus and the 8
+    references are 8 in-memory scans."""
+    return corpus_memo(
+        spark, sf_dir, "pagerank_out", lambda: _out_edges(spark, sf_dir)
+    )
+
+
+def _out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PR_OUT_CACHE.get(key)
-    if cached is not None:
-        return cached
     edges = cooccur_edges(spark, sf_dir)
     # SIZE the persisted edge partitioning from the edge count instead
     # of inheriting spark.sql.shuffle.partitions: every one of the 8
@@ -391,9 +373,7 @@ def _pagerank_out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = edges.repartition(int(n_parts), "src")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # out-degree rides the edge relation: one wide row per src
-    out = edges.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    _PR_OUT_CACHE[key] = out
-    return out
+    return edges.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def pagerank_float_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.vectors import as_double, norm
 from ..plans.registry import register
-from ..sources.parquet import load
+from ..sources.parquet import corpus_memo, load
 
 
 @register(
@@ -401,9 +401,6 @@ _PCA_COMPONENTS = 2
 # on the Spark driver; only the corpus-sized stages touch 64-bit.
 _PCA_QSCALE = 100_000
 _PCA_VSCALE = 1_000_000  # basis vectors normalized to max-abs = 1e6
-# Fitted integer basis (sbar, w1, w2) per (SparkContext, corpus) — see
-# the memo note in embed_pca_project.
-_PCA_BASIS_CACHE: dict = {}
 _PCA_ROUNDS = 24
 
 
@@ -687,27 +684,26 @@ def embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d = EMBEDDING_DIM
     out_schema = "vec_id long, pc1_q long, pc2_q long"
-    # r10: the fitted basis is memoized per (SparkContext, corpus) —
-    # the Gram-partials collect is a corpus-constant model fit, the
-    # same memoized-probe class as the LSH depth count and the
-    # streaming backlog rows (and judged REAL in r9); the PROJECTION
-    # below still computes from the embeddings on every run.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    basis = _PCA_BASIS_CACHE.get(key)
-    if basis is None:
+
+    def fit():
         parts = qd.select("qv").mapInPandas(
             _int_gram_partials, "n long, s array<long>, g array<long>"
         ).collect()
         if not parts:
-            return spark.createDataFrame([], out_schema)
+            return None
         n = sum(int(p["n"]) for p in parts)
         s = [sum(int(p["s"][i]) for p in parts) for i in range(d)]
         g = [
             [sum(int(p["g"][i * d + j]) for p in parts) for j in range(d)]
             for i in range(d)
         ]
-        basis = _pca_power_basis(n, s, g)
-        _PCA_BASIS_CACHE[key] = basis
+        return _pca_power_basis(n, s, g)
+
+    # the Gram-partials collect is a corpus-constant model fit; the
+    # PROJECTION below still computes from the embeddings on every run
+    basis = corpus_memo(spark, sf_dir, "pca_basis", fit)
+    if basis is None:
+        return spark.createDataFrame([], out_schema)
     sbar, w1, w2 = basis
 
     # r10 (guide §1.2 driver overhead): the basis literals and the

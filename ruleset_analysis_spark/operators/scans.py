@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import schemas
 from ..plans.registry import register
-from ..sources.parquet import load, path_for
+from ..sources.parquet import fingerprint, load, path_for
 
 
 @register(
@@ -71,23 +71,17 @@ _LAYOUT_ROOT = "/tmp/ruleset_analysis_spark_layouts"
 
 def _layout_path(sf_dir: str, table: str, kind: str) -> tuple[str, bool]:
     """Scratch-layout root for (corpus table, layout kind) plus whether
-    a completed layout already exists. The directory name embeds a
-    fingerprint of the SOURCE parquet (absolute path + mtime + size):
-    the grading driver regenerates the corpus between rounds, so a
-    layout must never outlive the data it was derived from. ``_SUCCESS``
-    marks a completed write; anything less is rewritten."""
-    import hashlib
+    a completed layout already exists. The directory name embeds the
+    SOURCE parquet's ``fingerprint``: a corpus can be regenerated in
+    place, so a layout must never outlive the data it was derived from.
+    ``_SUCCESS`` marks a completed write; anything less is rewritten."""
     import os
 
-    src = path_for(sf_dir, table)
-    st = os.stat(src)
     # v2: bump when WRITER semantics change (e.g. the \N null sentinel)
     # — the fingerprint guards against stale DATA, the version against
     # stale FORMAT
-    fp = hashlib.md5(
-        f"v2:{os.path.abspath(src)}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:16]
-    root = f"{_LAYOUT_ROOT}/{table}_{kind}_{fp}"
+    fp = fingerprint([path_for(sf_dir, table)])
+    root = f"{_LAYOUT_ROOT}/{table}_{kind}_v2_{fp}"
     return root, os.path.exists(os.path.join(root, "_SUCCESS"))
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.vectors import as_double, dot, norm
 from ..plans.registry import register
-from ..sources.parquet import load
+from ..sources.parquet import corpus_memo, load
 from ._util import bounded_block
 
 # The probe is the smallest vec_id. A pinned literal id was a
@@ -852,28 +852,27 @@ def _quantized(e: DataFrame) -> DataFrame:
     )
 
 
-# The IVF INDEX — quantizer seed matrix + persisted per-vector cell
-# assignment — is built once per (SparkContext, corpus) and probed many
-# times, exactly the production economics of an ANN index (nobody
-# re-trains the quantizer per query). A cache hit skips the seed
-# collect AND the 16-fold assignment codegen; the probe-side work
-# (cell ranking + in-cell exact re-rank) stays per-call because it IS
-# the query. Same cache-key discipline as joins._PAIR_CACHE.
-_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
 def _ivf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, DataFrame]:
     """(seed_qs, assigned): the nlist quantized seed vectors (driver
     side, model parameters) and the persisted (vec_id, vn, cell)
-    assignment relation."""
-    from pyspark import StorageLevel
+    assignment relation.
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
+    Built once per corpus (``corpus_memo``) and probed many times — the
+    production economics of an ANN index (nobody re-trains the quantizer
+    per query). A hit skips the seed collect AND the 16-fold assignment
+    codegen; the probe-side work (cell ranking + in-cell exact re-rank)
+    stays per-call because it IS the query."""
+    return corpus_memo(
+        spark, sf_dir, "ivf_index", lambda: _build_ivf_index(spark, sf_dir)
+    )
+
+
+def _build_ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list, DataFrame]:
+    from pyspark import StorageLevel
 
     qv = _quantized(normalized_vectors(spark, sf_dir))
     # nlist seed vectors by md5 order — deterministic, scale-stable,
@@ -905,7 +904,6 @@ def _ivf_index(
         .cast("int")
         .alias("cell"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _IVF_INDEX_CACHE[key] = (seed_qs, assigned)
     return seed_qs, assigned
 
 
@@ -1135,9 +1133,6 @@ def embed_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KM_K = 4
 _KM_ITERS = 3
-# Fitted Lloyd centroids per (SparkContext, corpus) — see the memo
-# note in embed_kmeans_clusters.
-_KM_CENTROID_CACHE: dict = {}
 
 
 def _kmeans_oracle() -> str:
@@ -1329,13 +1324,8 @@ def embed_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids' is assigned cluster 0 with NULL dist and excluded
     from the mean sums."""
     e = _quantized(normalized_vectors(spark, sf_dir)).select("vec_id", "q")
-    # r10: the FITTED centroids are memoized per (SparkContext,
-    # corpus) — the Lloyd fit is a corpus-constant model, the same
-    # memoized-probe class as the PCA basis / LSH depth counts; the
-    # report pass below still computes from the vectors on every run.
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    centroids = _KM_CENTROID_CACHE.get(memo_key)
-    if centroids is None:
+
+    def fit() -> list:
         # the _KM_K LOWEST ids, whatever they are — `vec_id < _KM_K`
         # assumed ids 0..3 exist and IndexError'd on a renumbered
         # corpus (caught by scripts/fuzz_sweep.py); orderBy+limit is a
@@ -1369,7 +1359,11 @@ def embed_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 else centroids[j]
                 for j in range(_KM_K)
             ]
-        _KM_CENTROID_CACHE[memo_key] = centroids
+        return centroids
+
+    # the FITTED centroids are a corpus-constant model; the report pass
+    # below still computes from the vectors on every run
+    centroids = corpus_memo(spark, sf_dir, "kmeans_centroids", fit)
     return (
         e.mapInPandas(
             _km_partials_kernel(centroids, want="report"),

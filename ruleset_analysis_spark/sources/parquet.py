@@ -14,6 +14,10 @@ columns appear here. No ``collect`` happens in any loader.
 
 from __future__ import annotations
 
+import hashlib
+import os
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -68,20 +72,57 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-# Memoized lazy plans, keyed per (SparkContext, corpus dir, table).
-# ``spark.read.parquet`` re-infers the footer schema and rebuilds the
-# file index on EVERY call (~0.1-0.25 s of driver-side work measured
-# on the bench host), and the suite issues ~800 loads per bench run —
-# returning the same immutable DataFrame object removes that repeated
-# planning cost without caching any *data*: the object is a lazy plan,
-# every action on it still computes from the parquet inputs (guide
-# §1.2 step 2: per-task — here per-query — fixed work). Plan identity
-# is also exactly what the CacheManager keys on, so substrate
-# persist()s and the bench's hot-table protocol behave as before.
-# The graded corpora are immutable; a caller that rewrites a table
-# in-place mid-session (no graded path does) would see the stale file
-# listing Spark's own FileStatusCache could also have served.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+def fingerprint(paths) -> str:
+    """Short hash of the files' absolute paths, ``st_mtime_ns`` and
+    ``st_size``: equal fingerprints mean the same bytes for every
+    purpose this engine has (memos, on-disk scratch layouts)."""
+    h = hashlib.md5()
+    for p in paths:
+        st = os.stat(p)
+        h.update(f"{os.path.abspath(p)}:{st.st_mtime_ns}:{st.st_size};".encode())
+    return h.hexdigest()[:16]
+
+
+# corpus root -> (applicationId, fingerprint, {name: value})
+_MEMO: dict[str, tuple[str, str, dict]] = {}
+_MEMO_LOCK = threading.Lock()
+
+
+def corpus_memo(spark: SparkSession, corpus_dir: str, name: str, build):
+    """``build()``'s result for this corpus, computed once and then
+    returned as the same object — the one mechanism for corpus-scoped
+    reuse: lazy table plans, fitted models (PCA basis, k-means
+    centroids, IVF quantizer), probe counts and persisted substrates.
+
+    Invariant: a value is keyed by the SparkContext (``applicationId``)
+    and the fingerprint of the corpus directory's top-level files, so a
+    stopped/new context never sees another context's cached blocks, and
+    a corpus rewritten in place gets fresh answers. On a fingerprint
+    change the corpus's entries are dropped and
+    ``spark.catalog.refreshByPath`` refreshes every cached plan over
+    the directory — a rebuilt substrate has the same logical plan over
+    the same path, so the CacheManager would otherwise serve the old
+    blocks. While the fingerprint holds, the SAME object comes back,
+    which is what lets equal persisted plans unify in the CacheManager.
+    A ``build`` that raises stores nothing (the next call re-builds)."""
+    root = os.path.abspath(corpus_dir)
+    try:
+        files = sorted(e.path for e in os.scandir(root))
+    except OSError:  # absent or not a directory yet: nothing to hash
+        files = []
+    key = (spark.sparkContext.applicationId, fingerprint(files))
+    with _MEMO_LOCK:
+        held = _MEMO.get(root)
+        if held is None or held[:2] != key:
+            if held is not None and held[0] == key[0]:
+                spark.catalog.refreshByPath(root)
+            held = _MEMO[root] = (*key, {})
+    entries = held[2]
+    if name not in entries:
+        # built outside the lock (builds nest: a substrate loads its
+        # tables); racing builders keep whichever value landed first
+        entries.setdefault(name, build())
+    return entries[name]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -91,19 +132,21 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     parquet encoding — see ``normalize_event_ts``. DuckDB (the oracle)
     reads the same file natively, so both engines agree to the
     microsecond at every encoding the driver has shipped.
+
+    The lazy plan is memoized (``corpus_memo``): ``spark.read.parquet``
+    re-infers the footer schema and rebuilds the file index on every
+    call (~0.1-0.25 s of driver work), and returning the same object is
+    what the CacheManager keys substrate persists and hot tables on.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), name)
-    got = _PLAN_CACHE.get(key)
-    if got is not None:
-        return got
-    ensure_session_defaults(spark)
-    df = spark.read.parquet(path_for(sf_dir, name))
-    if name == "events":
-        df = normalize_event_ts(df)
-    _PLAN_CACHE[key] = df
-    return df
+
+    def build() -> DataFrame:
+        ensure_session_defaults(spark)
+        df = spark.read.parquet(path_for(sf_dir, name))
+        return normalize_event_ts(df) if name == "events" else df
+
+    return corpus_memo(spark, sf_dir, f"table:{name}", build)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

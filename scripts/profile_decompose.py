@@ -53,7 +53,6 @@ def main() -> int:
         "multimodal_binary_features",
         "doc_chunk_fixed_tokens",
         "dedup_cluster_components",
-        "embed_pca_project",
         "sim_ann_lsh",
         "graph_degree_distribution",
         "sim_ann_ivf",

@@ -1,0 +1,100 @@
+"""Corpus-scoped reuse has one mechanism: ``sources.parquet.corpus_memo``.
+
+Its contract — the same object while the corpus's files are unchanged,
+a fresh build after they change, nothing stored when a build raises —
+is pinned here on a scratch directory; the end-to-end rewrite check
+against the oracle lives in tests/test_fuzz_corpus.py.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+import threading
+import time
+
+import pytest
+
+from ruleset_analysis_spark.sources.parquet import corpus_memo
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "ruleset_analysis_spark",
+)
+
+
+def test_only_the_memo_and_session_read_the_application_id():
+    """A module keying its own reuse on ``applicationId`` is a second
+    memo mechanism, with its own staleness rules; route it through
+    ``corpus_memo`` instead."""
+    allowed = {"session.py", os.path.join("sources", "parquet.py")}
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for f in files:
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, PKG)
+            if f.endswith(".py") and rel not in allowed:
+                if "applicationId" in open(path, encoding="utf-8").read():
+                    offenders.append(rel)
+    assert not offenders, offenders
+
+
+def test_memo_holds_until_the_files_change(spark, tmp_path):
+    d = tmp_path / "corpus"
+    d.mkdir()
+    f = d / "t.parquet"
+    f.write_bytes(b"one")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    first = corpus_memo(spark, str(d), "x", build)
+    assert corpus_memo(spark, str(d) + "/", "x", build) is first
+    assert len(calls) == 1
+    f.write_bytes(b"two!")  # rewritten in place: size and mtime move
+    second = corpus_memo(spark, str(d), "x", build)
+    assert second is not first and len(calls) == 2
+    assert corpus_memo(spark, str(d), "x", build) is second
+
+
+def test_failed_build_stores_nothing(spark, tmp_path):
+    d = str(tmp_path / "absent")
+
+    def boom():
+        raise FileNotFoundError(d)
+
+    with pytest.raises(FileNotFoundError):
+        corpus_memo(spark, d, "probe", boom)
+    assert corpus_memo(spark, d, "probe", lambda: "built") == "built"
+
+
+def test_concurrent_lookups_share_one_object(spark, tmp_path):
+    """Harnesses load tables from a thread pool: racing builders of one
+    name must all come back with the single stored object."""
+    d = str(tmp_path)
+    got = []
+
+    def build():
+        time.sleep(0.01)
+        return object()
+
+    def worker():
+        for i in range(20):
+            got.append((i, corpus_memo(spark, d, f"n{i}", build)))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    assert len(got) == 16 * 20
+    for i in range(20):
+        assert len({id(v) for j, v in got if j == i}) == 1

@@ -81,6 +81,18 @@ def fuzz_con(fuzz_dir):
     con.close()
 
 
+# One query per corpus-scoped reuse mechanism: driver-constant memos
+# (fitted k-means centroids, PCA basis), a persisted memo substrate
+# (basket pairs -> strong edges) and a plain persisted relation that
+# the CacheManager matches by plan (the dedup shingles).
+REWRITE_QUERIES = [
+    "embed_kmeans_clusters",
+    "embed_pca_project",
+    "graph_triangle_count",
+    "dedup_ngram_jaccard",
+]
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_match_on_fuzz_corpus(spark, fuzz_dir, fuzz_con, name):
     spec = all_specs()[name]
@@ -120,3 +132,32 @@ def test_fuzz_corpus_has_teeth(fuzz_con):
         "SELECT count(*) - count(DISTINCT text) FROM documents"
     ).fetchone()[0]
     assert n_dup > 5, "no exact-duplicate docs in fuzz corpus"
+
+
+def test_corpus_rewritten_in_place_gets_fresh_answers(spark, tmp_path):
+    """A corpus regenerated in place within one session must not be
+    served the previous corpus's memos or cached blocks: after the
+    rewrite every query matches the oracle over the NEW files (and the
+    oracle answers differ, so matching the old corpus cannot pass)."""
+    fuzz = _load_fuzz_module()
+    out = str(tmp_path / "corpus")
+    specs = all_specs()
+    answers = []
+    for seed in (_SEED, _SEED + 1):
+        fuzz.generate(seed, out)
+        con = duck_connect(out)
+        try:
+            for name in REWRITE_QUERIES:
+                spec = specs[name]
+                res = compare(name, spec.builder(spark, out), con, spec.oracle)
+                assert res.ok, f"seed {seed}: {res}"
+            answers.append(
+                [
+                    sorted(map(repr, con.sql(specs[n].oracle).fetchall()))
+                    for n in REWRITE_QUERIES
+                ]
+            )
+        finally:
+            con.close()
+    for name, before, after in zip(REWRITE_QUERIES, *answers):
+        assert before != after, f"{name}: both seeds give one answer"

@@ -10,6 +10,8 @@ an outage at 100 TB."""
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -596,15 +598,27 @@ def test_values_df_matches_create_dataframe(spark):
     from ruleset_analysis_spark.operators._util import values_df
 
     rows = [
-        (1, "plain", True, None),
-        (2, None, False, 12345678901234),
-        (3, "quo'te and back\\slash", None, -7),
+        (1, "plain", True, None, float("nan")),
+        (2, None, False, 12345678901234, float("inf")),
+        (3, "quo'te and back\\slash", None, -7, float("-inf")),
+        (4, "zero", True, 0, -0.0),
+        (5, "tiny", False, 1, 5e-324),
+        (6, None, None, None, None),
     ]
-    ddl = "a int, b string, ok boolean, big long"
+    ddl = "a int, b string, ok boolean, big long, x double"
     ref = spark.createDataFrame(rows, ddl)
     got = values_df(spark, rows, ddl)
     assert got.schema == ref.schema
-    assert got.collect() == ref.collect()
+
+    def bits(row):
+        # NaN != NaN and -0.0 == 0.0: compare doubles by their bytes
+        return tuple(
+            struct.pack("<d", v) if isinstance(v, float) else v for v in row
+        )
+
+    got_rows = [bits(r) for r in got.collect()]
+    assert got_rows == [bits(r) for r in ref.collect()]
+    assert got_rows == [bits(r) for r in rows]
     opt = got._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in opt and "ExistingRDD" not in opt
 

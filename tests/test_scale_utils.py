@@ -169,7 +169,7 @@ def test_floor_long_null_degrade_matches_duckdb_try_cast(spark):
 
 def test_strong_tau_chain_identical_cross_engine():
     """The adaptive strong-edge threshold (graph.py) is computed twice
-    — Python integer arithmetic on the Spark side, a CASE-sum shift in
+    — ``strong_tau`` on the Spark side, a CASE-sum shift in
     every graph oracle's tau CTE — and the two MUST agree at every
     pair count or the differential gate would diverge exactly at
     scale. Sweep each threshold boundary (t-1, t, t+1), the graded-
@@ -178,9 +178,9 @@ def test_strong_tau_chain_identical_cross_engine():
     import duckdb
 
     from ruleset_analysis_spark.operators.graph import (
-        _STRONG_TAU_BASE,
         _STRONG_TAU_THRESHOLDS,
         strong_edges_ctes,
+        strong_tau,
     )
 
     frag = strong_edges_ctes()
@@ -192,9 +192,7 @@ def test_strong_tau_chain_identical_cross_engine():
         counts += [t - 1, t, t + 1]
     counts.append(_STRONG_TAU_THRESHOLDS[-1] * 100)  # saturation
     for p in counts:
-        py_tau = _STRONG_TAU_BASE << sum(
-            1 for t in _STRONG_TAU_THRESHOLDS if p > t
-        )
+        py_tau = strong_tau(p)
         tau_cte = frag.split("tau AS (")[1].split("),")[0]
         sql = "SELECT " + tau_cte.split("SELECT", 1)[1].replace(
             probe, f"FROM (SELECT CAST({p} AS BIGINT) AS p) pc"
@@ -202,8 +200,7 @@ def test_strong_tau_chain_identical_cross_engine():
         (sql_tau,) = con.execute(sql).fetchone()
         assert sql_tau == py_tau, f"chain divergence at P={p}"
     # the graded tiers must sit on the historical tau = 2
-    assert _STRONG_TAU_BASE << 0 == 2
-    assert 1_196_000 < _STRONG_TAU_THRESHOLDS[0], "sf0.1 must stay tau=2"
+    assert strong_tau(1_196_000) == 2, "sf0.1 must stay tau=2"
 
 
 def test_scale_story_index_partitions_registry():
