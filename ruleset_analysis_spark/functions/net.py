@@ -39,27 +39,38 @@ def ipv4_to_long(ip: Column | str) -> Column:
     return F.when(ip.rlike(_IPV4_RE) & octets_valid, value)
 
 
-def ip_in_cidr(ip: Column | str, cidr: Column | str) -> Column:
-    """True iff dotted-quad ``ip`` is inside ``cidr`` ('a.b.c.d/p').
+def cidr_bounds(cidr: Column | str) -> tuple[Column, Column]:
+    """First and last numeric address ``(lo, hi)`` of ``cidr``
+    ('a.b.c.d/p'); both NULL when the CIDR is malformed.
 
-    Pure expression algebra: both sides reduce to
-    ``(addr & mask) == (net & mask)`` over longs — safe inside join
-    conditions and pushdown-friendly."""
+    Host bits set in the network part are masked off ('10.0.1.5/24'
+    spans 10.0.1.0..10.0.1.255), the firewall's own reading. Computing
+    the bounds once per rule lets a join test containment as two bare
+    long comparisons per (flow, rule) pair instead of re-parsing both
+    strings for every pair."""
     cidr = F.col(cidr) if isinstance(cidr, str) else cidr
     parts = F.split(cidr, "/")
     # try_element_at: a CIDR missing its '/prefix' yields NULL (⇒ no
     # match) instead of an ANSI INVALID_ARRAY_INDEX abort
     net = ipv4_to_long(F.try_element_at(parts, F.lit(1)))
-    # A prefix outside 0..32 (e.g. '10.0.0.0/40') would compute
-    # mask = 2^32 - 0 and then (addr & mask) == (net & mask) collapses
-    # to 0 == 0 — the malformed CIDR would match EVERY address. Gate it
-    # to NULL instead, honouring the malformed-input contract.
+    # A prefix outside 0..32 would make the block size 0 ('/40': an
+    # ANSI divide-by-zero abort below) or larger than the address space
+    # ('/-1': a range past 2^32); gate it to NULL instead, honouring the
+    # malformed-input contract.
     raw_prefix = F.try_element_at(parts, F.lit(2)).try_cast("int")
     prefix = F.when(raw_prefix.between(0, 32), raw_prefix)
-    # mask = high `prefix` bits set = 2^32 - 2^(32-prefix); shiftleft
-    # needs a literal shift amount, but pow is exact in double up to 2^32
-    mask = (
-        F.lit(4294967296) - F.pow(F.lit(2.0), (F.lit(32) - prefix)).cast("long")
-    ).cast("long")
-    addr = ipv4_to_long(ip)
-    return addr.bitwiseAND(mask) == net.bitwiseAND(mask)
+    # block size 2^(32-prefix): shiftleft needs a literal shift amount,
+    # but pow is exact in double up to 2^32
+    size = F.pow(F.lit(2.0), F.lit(32) - prefix).cast("long")
+    lo = net - net % size
+    return lo, lo + size - 1
+
+
+def ip_in_cidr(ip: Column | str, cidr: Column | str) -> Column:
+    """True iff dotted-quad ``ip`` is inside ``cidr`` ('a.b.c.d/p');
+    NULL (⇒ false in a join predicate) when either side is malformed.
+
+    Pure expression algebra, safe inside join conditions. Where one
+    side is a dimension, project :func:`cidr_bounds` on it once before
+    the join rather than calling this per pair."""
+    return ipv4_to_long(ip).between(*cidr_bounds(cidr))

@@ -38,6 +38,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..operators._util import values_df
+
 RULE_SCHEMA = T.StructType(
     [
         T.StructField("acl", T.StringType()),
@@ -236,7 +238,36 @@ def parse_asa_config(text: str) -> list[dict]:
     return rows
 
 
+def _local_relation(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    # VALUES needs at least one row: an empty expansion (a config with
+    # no access-list statement) keeps createDataFrame
+    if not rows:
+        return spark.createDataFrame([], schema)
+    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
+    return values_df(spark, rows, ddl)
+
+
+def rules_relation(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """The ``RULE_SCHEMA`` dimension of already-parsed rows (see
+    :func:`rules_dataframe`)."""
+    names = RULE_SCHEMA.fieldNames()
+    return _local_relation(spark, [tuple(r[n] for n in names) for r in rows], RULE_SCHEMA)
+
+
+def rule_identities(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """One ``(acl, rule_id, action)`` row per access-list statement of
+    already-parsed rows — deduplicated on the driver, so a report that
+    must list every statement needs no ``distinct`` shuffle."""
+    names = ("acl", "rule_id", "action")
+    idents = sorted({tuple(r[n] for n in names) for r in rows})
+    return _local_relation(spark, idents, T.StructType([RULE_SCHEMA[n] for n in names]))
+
+
 def rules_dataframe(spark: SparkSession, config_text: str) -> DataFrame:
     """Parsed+expanded ruleset as a declared-schema DataFrame — the
-    broadcast dimension for hit-count joins."""
-    return spark.createDataFrame(parse_asa_config(config_text), RULE_SCHEMA)
+    broadcast dimension for hit-count joins.
+
+    A ``LocalRelation`` (``values_df``): the rows live in the plan, so
+    Catalyst knows its size and folds projections over it at planning
+    time, and scanning it runs no Python workers."""
+    return rules_relation(spark, parse_asa_config(config_text))

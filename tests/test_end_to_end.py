@@ -152,19 +152,44 @@ def test_run_ruleset_analysis_tolerates_dirty_lines(spark, tmp_path):
     assert rows[("OUTSIDE_IN", 1)]["hits"] == 3  # only the clean line counts
 
 
-def test_pipeline_cli_main(spark, archive, tmp_path):
+def test_run_ruleset_analysis_config_without_rules(spark, archive):
+    """A config with object-groups but no access-list statement expands
+    to no rules: the report is empty, with the declared columns, and
+    building it must not raise (the literal-relation form cannot hold
+    zero rows, so this pins its fallback)."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    groups_only = "\n".join(
+        ln for ln in CONFIG.splitlines() if not ln.startswith("access-list")
+    )
+    assert asa_config.parse_asa_config(groups_only) == []
+    report = run_ruleset_analysis(spark, archive, groups_only)
+    assert report.collect() == []
+    assert report.schema == run_ruleset_analysis(spark, archive, CONFIG).schema
+    assert report.columns == [
+        "acl", "rule_id", "action", "hits", "n_flows", "n_sources", "status"
+    ]
+
+
+def test_pipeline_cli_main(spark, archive, tmp_path, capsys):
     """The CLI entrypoint (run_analysis.sh analog): args in, partitioned
-    parquet out, per-status summary printed. Reuses the test session
-    via getOrCreate."""
+    parquet out, per-status summary printed — and the summary agrees
+    with the rows written. Reuses the test session via getOrCreate."""
     from ruleset_analysis_spark.pipeline import main
 
     cfg = tmp_path / "asa.cfg"
     cfg.write_text(CONFIG)
     out = str(tmp_path / "report_out")
     assert main([archive, str(cfg), out]) == 0
-    back = spark.read.parquet(out)
-    assert back.count() == 4  # 3 OUTSIDE_IN stmts + RETIRED
-    assert {r["status"] for r in back.collect()} == {"ACTIVE", "UNUSED"}
+    back = spark.read.parquet(out).collect()
+    assert len(back) == 4  # 3 OUTSIDE_IN stmts + RETIRED
+    assert {r["status"] for r in back} == {"ACTIVE", "UNUSED"}
+    want = [
+        f"{status:>7}: {sum(r['status'] == status for r in back)} rules, "
+        f"{sum(r['hits'] for r in back if r['status'] == status)} hits"
+        for status in sorted({r["status"] for r in back})
+    ]
+    assert capsys.readouterr().out.splitlines() == want
 
 
 def test_curation_pipeline_composes(spark):

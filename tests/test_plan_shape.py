@@ -646,3 +646,67 @@ def test_constant_dims_are_local_relations(spark, name):
     if name == "agg_countmin_sketch":
         assert "BroadcastNestedLoopJoin" not in plan
         assert "Range (" not in plan
+
+
+def test_ruleset_report_plan_is_lean_and_jvm_only(spark, tmp_path):
+    """run_ruleset_analysis, the paper's job, on a small .gz day:
+
+    * no pickled-RDD relation anywhere (the rule dimension and the rule
+      identities are LocalRelations, no Python workers);
+    * the per-line part of the plan (everything under the flow
+      aggregate) carries no address parse: a nullable flow address
+      makes Catalyst infer ``isnotnull(addr)`` from the join predicate
+      and push it through the aggregate to the line scan, re-running
+      ``rlike``/``split`` on every raw line;
+    * at most 5 exchanges, broadcasts included (no ``distinct`` over
+      the rules, no ``countDistinct`` expansion)."""
+    import gzip
+    import re
+
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    lines = [
+        f"%ASA-6-106100: access-list OUTSIDE_IN permitted tcp "
+        f"outside/203.0.113.{i % 250 + 1}({40000 + i}) -> dmz/10.0.1.5(443) "
+        f"hit-cnt 1 300-second interval [0x{i:x}, 0x0]"
+        for i in range(20)
+    ]
+    with gzip.open(tmp_path / "fw.log.gz", "wt") as f:
+        f.write("\n".join(lines) + "\n")
+    config = """
+object-group network SRV
+ network-object host 10.0.1.5
+ network-object 10.0.2.0 255.255.255.0
+access-list OUTSIDE_IN extended permit tcp any object-group SRV eq https
+access-list OUTSIDE_IN extended deny ip any any
+"""
+    qe = run_ruleset_analysis(spark, str(tmp_path), config)._jdf.queryExecution()
+    optimized = qe.optimizedPlan().toString()
+    physical = qe.executedPlan().toString()
+    # LogicalRDD in the optimized plan, Scan ExistingRDD once planned
+    assert "LogicalRDD" not in optimized and "ExistingRDD" not in physical
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    plan = optimized.splitlines()
+    flow_agg = re.compile(
+        r"Aggregate \[acl#\d+, protocol#\d+, src_ip#\d+, dst_ip#\d+, dst_port#\d+\]"
+    )
+    top = next(i for i, ln in enumerate(plan) if flow_agg.search(ln))
+    per_line = []
+    for ln in plan[top + 1:]:
+        if depth(ln) <= depth(plan[top]):
+            break
+        per_line.append(ln)
+    assert any("Relation [" in ln for ln in per_line), optimized
+    for ln in per_line:
+        assert "RLIKE" not in ln and "split(" not in ln, (
+            f"address parse runs per log line: {ln.strip()}"
+        )
+
+    exchanges = [
+        ln.strip() for ln in physical.splitlines()
+        if re.match(r"\w*Exchange\b", ln.lstrip(" :+-*()0123456789"))
+    ]
+    assert len(exchanges) <= 5, "\n".join(exchanges)

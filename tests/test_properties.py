@@ -1493,3 +1493,105 @@ def test_zscore_kernel_bit_identical_to_pandas_form():
         a, b = _zscore(g), reference(g)
         assert norm(a["event_id"]) == norm(b["event_id"])
         assert norm(a["zscore"]) == norm(b["zscore"]), g
+
+
+# --- CIDR containment: ip_in_cidr / cidr_bounds --------------------------
+
+_U32 = 2**32 - 1
+
+
+def _dotted(n: int) -> str:
+    return ".".join(str(n >> s & 255) for s in (24, 16, 8, 0))
+
+
+@st.composite
+def _cidr_cases(draw):
+    """(ip, cidr) with host bits possibly set in the network part; the
+    address is anywhere, inside the block, or just outside either end."""
+    net, prefix = draw(st.integers(0, _U32)), draw(st.integers(0, 32))
+    size = 1 << (32 - prefix)
+    lo = net - net % size
+    near = [draw(st.integers(0, _U32)), draw(st.integers(lo, lo + size - 1)), lo - 1, lo + size]
+    addr = draw(st.sampled_from([a for a in near if 0 <= a <= _U32]))
+    return _dotted(addr), f"{_dotted(net)}/{prefix}"
+
+
+@given(cases=st.lists(_cidr_cases(), min_size=1, max_size=40))
+@_SPARK_SETTINGS
+def test_ip_in_cidr_agrees_with_ipaddress(spark, cases):
+    """For valid addresses and prefixes 0-32, containment and the block
+    bounds agree with Python's ``ipaddress``."""
+    import ipaddress
+
+    from ruleset_analysis_spark.functions.net import cidr_bounds, ip_in_cidr
+
+    lo, hi = cidr_bounds("cidr")
+    rows = (
+        spark.createDataFrame(cases, "ip string, cidr string")
+        .select("ip", "cidr", ip_in_cidr("ip", "cidr").alias("m"),
+                lo.alias("lo"), hi.alias("hi"))
+        .collect()
+    )
+    assert len(rows) == len(cases)
+    for r in rows:
+        net = ipaddress.ip_network(r["cidr"], strict=False)
+        assert r["m"] is (ipaddress.ip_address(r["ip"]) in net), r
+        assert (r["lo"], r["hi"]) == (
+            int(net.network_address), int(net.broadcast_address)
+        ), r
+
+
+def _engine_ipv4(s: str) -> bool:
+    """The engine's address grammar: four 1-3 digit octets, each <= 255."""
+    import re
+
+    m = re.fullmatch(r"(\d{1,3})\.(\d{1,3})\.(\d{1,3})\.(\d{1,3})", s)
+    return bool(m) and all(int(o) <= 255 for o in m.groups())
+
+
+_bad_ip = st.one_of(
+    st.text(alphabet="0123456789.", max_size=16),
+    st.text(alphabet="0123456789.- x", max_size=16),
+    st.tuples(*[st.integers(0, 999)] * 4).map(lambda t: ".".join(map(str, t))),
+    st.lists(st.integers(0, 255), max_size=6)
+    .filter(lambda o: len(o) != 4)
+    .map(lambda o: ".".join(map(str, o))),
+).filter(lambda s: not _engine_ipv4(s))
+_bad_prefix = st.one_of(
+    st.integers(33, 10_000).map(str),
+    st.integers(-10_000, -1).map(str),
+    st.sampled_from(["", "x", "8x", "0x10", "--1"]),
+)
+_bad_cidr = st.one_of(
+    st.tuples(_bad_ip, st.integers(0, 32)).map(lambda t: f"{t[0]}/{t[1]}"),
+    st.tuples(_ip, _bad_prefix).map(lambda t: f"{t[0]}/{t[1]}"),
+    _ip,  # no '/prefix' at all
+)
+
+
+@given(
+    bad_ips=st.lists(st.tuples(_bad_ip, _cidr_cases().map(lambda c: c[1])), max_size=25),
+    bad_cidrs=st.lists(st.tuples(_ip, _bad_cidr), max_size=25),
+)
+@_SPARK_SETTINGS
+def test_ip_in_cidr_malformed_never_matches(spark, bad_ips, bad_cidrs):
+    """A malformed address never matches any CIDR, and a malformed CIDR
+    matches no address and has NULL bounds — never an abort, never a
+    match-all."""
+    from ruleset_analysis_spark.functions.net import cidr_bounds, ip_in_cidr
+
+    lo, hi = cidr_bounds("cidr")
+    rows = (
+        spark.createDataFrame(
+            [(ip, c, False) for ip, c in bad_ips] + [(ip, c, True) for ip, c in bad_cidrs],
+            "ip string, cidr string, bad_cidr boolean",
+        )
+        .select("ip", "cidr", "bad_cidr", ip_in_cidr("ip", "cidr").alias("m"),
+                lo.alias("lo"), hi.alias("hi"))
+        .collect()
+    )
+    assert len(rows) == len(bad_ips) + len(bad_cidrs)
+    for r in rows:
+        assert r["m"] is not True, r
+        if r["bad_cidr"]:
+            assert r["lo"] is None and r["hi"] is None, r
