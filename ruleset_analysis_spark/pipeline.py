@@ -24,8 +24,16 @@ lazy DataFrame composition:
   per-(flow, rule) predicate is bare long comparisons, not a string
   parse per pair;
 * the flow addresses are non-nullable (``-1`` for a malformed address,
-  which no range contains), so Catalyst infers no ``isnotnull`` filter
-  on them and the address parse never runs per log line;
+  which no range contains) and the port range is tested on
+  ``coalesce(dst_port, -1)`` (``dst_port`` itself stays in the flow
+  key and the output), so Catalyst infers no ``isnotnull`` filter on
+  them and neither the address parse nor the line regex re-runs per
+  log line;
+* the join condition, aggregates and projections are SQL text
+  (``F.expr``/``selectExpr``, with the CIDR and address expressions
+  rendered by ``functions.net``'s ``*_sql`` helpers): a Column-API
+  tree costs many py4j round trips per node in classic mode, SQL text
+  a few per call, so the per-day plan build stays cheap;
 * the rule dimension and the rule identities are literal relations
   built from one driver-side config parse: no Python workers, no
   ``distinct`` shuffle.
@@ -47,7 +55,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.net import cidr_bounds, ipv4_to_long
+from .functions.net import cidr_bounds_sql, ipv4_to_long_sql
 from .sources.asa_config import parse_asa_config, rule_identities, rules_relation
 from .sources.text_logs import parse_asa_hits, read_log_lines
 
@@ -64,42 +72,49 @@ def match_flows_to_rules(flows: DataFrame, rules: DataFrame) -> DataFrame:
     candidates the firewall applies the LOWEST rule_id (evaluation
     order) — expressed as ``min_by`` over the candidate set, keyed by
     the flow tuple, with the matched action carried alongside."""
-    src_lo, src_hi = cidr_bounds("src_net")
-    dst_lo, dst_hi = cidr_bounds("dst_net")
+    src_lo, src_hi = cidr_bounds_sql("src_net")
+    dst_lo, dst_hi = cidr_bounds_sql("dst_net")
     r = F.broadcast(
-        rules.select(
+        rules.selectExpr(
             "acl", "rule_id", "action", "protocol", "port_lo", "port_hi",
-            src_lo.alias("src_lo"), src_hi.alias("src_hi"),
-            dst_lo.alias("dst_lo"), dst_hi.alias("dst_hi"),
+            f"{src_lo} AS src_lo", f"{src_hi} AS src_hi",
+            f"{dst_lo} AS dst_lo", f"{dst_hi} AS dst_hi",
         ).alias("r")
     )
     # non-nullable on purpose: a nullable address makes Catalyst infer
     # isnotnull(addr) from the join predicate and push it through the
     # flow aggregate to the line scan, re-parsing every raw line; -1
     # is inside no rule's [lo, hi] (lo >= 0)
-    f = flows.select(
+    f = flows.selectExpr(
         "*",
-        F.coalesce(ipv4_to_long("src_ip"), F.lit(-1)).alias("src_addr"),
-        F.coalesce(ipv4_to_long("dst_ip"), F.lit(-1)).alias("dst_addr"),
+        f"coalesce({ipv4_to_long_sql('src_ip')}, -1) AS src_addr",
+        f"coalesce({ipv4_to_long_sql('dst_ip')}, -1) AS dst_addr",
     ).alias("f")
-    cond = (
-        (F.col("f.acl") == F.col("r.acl"))
-        & ((F.col("r.protocol") == "ip") | (F.col("r.protocol") == F.col("f.protocol")))
-        & F.col("f.src_addr").between(F.col("r.src_lo"), F.col("r.src_hi"))
-        & F.col("f.dst_addr").between(F.col("r.dst_lo"), F.col("r.dst_hi"))
-        & F.col("f.dst_port").between(F.col("r.port_lo"), F.col("r.port_hi"))
+    # the port range is tested on coalesce(dst_port, -1) for the same
+    # reason (port_lo >= 0, so -1 matches nothing): a bare nullable
+    # dst_port would bring back an inferred isnotnull(try_cast(...))
+    # that re-runs the line regex per log line
+    cond = F.expr(
+        "f.acl = r.acl"
+        " AND (r.protocol = 'ip' OR r.protocol = f.protocol)"
+        " AND f.src_addr BETWEEN r.src_lo AND r.src_hi"
+        " AND f.dst_addr BETWEEN r.dst_lo AND r.dst_hi"
+        " AND coalesce(f.dst_port, -1) BETWEEN r.port_lo AND r.port_hi"
     )
-    flow_key = [F.col(f"f.{c}") for c in ("acl", "protocol", "src_ip", "dst_ip", "dst_port")]
     # one expanded config statement can contribute several tuples with
     # the same rule_id (object-group expansion) — min_by on rule_id
     # picks the first *statement*; ties within a statement are the same
     # rule, so (rule_id, action) pairs are unambiguous
     return (
         f.join(r, cond)
-        .groupBy(*flow_key, F.col("f.hit_cnt").alias("hit_cnt"))
+        .selectExpr(
+            "f.acl", "f.protocol", "f.src_ip", "f.dst_ip", "f.dst_port", "f.hit_cnt",
+            "r.rule_id", "r.action",
+        )
+        .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port", "hit_cnt")
         .agg(
-            F.min("r.rule_id").alias("rule_id"),
-            F.min_by("r.action", F.col("r.rule_id")).alias("action"),
+            F.expr("min(rule_id) AS rule_id"),
+            F.expr("min_by(action, rule_id) AS action"),
         )
     )
 
@@ -116,31 +131,31 @@ def run_ruleset_analysis(
     # pre-aggregate to distinct flows: containment-join work is then
     # O(|flows| × |rules|) regardless of raw log volume
     flows = hits.groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port").agg(
-        F.sum("hit_cnt").alias("hit_cnt")
+        F.expr("sum(hit_cnt) AS hit_cnt")
     )
     # one driver-side parse feeds both literal relations
     rule_rows = parse_asa_config(config_text)
     matched = match_flows_to_rules(flows, rules_relation(spark, rule_rows))
     usage = matched.groupBy("acl", "rule_id").agg(
-        F.sum("hit_cnt").alias("hits"),
-        F.count(F.lit(1)).alias("n_flows"),
+        F.expr("sum(hit_cnt) AS hits"),
+        F.expr("count(1) AS n_flows"),
         # collect_set rides the one (acl, rule_id) exchange, where
         # countDistinct expands into two more; a rule's distinct
         # sources are bounded by its distinct flows
-        F.size(F.collect_set("src_ip")).cast("long").alias("n_sources"),
+        F.expr("CAST(size(collect_set(src_ip)) AS BIGINT) AS n_sources"),
     )
     # rule identity (one row per statement, not per expanded tuple)
     idents = rule_identities(spark, rule_rows)
     return (
         idents.join(usage, on=["acl", "rule_id"], how="left")
-        .select(
+        .selectExpr(
             "acl",
             "rule_id",
             "action",
-            F.coalesce("hits", F.lit(0)).alias("hits"),
-            F.coalesce("n_flows", F.lit(0)).alias("n_flows"),
-            F.coalesce("n_sources", F.lit(0)).alias("n_sources"),
-            F.when(F.col("hits").isNull(), "UNUSED").otherwise("ACTIVE").alias("status"),
+            "coalesce(hits, 0) AS hits",
+            "coalesce(n_flows, 0) AS n_flows",
+            "coalesce(n_sources, 0) AS n_sources",
+            "CASE WHEN hits IS NULL THEN 'UNUSED' ELSE 'ACTIVE' END AS status",
         )
     )
 

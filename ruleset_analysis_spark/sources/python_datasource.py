@@ -73,11 +73,27 @@ class AsaSyslogReader(DataSourceReader):
         yield from _parse_file(partition.value)
 
 
+_INT32_MAX = 2**31 - 1
+_INT64_MAX = 2**63 - 1
+
+
+def _bounded(digits: str, limit: int) -> int | None:
+    """``try_cast`` of a digit run: ``None`` past the type's range."""
+    n = int(digits)
+    return n if n <= limit else None
+
+
 def _parse_file(path: str) -> Iterator[tuple]:
     """Stream one plain/gzipped syslog file as typed hit tuples —
     shared by the batch and streaming readers (identical dirty-line
-    contract: unparsable lines drop, never abort)."""
-    rx = re.compile(ASA_106100_RE)
+    contract: unparsable lines drop, never abort).
+
+    Matches the JVM path field for field: ``re.ASCII`` gives ``\\d``
+    and ``\\S`` Java's ASCII meaning, and an out-of-range port or hit
+    count becomes ``None`` as ``try_cast`` makes it NULL there (an
+    unbounded ``int`` would abort the whole read in the Arrow
+    conversion)."""
+    rx = re.compile(ASA_106100_RE, re.ASCII)
     opener = gzip.open if path.endswith(".gz") else open
     with opener(path, "rt", errors="replace") as fh:
         for line in fh:
@@ -86,8 +102,8 @@ def _parse_file(path: str) -> Iterator[tuple]:
                 continue
             g = m.groups()
             yield (
-                g[0], g[1], g[2], g[3], g[4], int(g[5]),
-                g[6], g[7], int(g[8]), int(g[9]),
+                g[0], g[1], g[2], g[3], g[4], _bounded(g[5], _INT32_MAX),
+                g[6], g[7], _bounded(g[8], _INT32_MAX), _bounded(g[9], _INT64_MAX),
             )
 
 

@@ -11,10 +11,16 @@ same capability Spark-first:
   gzip files parallelizes per file, since gzip is not splittable — at
   100 TB one would re-compress archives to a splittable codec or chunk
   files ≤ a few hundred MB so each becomes one task).
-* ``parse_asa_hits`` — regex-extract the access-list hit fields from
-  ASA message 106100 lines into a typed DataFrame. All parsing is JVM
-  ``regexp_extract`` inside whole-stage codegen — the reference paid
-  per-record CPython + pickling here.
+* ``parse_asa_hits`` — extract the access-list hit fields from ASA
+  message 106100 lines into a typed DataFrame. The regex is evaluated
+  once per line as a whole match; the fields are cut out of that match
+  by position with ``substring_index`` (every group is whitespace-free,
+  so the match splits on single spaces into fixed tokens). ``acl`` is
+  non-nullable on purpose: the report job joins on it, and a nullable
+  join key lets Catalyst infer an ``isnotnull`` filter that re-runs the
+  regex on every line. All parsing is JVM string code inside
+  whole-stage codegen — the reference paid per-record CPython +
+  pickling here.
 * ``read_csv`` / ``read_json`` — schema-declared readers (never
   ``inferSchema``: schema inference is an extra full scan and a schema-
   drift hazard at scale).
@@ -31,7 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-# One regex, applied once per line; fields pulled out by group index.
+from ..operators._util import _sql_literal
+
+# Evaluated ONCE per candidate line as a whole match (group 0); the
+# fields are then cut out of that match by position (see
+# ``parse_asa_hits``), never by re-running the regex per group.
 ASA_106100_RE = (
     r"%ASA-\d-106100: access-list (\S+) (permitted|denied) (\S+) "
     r"(\S+)/([\d.]+)\((\d+)\) -> (\S+)/([\d.]+)\((\d+)\) "
@@ -59,6 +69,44 @@ def read_log_lines(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path).withColumnRenamed("value", "line")
 
 
+def _token(k: int) -> str:
+    """SQL text of the ``k``-th space-separated token of the match ``m``."""
+    return f"substring_index(substring_index(m, ' ', {k}), ' ', -1)"
+
+
+def _endpoint(tok: str) -> tuple[str, str, str]:
+    """SQL texts of ``(iface, ip, port)`` from an ``iface/ip(port)``
+    token. The regex's greedy ``(\\S+)/`` ends the interface at the
+    token's LAST ``/`` (the address part has none), so interfaces that
+    themselves contain ``/`` or ``(`` split the same way."""
+    addr = f"substring_index({tok}, '/', -1)"  # ip(port)
+    iface = f"substr({tok}, 1, length({tok}) - length({addr}) - 1)"
+    port = f"substring_index(substring_index({addr}, '(', -1), ')', 1)"
+    return iface, f"substring_index({addr}, '(', 1)", f"try_cast({port} AS INT)"
+
+
+# try_cast everywhere: (\d+) is unbounded, so a corrupt line can match
+# the regex with an out-of-int-range number — that must quarantine as
+# NULL, not abort the scan under ANSI mode. ``acl`` is coalesced to a
+# NON-nullable string: the report joins on it, and a nullable join key
+# makes Catalyst infer ``isnotnull(acl)`` and push it to the line scan,
+# where it re-runs the regex on every line.
+_FIELDS = dict(
+    zip(
+        ASA_HIT_SCHEMA.fieldNames(),
+        (
+            f"coalesce({_token(3)}, '')",  # acl
+            _token(4),  # action
+            _token(5),  # protocol
+            *_endpoint(_token(6)),  # src_if, src_ip, src_port
+            *_endpoint(_token(8)),  # dst_if, dst_ip, dst_port
+            f"try_cast({_token(10)} AS BIGINT)",  # hit_cnt
+        ),
+        strict=True,
+    )
+)
+
+
 def parse_asa_hits(lines: DataFrame, keep_unparsed: bool = False) -> DataFrame:
     """Extract ASA 106100 access-list hit records from raw lines.
 
@@ -68,42 +116,35 @@ def parse_asa_hits(lines: DataFrame, keep_unparsed: bool = False) -> DataFrame:
     quarantine/debug sink (the audit path must not silently drop, so
     it skips the prefilter and regexes every line). The fast path
     keeps a cheap ``contains`` pre-test so the full regex only runs on
-    plausible lines."""
-    candidate = (
-        lines if keep_unparsed else lines.filter(F.col("line").contains("106100"))
+    plausible lines.
+
+    The regex runs once per line as a whole match ``m``; every group
+    is whitespace-free and the literals between them are single
+    spaces, so ``m`` splits on ``' '`` into exactly 10 tokens and each
+    field is a ``substring_index`` cut of its token — the regex's own
+    reading, at string-search cost. (The fast path's ``m != ''``
+    filter is pushed below the projection, so the optimized plan
+    evaluates the regex twice: once to filter, once to project.)"""
+    candidate = lines if keep_unparsed else lines.where("contains(line, '106100')")
+    matched = candidate.selectExpr(
+        "line", f"regexp_extract(line, {_sql_literal(ASA_106100_RE)}, 0) AS m"
     )
-    g = lambda i: F.regexp_extract("line", ASA_106100_RE, i)  # noqa: E731
-    # try_cast everywhere: (\d+) is unbounded, so a corrupt line can
-    # match the regex with an out-of-int-range number — that must
-    # quarantine as NULL, not abort the scan under ANSI mode
-    parsed = candidate.select(
-        "line",
-        g(1).alias("acl"),
-        g(2).alias("action"),
-        g(3).alias("protocol"),
-        g(4).alias("src_if"),
-        g(5).alias("src_ip"),
-        g(6).try_cast("int").alias("src_port"),
-        g(7).alias("dst_if"),
-        g(8).alias("dst_ip"),
-        g(9).try_cast("int").alias("dst_port"),
-        g(10).try_cast("bigint").alias("hit_cnt"),
-    )
-    ok = parsed.filter(F.col("acl") != "")
     if keep_unparsed:
-        bad = parsed.filter(F.col("acl") == "").select(
-            "line", *[F.lit(None).cast(f.dataType).alias(f.name) for f in ASA_HIT_SCHEMA]
+        # one projection: a line without a match gets NULL fields
+        return matched.selectExpr(
+            "line", *(f"CASE WHEN m != '' THEN {e} END AS {n}" for n, e in _FIELDS.items())
         )
-        return ok.unionByName(bad)
-    return ok.drop("line")
+    return matched.where("m != ''").selectExpr(*(f"{e} AS {n}" for n, e in _FIELDS.items()))
 
 
 def hit_counts(hits: DataFrame) -> DataFrame:
     """Per-(acl, dst_port, protocol) hit totals — the reference's
-    ``reduceByKey(add)`` as a partial-aggregated groupBy."""
+    ``reduceByKey(add)`` as a partial-aggregated groupBy. The distinct
+    source count is ``size(collect_set(...))``, which rides the one
+    grouping exchange where ``countDistinct`` expands into another."""
     return hits.groupBy("acl", "protocol", "dst_port").agg(
         F.sum("hit_cnt").alias("hits"),
-        F.countDistinct("src_ip").alias("n_sources"),
+        F.size(F.collect_set("src_ip")).cast("long").alias("n_sources"),
     )
 
 

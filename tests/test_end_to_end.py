@@ -61,7 +61,7 @@ def test_reference_workflow_end_to_end(spark, archive, tmp_path):
         & ((hits.protocol == rules.protocol) | (rules.protocol == "ip"))
         & (hits.dst_port >= rules.port_lo)
         & (hits.dst_port <= rules.port_hi)
-        & ip_in_cidr(hits.dst_ip, rules.dst_net),
+        & ip_in_cidr("dst_ip", "dst_net"),
     )
     per_rule = (
         joined.groupBy(rules.acl.alias("acl"), "rule_id")

@@ -1595,3 +1595,74 @@ def test_ip_in_cidr_malformed_never_matches(spark, bad_ips, bad_cidrs):
         assert r["m"] is not True, r
         if r["bad_cidr"]:
             assert r["lo"] is None and r["hi"] is None, r
+
+
+# --- ASA 106100 parse: one match, fields by position ---------------------
+
+_iface = st.text(alphabet="io/(-.7é ", min_size=1, max_size=6)
+_addr = st.text(alphabet="0123456789.", max_size=8)
+_digits = st.text(alphabet="0123456789", max_size=21)
+_word = st.text(alphabet="ab/()-.9", min_size=1, max_size=5)
+
+
+@st.composite
+def _syslog_lines(draw):
+    """106100-shaped lines with every field drawn from a small alphabet
+    (interfaces with ``/`` and ``(``, empty or malformed addresses,
+    ports and counts past int range), other message IDs, a prefix that
+    may repeat the message header, truncation at any point — or free
+    text over the same characters."""
+    d = draw
+    shaped = (
+        f"%ASA-{d(st.sampled_from(['6', '4', 'x']))}-"
+        f"{d(st.sampled_from(['106100', '106100', '106023', '302013']))}: "
+        f"access-list {d(_word)} {d(st.sampled_from(['permitted', 'denied', 'dropped']))} "
+        f"{d(_word)} {d(_iface)}/{d(_addr)}({d(_digits)}) -> "
+        f"{d(_iface)}/{d(_addr)}({d(_digits)}) hit-cnt {d(_digits)}"
+        f"{d(st.sampled_from(['', ' 300-second interval [0x1, 0x0]', 'x', '  ']))}"
+    )
+    cut = d(st.one_of(st.none(), st.integers(0, len(shaped))))
+    prefix = d(st.sampled_from(["", "Oct 17 10:00:00 fw1 : ", "%ASA-6-106100: access-list "]))
+    free = st.text(alphabet="%ASA-6106100: /().->hitcn", max_size=60)
+    return d(st.one_of(st.just(prefix + shaped[:cut]), free))
+
+
+@given(lines=st.lists(_syslog_lines(), min_size=1, max_size=40))
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_parse_asa_hits_matches_per_group_extract(spark, lines):
+    """``parse_asa_hits`` cuts fields out of ONE whole-regex match by
+    position; row for row it equals per-group ``regexp_extract`` (with
+    ``try_cast`` for the int fields), and with ``keep_unparsed`` every
+    input line comes out exactly once."""
+    from collections import Counter
+
+    from ruleset_analysis_spark.sources.text_logs import (
+        ASA_106100_RE, ASA_HIT_SCHEMA, parse_asa_hits,
+    )
+
+    df = spark.createDataFrame([(ln,) for ln in lines], "line string")
+    ints = {"src_port": "int", "dst_port": "int", "hit_cnt": "bigint"}
+
+    def group(i, name):
+        g = F.regexp_extract("line", ASA_106100_RE, i)
+        return g.try_cast(ints[name]) if name in ints else g
+
+    names = ASA_HIT_SCHEMA.fieldNames()
+    matched = F.regexp_extract("line", ASA_106100_RE, 1) != ""
+    ref = df.select(
+        "line", *[F.when(matched, group(i, n)).alias(n) for i, n in enumerate(names, 1)]
+    )
+    want = Counter(tuple(r) for r in ref.collect())
+
+    audit = parse_asa_hits(df, keep_unparsed=True)
+    assert audit.columns == ["line", *names]
+    got = Counter(tuple(r) for r in audit.collect())
+    assert got == want
+    assert Counter(r[0] for r in got.elements()) == Counter(lines)
+
+    fast = Counter(tuple(r) for r in parse_asa_hits(df).collect())
+    assert fast == Counter(t[1:] for t in want.elements() if t[1] is not None)

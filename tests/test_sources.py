@@ -323,26 +323,42 @@ def test_python_datasource_asa_syslog(spark, tmp_path):
     """Custom Python DataSource: format('asa_syslog') over mixed
     plain+gzip files yields exactly what the JVM regexp path parses —
     same rows, typed schema, one partition per file, dirty lines
-    dropped."""
+    dropped, and an out-of-range number NULL (``try_cast``), not an
+    aborted read."""
     import gzip as gz
 
     from ruleset_analysis_spark.sources.python_datasource import (
         register_asa_syslog,
     )
+    dirty = [
+        # past int / bigint range: NULL fields, the row survives
+        "%ASA-6-106100: access-list OUTSIDE_IN permitted tcp "
+        "outside/203.0.113.7(99999999999) -> dmz/10.0.1.5(443) hit-cnt 1 first hit [0x0, 0x0]",
+        "%ASA-6-106100: access-list OUTSIDE_IN denied udp "
+        "outside/203.0.113.8(53) -> dmz/10.0.1.9(99999999999) "
+        "hit-cnt 99999999999999999999 first hit [0x0, 0x0]",
+        # Arabic-Indic digits are not \d in Java: no match, dropped
+        "%ASA-6-106100: access-list OUTSIDE_IN permitted tcp "
+        "outside/203.0.113.9(\u0664\u0664\u0663) -> dmz/10.0.1.5(443) hit-cnt 1 first hit [0x0, 0x0]",
+    ]
+    text = "\n".join([*LINES, *dirty]) + "\n"
     d = tmp_path / "syslog"
     d.mkdir()
-    (d / "a.log").write_text("\n".join(LINES) + "\n")
-    with gz.open(d / "b.log.gz", "wt") as fh:
-        fh.write("\n".join(LINES) + "\n")
+    (d / "a.log").write_text(text, encoding="utf-8")
+    with gz.open(d / "b.log.gz", "wt", encoding="utf-8") as fh:
+        fh.write(text)
 
     register_asa_syslog(spark)
     via_ds = spark.read.format("asa_syslog").load(str(d))
     via_jvm = text_logs.parse_asa_hits(text_logs.read_log_lines(spark, str(d)))
 
     cols = via_ds.columns
-    got = sorted(tuple(r) for r in via_ds.collect())
-    want = sorted(tuple(r) for r in via_jvm.select(*cols).collect())
-    assert got == want and len(got) == 6  # 3 parseable lines × 2 files
+    got = sorted((tuple(r) for r in via_ds.collect()), key=repr)
+    want = sorted((tuple(r) for r in via_jvm.select(*cols).collect()), key=repr)
+    assert got == want and len(got) == 10  # 5 parseable lines × 2 files
+    nulls = [(r["src_port"], r["dst_port"], r["hit_cnt"]) for r in via_ds.collect()
+             if None in (r["src_port"], r["dst_port"], r["hit_cnt"])]
+    assert sorted(nulls, key=repr) == [(53, None, None)] * 2 + [(None, 443, 1)] * 2
     assert dict(via_ds.dtypes)["hit_cnt"] == "bigint"
     assert via_ds.rdd.getNumPartitions() == 2  # one per file
 
