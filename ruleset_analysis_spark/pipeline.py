@@ -34,9 +34,20 @@ lazy DataFrame composition:
   rendered by ``functions.net``'s ``*_sql`` helpers): a Column-API
   tree costs many py4j round trips per node in classic mode, SQL text
   a few per call, so the per-day plan build stays cheap;
+* the flows are aggregated from the UNFILTERED line projection
+  (``text_logs.asa_hit_fields``: one regex evaluation and one token
+  split per candidate line); a candidate that does not match carries
+  ``acl = ''``, which the ``acl`` equi-join drops, so no filter re-runs
+  the regex;
 * the rule dimension and the rule identities are literal relations
   built from one driver-side config parse: no Python workers, no
-  ``distinct`` shuffle.
+  ``distinct`` shuffle;
+* the rule identities are folded into the per-rule aggregate as extra
+  input rows (``identities UNION ALL matched`` grouped by ``(acl,
+  rule_id)``; only identity rows carry ``action``, only matched rows a
+  flow), so every statement is listed without a join after the
+  aggregate: one exchange, no sort-merge join, no broadcast of the
+  usage back to the identities.
 
 Not registry-graded (needs log *files*, not the driver's parquet
 tables); exercised end-to-end on real .gz fixtures in
@@ -56,8 +67,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.net import cidr_bounds_sql, ipv4_to_long_sql
-from .sources.asa_config import parse_asa_config, rule_identities, rules_relation
-from .sources.text_logs import parse_asa_hits, read_log_lines
+from .sources.asa_config import parse_asa_statements, rule_identities, rules_relation
+from .sources.text_logs import asa_hit_fields, read_log_lines
 
 
 def match_flows_to_rules(flows: DataFrame, rules: DataFrame) -> DataFrame:
@@ -127,35 +138,38 @@ def run_ruleset_analysis(
     n_sources, status)`` covering EVERY configured rule, UNUSED rows
     included — the reference's deliverable (hit report + zero-hit
     removal candidates) in one DataFrame."""
-    hits = parse_asa_hits(read_log_lines(spark, log_path))
     # pre-aggregate to distinct flows: containment-join work is then
-    # O(|flows| × |rules|) regardless of raw log volume
-    flows = hits.groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port").agg(
-        F.expr("sum(hit_cnt) AS hit_cnt")
+    # O(|flows| × |rules|) regardless of raw log volume. The fields are
+    # the UNFILTERED projection: a candidate line without a match has
+    # acl = '', which the acl equi-join drops (config ACL names are
+    # whitespace-split tokens, never ''), so no filter re-runs the regex
+    flows = (
+        asa_hit_fields(read_log_lines(spark, log_path))
+        .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
+        .agg(F.expr("sum(hit_cnt) AS hit_cnt"))
     )
     # one driver-side parse feeds both literal relations
-    rule_rows = parse_asa_config(config_text)
-    matched = match_flows_to_rules(flows, rules_relation(spark, rule_rows))
-    usage = matched.groupBy("acl", "rule_id").agg(
-        F.expr("sum(hit_cnt) AS hits"),
-        F.expr("count(1) AS n_flows"),
-        # collect_set rides the one (acl, rule_id) exchange, where
-        # countDistinct expands into two more; a rule's distinct
-        # sources are bounded by its distinct flows
-        F.expr("CAST(size(collect_set(src_ip)) AS BIGINT) AS n_sources"),
+    rule_rows, statements = parse_asa_statements(config_text)
+    matched = match_flows_to_rules(flows, rules_relation(spark, rule_rows)).selectExpr(
+        "acl", "rule_id", "hit_cnt", "src_ip", "1 AS flow"
     )
-    # rule identity (one row per statement, not per expanded tuple)
-    idents = rule_identities(spark, rule_rows)
+    # every statement enters the per-rule aggregate as one identity row
+    # (the only rows carrying action; NULL hit_cnt, src_ip and flow), so
+    # the report lists every rule without a join after the aggregate
     return (
-        idents.join(usage, on=["acl", "rule_id"], how="left")
-        .selectExpr(
-            "acl",
-            "rule_id",
-            "action",
-            "coalesce(hits, 0) AS hits",
-            "coalesce(n_flows, 0) AS n_flows",
-            "coalesce(n_sources, 0) AS n_sources",
-            "CASE WHEN hits IS NULL THEN 'UNUSED' ELSE 'ACTIVE' END AS status",
+        rule_identities(spark, statements)
+        .unionByName(matched, allowMissingColumns=True)
+        .groupBy("acl", "rule_id")
+        .agg(
+            F.expr("max(action) AS action"),
+            F.expr("coalesce(sum(hit_cnt), 0) AS hits"),
+            F.expr("count(flow) AS n_flows"),
+            # collect_set rides the one (acl, rule_id) exchange, where
+            # countDistinct expands into two more; a rule's distinct
+            # sources are bounded by its distinct flows
+            F.expr("CAST(size(collect_set(src_ip)) AS BIGINT) AS n_sources"),
+            # NULL when no flow matched, or only flows with a NULL hit_cnt
+            F.expr("CASE WHEN sum(hit_cnt) IS NULL THEN 'UNUSED' ELSE 'ACTIVE' END AS status"),
         )
     )
 

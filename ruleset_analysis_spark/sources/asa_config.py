@@ -27,8 +27,17 @@ Grammar covered (public ASA syntax):
     access-list <name> extended <permit|deny> <proto> <src> <dst> [<port>]
         where <src>/<dst> ∈ { any | host <ip> | <net> <mask>
                               | object-group <group> }
-              <port>      ∈ { eq <p> | range <lo> <hi>
+              <port>      ∈ { eq <p> | lt <p> | gt <p> | neq <p>
+                              | range <lo> <hi>
                               | object-group <group> }   (absent → any)
+    access-list <name> standard <permit|deny> <src>
+    access-list <name> remark <free text>
+
+    ``lt p`` is ports 0..p-1, ``gt p`` is p+1..65535 and ``neq p`` both
+    of those ranges (a range that holds no port expands to no tuple). A
+    statement ending in ``inactive`` is disabled on the firewall: it
+    keeps its rule_id (evaluation position) but expands to no tuple, so
+    it matches no traffic and reports UNUSED.
 """
 
 from __future__ import annotations
@@ -111,18 +120,27 @@ def _parse_endpoint(toks: list[str], i: int) -> tuple[str, int]:
     return f"{t}/{_mask_to_prefix(toks[i + 1])}", i + 2
 
 
-def _parse_port(toks: list[str], i: int) -> str | tuple[int, int]:
+def _parse_port(toks: list[str], i: int) -> tuple[str | list[tuple[int, int]], int]:
+    """Consume an optional port spec at toks[i]; return (spec, next
+    index). Spec is a list of inclusive ``(lo, hi)`` ranges — empty when
+    the operator admits no port (``lt 0``) — or 'group:<name>'."""
     if i >= len(toks):
-        return _ANY_PORTS
+        return [_ANY_PORTS], i
     t = toks[i]
-    if t == "eq":
-        p = _well_known(toks[i + 1])
-        return (p, p)
-    if t == "range":
-        return (_well_known(toks[i + 1]), _well_known(toks[i + 2]))
     if t == "object-group":
-        return f"group:{toks[i + 1]}"
-    return _ANY_PORTS
+        return f"group:{toks[i + 1]}", i + 2
+    if t == "range":
+        return [(_well_known(toks[i + 1]), _well_known(toks[i + 2]))], i + 3
+    if t not in ("eq", "lt", "gt", "neq"):
+        return [_ANY_PORTS], i
+    p = _well_known(toks[i + 1])
+    ranges = {
+        "eq": [(p, p)],
+        "lt": [(0, p - 1)],
+        "gt": [(p + 1, 65535)],
+        "neq": [(0, p - 1), (p + 1, 65535)],
+    }[t]
+    return [(lo, hi) for lo, hi in ranges if lo <= hi], i + 2
 
 
 _WELL_KNOWN = {
@@ -144,7 +162,18 @@ def parse_asa_config(text: str) -> list[dict]:
     ``rule_id`` numbers access-list statements per ACL in order of
     appearance (the position the firewall evaluates them in); every
     expanded tuple of one statement shares its rule_id, exactly what a
-    hit-count join needs."""
+    hit-count join needs. A statement that matches no traffic (an
+    ``inactive`` ACE, or a port operator that admits no port) keeps its
+    rule_id but expands to no tuple; :func:`parse_asa_statements` lists
+    it."""
+    return parse_asa_statements(text)[0]
+
+
+def parse_asa_statements(text: str) -> tuple[list[dict], list[dict]]:
+    """``(tuples, statements)``: the flow tuples of
+    :func:`parse_asa_config`, and one ``(acl, rule_id, action)`` dict
+    per access-list statement in order — including the statements that
+    expand to no tuple, which a usage report must still list."""
     groups = _Groups()
     acl_entries: list[tuple[str, list[str]]] = []
     current: tuple[str, str] | None = None  # (kind, name)
@@ -165,7 +194,7 @@ def parse_asa_config(text: str) -> list[dict]:
             spec, _ = _parse_endpoint(toks, 1)
             groups.network[current[1]].append(spec)
         elif toks[0] == "port-object" and current and current[0] == "service":
-            groups.service[current[1]].append(_parse_port(toks, 1))  # type: ignore[arg-type]
+            groups.service[current[1]].extend(_parse_port(toks, 1)[0])  # type: ignore[arg-type]
         elif toks[0] == "group-object" and current:
             target = groups.network if current[0] == "network" else groups.service
             target[current[1]].append(f"group:{toks[1]}")  # type: ignore[arg-type]
@@ -177,9 +206,10 @@ def parse_asa_config(text: str) -> list[dict]:
 
     rule_counters: dict[str, int] = {}
     rows: list[dict] = []
+    statements: list[dict] = []
     for acl, toks in acl_entries:
-        # access-list <name> [extended] <action> <proto> <src...> <dst...> [<port...>]
-        # access-list <name> standard <permit|deny> <net...>
+        # access-list <name> [extended] <action> <proto> <src...> <dst...> [<port...>] [inactive]
+        # access-list <name> standard <permit|deny> <net...> [inactive]
         # access-list <name> remark <free text>   -- annotation, skipped
         i = 2
         if toks[i] == "remark":
@@ -187,42 +217,31 @@ def parse_asa_config(text: str) -> list[dict]:
         if toks[i] == "standard":
             # standard ACLs match source only: action + one endpoint
             action, proto = toks[i + 1], "ip"
-            src, _ = _parse_endpoint(toks, i + 2)
-            dst, port = "0.0.0.0/0", _ANY_PORTS
-            rule_counters[acl] = rule_counters.get(acl, 0) + 1
-            srcs = (
-                groups.resolve_network(src[6:]) if src.startswith("group:") else [src]
+            src, i = _parse_endpoint(toks, i + 2)
+            dst, ports = "0.0.0.0/0", [_ANY_PORTS]
+        else:
+            if toks[i] == "extended":
+                i += 1
+            action, proto = toks[i], toks[i + 1]
+            src, i = _parse_endpoint(toks, i + 2)
+            dst, i = _parse_endpoint(toks, i)
+            port, i = _parse_port(toks, i)
+            ports = (
+                groups.resolve_service(port[6:]) if isinstance(port, str) else port
             )
-            for s in srcs:
-                rows.append(
-                    {
-                        "acl": acl, "rule_id": rule_counters[acl], "action": action,
-                        "protocol": proto, "src_net": s, "dst_net": dst,
-                        "port_lo": port[0], "port_hi": port[1],
-                    }
-                )
-            continue
-        if toks[i] == "extended":
-            i += 1
-        action, proto = toks[i], toks[i + 1]
-        i += 2
-        src, i = _parse_endpoint(toks, i)
-        dst, i = _parse_endpoint(toks, i)
-        port = _parse_port(toks, i)
 
         rule_counters[acl] = rule_counters.get(acl, 0) + 1
         rid = rule_counters[acl]
-
+        statements.append({"acl": acl, "rule_id": rid, "action": action})
         srcs = groups.resolve_network(src[6:]) if src.startswith("group:") else [src]
         dsts = groups.resolve_network(dst[6:]) if dst.startswith("group:") else [dst]
-        ports = (
-            groups.resolve_service(port[6:])
-            if isinstance(port, str) and port.startswith("group:")
-            else [port]
-        )
+        # the firewall skips an inactive ACE: it keeps its position (and
+        # its place in the report) but matches nothing
+        if "inactive" in toks[i:]:
+            continue
         for s in srcs:
             for d in dsts:
-                for lo, hi in ports:  # type: ignore[misc]
+                for lo, hi in ports:
                     rows.append(
                         {
                             "acl": acl,
@@ -235,7 +254,7 @@ def parse_asa_config(text: str) -> list[dict]:
                             "port_hi": hi,
                         }
                     )
-    return rows
+    return rows, statements
 
 
 def _local_relation(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
@@ -256,8 +275,11 @@ def rules_relation(spark: SparkSession, rows: list[dict]) -> DataFrame:
 
 def rule_identities(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """One ``(acl, rule_id, action)`` row per access-list statement of
-    already-parsed rows — deduplicated on the driver, so a report that
-    must list every statement needs no ``distinct`` shuffle."""
+    already-parsed rows (the tuples of :func:`parse_asa_config`, or the
+    statements of :func:`parse_asa_statements`, which also hold the
+    statements without a tuple) — deduplicated on the driver, so a
+    report that must list every statement needs no ``distinct``
+    shuffle."""
     names = ("acl", "rule_id", "action")
     idents = sorted({tuple(r[n] for n in names) for r in rows})
     return _local_relation(spark, idents, T.StructType([RULE_SCHEMA[n] for n in names]))

@@ -13,14 +13,19 @@ same capability Spark-first:
   files ≤ a few hundred MB so each becomes one task).
 * ``parse_asa_hits`` — extract the access-list hit fields from ASA
   message 106100 lines into a typed DataFrame. The regex is evaluated
-  once per line as a whole match; the fields are cut out of that match
-  by position with ``substring_index`` (every group is whitespace-free,
-  so the match splits on single spaces into fixed tokens). ``acl`` is
-  non-nullable on purpose: the report job joins on it, and a nullable
-  join key lets Catalyst infer an ``isnotnull`` filter that re-runs the
-  regex on every line. All parsing is JVM string code inside
-  whole-stage codegen — the reference paid per-record CPython +
-  pickling here.
+  once per line as a whole match; the match is split once on single
+  spaces into its 10 fixed tokens (every group is whitespace-free) and
+  each field is a token by position (``get``), the endpoints cut
+  further with ``substring_index``. ``acl`` is non-nullable on purpose:
+  the report job joins on it, and a nullable join key lets Catalyst
+  infer an ``isnotnull`` filter that re-runs the regex on every line.
+  All parsing is JVM string code inside whole-stage codegen — the
+  reference paid per-record CPython + pickling here.
+* ``asa_hit_fields`` — the same projection unfiltered: every candidate
+  line, a non-match with ``acl = ''``. The report job aggregates from
+  it and lets its ``acl`` join drop the non-matches, so it evaluates
+  the regex once per candidate line where ``parse_asa_hits``' filter
+  adds a second evaluation.
 * ``read_csv`` / ``read_json`` — schema-declared readers (never
   ``inferSchema``: schema inference is an extra full scan and a schema-
   drift hazard at scale).
@@ -40,8 +45,10 @@ from pyspark.sql import types as T
 from ..operators._util import _sql_literal
 
 # Evaluated ONCE per candidate line as a whole match (group 0); the
-# fields are then cut out of that match by position (see
-# ``parse_asa_hits``), never by re-running the regex per group.
+# match is then split once on ' ' and the fields are read from that
+# split by position (see ``asa_hit_fields``), never by re-running the
+# regex per group. The groups are whitespace-free and the literals
+# between them single spaces, so a match always splits into 10 tokens.
 ASA_106100_RE = (
     r"%ASA-\d-106100: access-list (\S+) (permitted|denied) (\S+) "
     r"(\S+)/([\d.]+)\((\d+)\) -> (\S+)/([\d.]+)\((\d+)\) "
@@ -69,9 +76,14 @@ def read_log_lines(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path).withColumnRenamed("value", "line")
 
 
+_MATCH = f"regexp_extract(line, {_sql_literal(ASA_106100_RE)}, 0)"
+
+
 def _token(k: int) -> str:
-    """SQL text of the ``k``-th space-separated token of the match ``m``."""
-    return f"substring_index(substring_index(m, ' ', {k}), ' ', -1)"
+    """SQL text of the ``k``-th space-separated token of the match, read
+    from its one split ``t``. ``get`` yields NULL past the end (a line
+    without a match splits to ``['']``) where ``t[k]`` aborts under ANSI."""
+    return f"get(t, {k - 1})"
 
 
 def _endpoint(tok: str) -> tuple[str, str, str]:
@@ -107,6 +119,37 @@ _FIELDS = dict(
 )
 
 
+def _split_fields(matched: DataFrame, audit: bool = False) -> DataFrame:
+    """The hit fields of ``matched``'s whole match ``m``, cut from ONE
+    ``split`` of it. A line without a match gets ``acl = ''`` (no ACL
+    is named ``''``) and NULL elsewhere — or, for the ``audit`` path,
+    which also passes ``line`` through, NULL fields. Every field reads
+    ``t``, so Catalyst keeps its projection (``CollapseProject`` does
+    not duplicate a non-trivial expression): one split per line."""
+    keep = ["line"] if audit else []
+    fields = (f"CASE WHEN m != '' THEN {e} END" if audit else e for e in _FIELDS.values())
+    return matched.selectExpr(*keep, "m", "split(m, ' ') AS t").selectExpr(
+        *keep, *(f"{e} AS {n}" for n, e in zip(_FIELDS, fields, strict=True))
+    )
+
+
+def _candidates(lines: DataFrame) -> DataFrame:
+    """``m``, the whole 106100 match (``''`` for none), of every line
+    that passes the cheap ``contains`` pre-test."""
+    return lines.where("contains(line, '106100')").selectExpr(f"{_MATCH} AS m")
+
+
+def asa_hit_fields(lines: DataFrame) -> DataFrame:
+    """``ASA_HIT_SCHEMA`` fields of every candidate line (one containing
+    ``106100``), unfiltered: a candidate that does not match comes out
+    with ``acl = ''`` and NULL elsewhere. One regex evaluation and one
+    split per candidate line — the form for a consumer that drops the
+    non-matches itself, e.g. with an equi-join on ``acl`` (the report
+    job), where a filter would be pushed below the projection and run
+    the regex a second time."""
+    return _split_fields(_candidates(lines))
+
+
 def parse_asa_hits(lines: DataFrame, keep_unparsed: bool = False) -> DataFrame:
     """Extract ASA 106100 access-list hit records from raw lines.
 
@@ -120,21 +163,16 @@ def parse_asa_hits(lines: DataFrame, keep_unparsed: bool = False) -> DataFrame:
 
     The regex runs once per line as a whole match ``m``; every group
     is whitespace-free and the literals between them are single
-    spaces, so ``m`` splits on ``' '`` into exactly 10 tokens and each
-    field is a ``substring_index`` cut of its token — the regex's own
-    reading, at string-search cost. (The fast path's ``m != ''``
-    filter is pushed below the projection, so the optimized plan
-    evaluates the regex twice: once to filter, once to project.)"""
-    candidate = lines if keep_unparsed else lines.where("contains(line, '106100')")
-    matched = candidate.selectExpr(
-        "line", f"regexp_extract(line, {_sql_literal(ASA_106100_RE)}, 0) AS m"
-    )
+    spaces, so ``m`` splits once on ``' '`` into exactly 10 tokens and
+    each field is a position in that split (the endpoints cut by
+    ``substring_index``) — the regex's own reading, at string-search
+    cost. The fast path is :func:`asa_hit_fields` plus a filter on the
+    match itself (``m != ''``), which Catalyst pushes below the
+    projection, so it evaluates the regex twice (once to filter, once
+    to project) but splits only the lines that pass."""
     if keep_unparsed:
-        # one projection: a line without a match gets NULL fields
-        return matched.selectExpr(
-            "line", *(f"CASE WHEN m != '' THEN {e} END AS {n}" for n, e in _FIELDS.items())
-        )
-    return matched.where("m != ''").selectExpr(*(f"{e} AS {n}" for n, e in _FIELDS.items()))
+        return _split_fields(lines.selectExpr("line", f"{_MATCH} AS m"), audit=True)
+    return _split_fields(_candidates(lines).where("m != ''"))
 
 
 def hit_counts(hits: DataFrame) -> DataFrame:

@@ -152,6 +152,57 @@ def test_run_ruleset_analysis_tolerates_dirty_lines(spark, tmp_path):
     assert rows[("OUTSIDE_IN", 1)]["hits"] == 3  # only the clean line counts
 
 
+def _write_day(d, lines):
+    d.mkdir()
+    with gzip.open(d / "fw.log.gz", "wt") as f:
+        f.write("\n".join(lines) + "\n")
+    return str(d)
+
+
+def _hit(port, n):
+    return (
+        "%ASA-6-106100: access-list OUTSIDE_IN permitted tcp "
+        f"outside/203.0.113.7(40000) -> dmz/10.0.1.5({port}) hit-cnt {n} "
+        "300-second interval [0x1, 0x0]"
+    )
+
+
+def test_run_ruleset_analysis_lt_rule_leaves_other_ports_to_later_rules(spark, tmp_path):
+    """An ``lt 1024`` rule ahead of a broader rule takes only its own
+    ports: first-match charges port 8080 to the later rule, not to the
+    ``lt`` rule (which once expanded to every port)."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    cfg = """
+access-list OUTSIDE_IN extended permit tcp any host 10.0.1.5 lt 1024
+access-list OUTSIDE_IN extended permit tcp any host 10.0.1.5 neq 8443
+access-list OUTSIDE_IN extended deny ip any any
+"""
+    day = _write_day(tmp_path / "logs", [_hit(443, n=3), _hit(8080, n=5), _hit(8443, n=7)])
+    rows = {r["rule_id"]: r for r in run_ruleset_analysis(spark, day, cfg).collect()}
+    assert {k: (r["hits"], r["status"]) for k, r in rows.items()} == {
+        1: (3, "ACTIVE"), 2: (5, "ACTIVE"), 3: (7, "ACTIVE"),
+    }
+
+
+def test_run_ruleset_analysis_inactive_rule_is_unused(spark, tmp_path):
+    """An ``inactive`` ACE matches no traffic: it is listed, in its
+    place, as UNUSED with 0 hits, and the traffic it would have matched
+    goes to the next matching rule."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    cfg = """
+access-list OUTSIDE_IN extended permit tcp any host 10.0.1.5 eq 22 inactive
+access-list OUTSIDE_IN extended deny ip any any
+"""
+    day = _write_day(tmp_path / "logs", [_hit(22, n=4)])
+    rows = sorted(tuple(r) for r in run_ruleset_analysis(spark, day, cfg).collect())
+    assert rows == [
+        ("OUTSIDE_IN", 1, "permit", 0, 0, 0, "UNUSED"),
+        ("OUTSIDE_IN", 2, "deny", 4, 1, 1, "ACTIVE"),
+    ]
+
+
 def test_run_ruleset_analysis_config_without_rules(spark, archive):
     """A config with object-groups but no access-list statement expands
     to no rules: the report is empty, with the declared columns, and

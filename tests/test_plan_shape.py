@@ -678,17 +678,22 @@ def test_ruleset_report_plan_is_lean_and_jvm_only(spark, tmp_path):
     * no pickled-RDD relation anywhere (the rule dimension and the rule
       identities are LocalRelations, no Python workers);
     * the per-line part of the plan (everything under the flow
-      aggregate) carries no address parse: a nullable flow address
-      makes Catalyst infer ``isnotnull(addr)`` from the join predicate
-      and push it through the aggregate to the line scan, re-running
-      ``rlike``/``split`` on every raw line;
-    * the per-line part evaluates the 106100 regex at most twice (the
-      pushed-down ``m != ''`` filter and the projection of the match);
-      a nullable ``acl`` or bare nullable ``dst_port`` in the join
-      brings back inferred ``isnotnull`` filters that re-run it, and
-      per-group extraction runs it once per field;
-    * at most 5 exchanges, broadcasts included (no ``distinct`` over
-      the rules, no ``countDistinct`` expansion)."""
+      aggregate) carries no address parse (its signature is the
+      ``RLIKE`` shape gate and the ``split`` on ``[.]``): a nullable
+      flow address makes Catalyst infer ``isnotnull(addr)`` from the
+      join predicate and push it through the aggregate to the line
+      scan, re-running the parse on every raw line;
+    * the per-line part evaluates the 106100 regex once: the flows are
+      aggregated from the unfiltered projection, whose non-matches the
+      ``acl`` join drops, so no ``m != ''`` filter re-runs it; a
+      nullable ``acl`` or bare nullable ``dst_port`` in the join brings
+      back inferred ``isnotnull`` filters that re-run it, and per-group
+      extraction runs it once per field;
+    * no ``SortMergeJoin`` and at most 3 exchanges, broadcasts included
+      (the flow aggregate, the rule broadcast, the per-rule aggregate):
+      the rule identities enter the per-rule aggregate as rows instead
+      of joining its result, there is no ``distinct`` over the rules
+      and no ``countDistinct`` expansion."""
     import re
 
     from ruleset_analysis_spark.pipeline import run_ruleset_analysis
@@ -715,17 +720,18 @@ def test_ruleset_report_plan_is_lean_and_jvm_only(spark, tmp_path):
         per_line.append(ln)
     assert any("Relation [" in ln for ln in per_line), optimized
     for ln in per_line:
-        assert "RLIKE" not in ln and "split(" not in ln, (
+        assert "RLIKE" not in ln and "[.]" not in ln, (
             f"address parse runs per log line: {ln.strip()}"
         )
     regex_runs = sum(ln.count("regexp_extract(") for ln in per_line)
-    assert regex_runs <= 2, "\n".join(per_line)
+    assert regex_runs <= 1, "\n".join(per_line)
 
+    assert "SortMergeJoin" not in physical, physical
     exchanges = [
         ln.strip() for ln in physical.splitlines()
         if re.match(r"\w*Exchange\b", ln.lstrip(" :+-*()0123456789"))
     ]
-    assert len(exchanges) <= 5, "\n".join(exchanges)
+    assert len(exchanges) <= 3, "\n".join(exchanges)
 
 
 def test_ruleset_report_build_is_low_chatter(spark, tmp_path, monkeypatch):
@@ -733,7 +739,15 @@ def test_ruleset_report_build_is_low_chatter(spark, tmp_path, monkeypatch):
     trips once warm: the join condition, aggregates and projections
     are SQL text (``F.expr``/``selectExpr``, a few round trips each),
     not Column-API trees, which cost many round trips per node in
-    classic mode."""
+    classic mode.
+
+    Python's cyclic garbage collector is drained before the count and
+    held off during it: a collection inside the window finalizes other
+    tests' Java proxies, one detach round trip each (a thousand and
+    more after a test that built many DataFrames), which are not the
+    build's."""
+    import gc
+
     from py4j.clientserver import JavaClient
 
     from ruleset_analysis_spark.pipeline import run_ruleset_analysis
@@ -747,7 +761,12 @@ def test_ruleset_report_build_is_low_chatter(spark, tmp_path, monkeypatch):
         calls[0] += 1
         return send(self, *args, **kwargs)
 
+    gc.collect()
+    gc.disable()
     monkeypatch.setattr(JavaClient, "send_command", counting)
-    run_ruleset_analysis(spark, day, _REPORT_CONFIG)
-    monkeypatch.undo()
+    try:
+        run_ruleset_analysis(spark, day, _REPORT_CONFIG)
+    finally:
+        monkeypatch.undo()
+        gc.enable()
     assert 0 < calls[0] <= 400, calls[0]

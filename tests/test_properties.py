@@ -9,7 +9,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import Window, functions as F
 
 from ruleset_analysis_spark.sources.asa_config import parse_asa_config
@@ -1637,11 +1637,12 @@ def test_parse_asa_hits_matches_per_group_extract(spark, lines):
     """``parse_asa_hits`` cuts fields out of ONE whole-regex match by
     position; row for row it equals per-group ``regexp_extract`` (with
     ``try_cast`` for the int fields), and with ``keep_unparsed`` every
-    input line comes out exactly once."""
+    input line comes out exactly once. ``asa_hit_fields`` is the fast
+    path plus every other candidate line, with ``acl = ''``."""
     from collections import Counter
 
     from ruleset_analysis_spark.sources.text_logs import (
-        ASA_106100_RE, ASA_HIT_SCHEMA, parse_asa_hits,
+        ASA_106100_RE, ASA_HIT_SCHEMA, asa_hit_fields, parse_asa_hits,
     )
 
     df = spark.createDataFrame([(ln,) for ln in lines], "line string")
@@ -1666,3 +1667,118 @@ def test_parse_asa_hits_matches_per_group_extract(spark, lines):
 
     fast = Counter(tuple(r) for r in parse_asa_hits(df).collect())
     assert fast == Counter(t[1:] for t in want.elements() if t[1] is not None)
+
+    unfiltered = Counter(tuple(r) for r in asa_hit_fields(df).collect())
+    no_match = ("", *[None] * (len(names) - 1))
+    assert unfiltered == fast + Counter(
+        no_match for t in want.elements() if t[1] is None and "106100" in t[0]
+    )
+
+
+# ----------------------------------------------- report vs its public pieces
+
+_REPORT_STATEMENTS = [
+    "access-list A extended permit tcp any host 10.0.0.1 eq 443",
+    "access-list A extended permit tcp any 10.0.0.0 255.255.255.0 lt 1024",
+    "access-list A extended deny udp host 10.1.0.1 any neq 53",
+    "access-list A extended permit tcp any any eq 22 inactive",
+    "access-list A extended permit ip any any",
+    "access-list B extended permit udp any any range 50 60",
+    "access-list B extended deny tcp 10.1.0.0 255.255.0.0 any gt 1023",
+    "access-list B extended permit tcp any host 192.0.2.1 eq 80",
+    "access-list B standard permit host 10.1.2.3",
+]
+
+
+@st.composite
+def _report_days(draw):
+    """A config drawn from ``_REPORT_STATEMENTS`` (unused, ``lt``/
+    ``gt``/``neq`` and ``inactive`` rules) and a small day of lines over
+    a few ACLs, addresses and ports: unparseable addresses and ports, a
+    ``hit-cnt`` past bigint range (NULL), other message IDs, truncated
+    106100 lines — or no candidate line at all."""
+    d = draw
+    statements = d(
+        st.lists(st.sampled_from(_REPORT_STATEMENTS), min_size=1, max_size=6, unique=True)
+    )
+    hit = st.builds(
+        "%ASA-6-106100: access-list {} permitted {} outside/{}({}) -> dmz/{}({}) "
+        "hit-cnt {} 300-second interval [0x1, 0x0]".format,
+        st.sampled_from(["A", "B", "C"]),
+        st.sampled_from(["tcp", "udp", "icmp"]),
+        st.sampled_from(["10.1.0.1", "10.1.2.3", "203.0.113.5", "999.1.1.1"]),
+        st.sampled_from(["40000", "99999999999"]),
+        st.sampled_from(["10.0.0.1", "10.0.0.7", "192.0.2.9"]),
+        st.sampled_from(["22", "53", "55", "80", "443", "1023", "1024", "8080", "99999999999"]),
+        st.sampled_from(["1", "7", "99999999999999999999"]),
+    )
+    dirty = st.sampled_from([
+        "%ASA-6-302013: Built inbound TCP connection 1 for outside:10.1.0.1/40000",
+        "%ASA-6-106100: access-list A permitted tcp truncated",
+        "",
+    ])
+    lines = d(st.lists(st.one_of(hit, hit, dirty), max_size=25))
+    return "\n".join(statements) + "\n", lines
+
+
+@given(day=_report_days())
+@example(day=(  # a rule whose only flows have a NULL hit_cnt reads UNUSED
+    "access-list A extended permit tcp any host 10.0.0.1 eq 443\n",
+    ["%ASA-6-106100: access-list A permitted tcp outside/10.1.0.1(40000) -> "
+     "dmz/10.0.0.1(443) hit-cnt 99999999999999999999 300-second interval [0x1, 0x0]"],
+))
+@example(day=(  # no candidate line at all
+    "access-list A extended permit ip any any\naccess-list B standard permit host 10.1.2.3\n",
+    ["%ASA-6-302013: Built inbound TCP connection 1 for outside:10.1.0.1/40000"],
+))
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_ruleset_report_equals_join_of_its_public_pieces(spark, day):
+    """``run_ruleset_analysis`` (rule identities folded into the per-rule
+    aggregate, non-matching lines dropped by the ``acl`` join) equals,
+    row for row and in schema, the report composed the plain way:
+    ``parse_asa_hits`` → flows → ``match_flows_to_rules`` → per-rule
+    usage → identities LEFT JOIN usage."""
+    import gzip
+    import tempfile
+
+    from ruleset_analysis_spark.pipeline import match_flows_to_rules, run_ruleset_analysis
+    from ruleset_analysis_spark.sources.asa_config import (
+        parse_asa_statements, rule_identities, rules_dataframe,
+    )
+    from ruleset_analysis_spark.sources.text_logs import parse_asa_hits, read_log_lines
+
+    config, lines = day
+    with tempfile.TemporaryDirectory() as d:
+        with gzip.open(f"{d}/fw.log.gz", "wt") as f:
+            f.write("".join(f"{ln}\n" for ln in lines))
+
+        flows = (
+            parse_asa_hits(read_log_lines(spark, d))
+            .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
+            .agg(F.sum("hit_cnt").alias("hit_cnt"))
+        )
+        usage = (
+            match_flows_to_rules(flows, rules_dataframe(spark, config))
+            .groupBy("acl", "rule_id")
+            .agg(
+                F.sum("hit_cnt").alias("hits"),
+                F.count(F.lit(1)).alias("n_flows"),
+                F.countDistinct("src_ip").alias("n_sources"),
+            )
+        )
+        idents = rule_identities(spark, parse_asa_statements(config)[1])
+        ref = idents.join(usage, ["acl", "rule_id"], "left").select(
+            "acl", "rule_id", "action",
+            F.coalesce("hits", F.lit(0)).alias("hits"),
+            F.coalesce("n_flows", F.lit(0)).alias("n_flows"),
+            F.coalesce("n_sources", F.lit(0)).alias("n_sources"),
+            F.when(F.col("hits").isNull(), "UNUSED").otherwise("ACTIVE").alias("status"),
+        )
+        report = run_ruleset_analysis(spark, d, config)
+        assert report.columns == ref.columns
+        assert [f.dataType for f in report.schema] == [f.dataType for f in ref.schema]
+        assert sorted(map(tuple, report.collect())) == sorted(map(tuple, ref.collect()))

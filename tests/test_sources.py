@@ -230,6 +230,52 @@ access-list LEGACY standard deny any
     ]
 
 
+@pytest.mark.parametrize(
+    "port, ranges",
+    [
+        ("lt 1024", [(0, 1023)]),
+        ("gt 1023", [(1024, 65535)]),
+        ("neq 80", [(0, 79), (81, 65535)]),
+        ("neq www", [(0, 79), (81, 65535)]),
+        ("neq 0", [(1, 65535)]),
+        ("neq 65535", [(0, 65534)]),
+        ("lt 1", [(0, 0)]),
+        ("gt 65534", [(65535, 65535)]),
+    ],
+)
+def test_asa_port_operators_expand_to_their_ranges(port, ranges):
+    """``lt``/``gt``/``neq`` admit only their ports, never every port; a
+    ``neq`` is two tuples of one statement."""
+    rows = asa_config.parse_asa_config(
+        f"access-list A extended permit tcp any any {port}\n"
+        "access-list A extended deny ip any any\n"
+    )
+    assert [(r["rule_id"], r["port_lo"], r["port_hi"]) for r in rows] == [
+        *((1, lo, hi) for lo, hi in ranges), (2, 0, 65535)
+    ]
+
+
+@pytest.mark.parametrize("stmt", [
+    "access-list A extended permit tcp any any lt 0",
+    "access-list A extended permit tcp any any gt 65535",
+    "access-list A extended permit tcp any any eq 22 inactive",
+    "access-list A extended permit ip any any inactive",
+    "access-list A standard permit 10.1.0.0 255.255.0.0 inactive",
+])
+def test_asa_statement_without_tuples_keeps_its_rule_id(stmt):
+    """A port operator that admits no port, and an ``inactive`` ACE
+    (disabled on the firewall), expand to no tuple, but the statement
+    keeps its evaluation position and is listed among the statements."""
+    cfg = f"{stmt}\naccess-list A extended deny ip any any\n"
+    rows, statements = asa_config.parse_asa_statements(cfg)
+    assert [(r["rule_id"], r["action"]) for r in rows] == [(2, "deny")]
+    assert statements == [
+        {"acl": "A", "rule_id": 1, "action": "permit"},
+        {"acl": "A", "rule_id": 2, "action": "deny"},
+    ]
+    assert asa_config.parse_asa_config(cfg) == rows
+
+
 def test_asa_undefined_group_fails_loud():
     with pytest.raises(ValueError, match="undefined network object-group"):
         asa_config.parse_asa_config(
