@@ -166,10 +166,9 @@ def values_df(spark: SparkSession, rows, ddl: str):
 
     ``ddl``: flat ``name type`` pairs (optionally ``name: type``),
     primitive types only — exactly the shapes the registry's constant
-    dims use. Empty ``rows`` is not supported (VALUES needs >= 1 row);
-    the callers' empty-corpus fallbacks keep createDataFrame."""
-    if not rows:
-        raise ValueError("values_df: empty rows — use createDataFrame")
+    dims use. Empty ``rows`` (VALUES needs >= 1 row) renders one
+    all-NULL row under ``WHERE false``, which plans to an empty
+    LocalRelation with the same nullable schema."""
     fields = []
     for part in ddl.split(","):
         part = part.strip().replace(":", " ")
@@ -180,10 +179,12 @@ def values_df(spark: SparkSession, rows, ddl: str):
         for i, (name, t) in enumerate(fields)
     )
     vals = ", ".join(
-        "(" + ", ".join(_sql_literal(v) for v in row) + ")" for row in rows
+        "(" + ", ".join(_sql_literal(v) for v in row) + ")"
+        for row in rows or [(None,) * len(fields)]
     )
     names = ", ".join(f"c{i}" for i in range(len(fields)))
-    return spark.sql(f"SELECT {cols} FROM VALUES {vals} AS t({names})")
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT {cols} FROM VALUES {vals} AS t({names}){where}")
 
 
 def _view(spark: SparkSession, sf_dir: str, table: str) -> str:

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..plans.registry import register
 from ..session import shuffle_partitions
 from ..sources.parquet import corpus_memo, load
+from ._util import values_df
 
 _DAMPING = 0.85
 # Convergence contract (float library path): iterate until the L1 rank
@@ -305,7 +306,7 @@ def graph_pagerank_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocation to pure plan construction.
     n = corpus_memo(spark, sf_dir, "pagerank_n", deg_nodes.count)
     if n == 0:
-        return spark.createDataFrame([], "node long, rank_micro long")
+        return values_df(spark, [], "node long, rank_micro long")
     r0 = _PR_QSCALE // n
     base_q = (15 * _PR_QSCALE) // (100 * n)
     ranks = deg_nodes.select(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..functions.vectors import as_double, norm
 from ..plans.registry import register
 from ..sources.parquet import corpus_memo, load
+from ._util import values_df
 
 
 @register(
@@ -703,7 +704,7 @@ def embed_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PROJECTION below still computes from the embeddings on every run
     basis = corpus_memo(spark, sf_dir, "pca_basis", fit)
     if basis is None:
-        return spark.createDataFrame([], out_schema)
+        return values_df(spark, [], out_schema)
     sbar, w1, w2 = basis
 
     # r10 (guide §1.2 driver overhead): the basis literals and the

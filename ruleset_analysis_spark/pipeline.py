@@ -18,11 +18,9 @@ lazy DataFrame composition:
 * first-match-wins (the firewall's evaluation order) is a ``min_by``
   over candidate matches, not a per-row loop;
 * each side is normalized once before the join: every rule carries
-  its networks as numeric ``[lo, hi]`` bounds (``functions.net.
-  cidr_bounds``, folded into the literal rule relation at planning
-  time) and every distinct flow its numeric addresses, so the
-  per-(flow, rule) predicate is bare long comparisons, not a string
-  parse per pair;
+  its networks as numeric ``[lo, hi]`` bounds and every distinct flow
+  its numeric addresses, so the per-(flow, rule) predicate is bare
+  long comparisons, not a string parse per pair;
 * the flow addresses are non-nullable (``-1`` for a malformed address,
   which no range contains) and the port range is tested on
   ``coalesce(dst_port, -1)`` (``dst_port`` itself stays in the flow
@@ -39,9 +37,16 @@ lazy DataFrame composition:
   split per candidate line); a candidate that does not match carries
   ``acl = ''``, which the ``acl`` equi-join drops, so no filter re-runs
   the regex;
-* the rule dimension and the rule identities are literal relations
-  built from one driver-side config parse: no Python workers, no
-  ``distinct`` shuffle;
+* the ruleset is compiled once per SparkContext and config text
+  (``asa_config.compile_ruleset``): one driver-side config parse, the
+  bounds projected by ``functions.net.cidr_bounds_sql`` over the
+  literal rule relation and collected without a Spark job (the
+  projection folds to a local table scan), then re-rendered as a
+  literal relation of plain numbers beside the literal rule
+  identities. No Python workers, no ``distinct`` shuffle, and a later
+  day with the same config renders no literal and plans no CIDR
+  parse: the analyzed plan's only ``RLIKE``s are the flow side's two
+  address parses;
 * the rule identities are folded into the per-rule aggregate as extra
   input rows (``identities UNION ALL matched`` grouped by ``(acl,
   rule_id)``; only identity rows carry ``action``, only matched rows a
@@ -66,8 +71,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .functions.net import cidr_bounds_sql, ipv4_to_long_sql
-from .sources.asa_config import parse_asa_statements, rule_identities, rules_relation
+from .functions.net import ipv4_to_long_sql
+from .sources.asa_config import compile_ruleset, rule_bounds
 from .sources.text_logs import asa_hit_fields, read_log_lines
 
 
@@ -83,15 +88,13 @@ def match_flows_to_rules(flows: DataFrame, rules: DataFrame) -> DataFrame:
     candidates the firewall applies the LOWEST rule_id (evaluation
     order) — expressed as ``min_by`` over the candidate set, keyed by
     the flow tuple, with the matched action carried alongside."""
-    src_lo, src_hi = cidr_bounds_sql("src_net")
-    dst_lo, dst_hi = cidr_bounds_sql("dst_net")
-    r = F.broadcast(
-        rules.selectExpr(
-            "acl", "rule_id", "action", "protocol", "port_lo", "port_hi",
-            f"{src_lo} AS src_lo", f"{src_hi} AS src_hi",
-            f"{dst_lo} AS dst_lo", f"{dst_hi} AS dst_hi",
-        ).alias("r")
-    )
+    return _first_match(flows, rule_bounds(rules))
+
+
+def _first_match(flows: DataFrame, bounded_rules: DataFrame) -> DataFrame:
+    """:func:`match_flows_to_rules` against rules whose networks are
+    already numeric bounds (``asa_config.rule_bounds``)."""
+    r = F.broadcast(bounded_rules.alias("r"))
     # non-nullable on purpose: a nullable address makes Catalyst infer
     # isnotnull(addr) from the join predicate and push it through the
     # flow aggregate to the line scan, re-parsing every raw line; -1
@@ -148,16 +151,17 @@ def run_ruleset_analysis(
         .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
         .agg(F.expr("sum(hit_cnt) AS hit_cnt"))
     )
-    # one driver-side parse feeds both literal relations
-    rule_rows, statements = parse_asa_statements(config_text)
-    matched = match_flows_to_rules(flows, rules_relation(spark, rule_rows)).selectExpr(
+    # compiled once per session and config text: later days reuse both
+    # literal relations as they are
+    rules, identities = compile_ruleset(spark, config_text)
+    matched = _first_match(flows, rules).selectExpr(
         "acl", "rule_id", "hit_cnt", "src_ip", "1 AS flow"
     )
     # every statement enters the per-rule aggregate as one identity row
     # (the only rows carrying action; NULL hit_cnt, src_ip and flow), so
     # the report lists every rule without a join after the aggregate
     return (
-        rule_identities(spark, statements)
+        identities
         .unionByName(matched, allowMissingColumns=True)
         .groupBy("acl", "rule_id")
         .agg(

@@ -14,6 +14,12 @@ is a declared-schema DataFrame, broadcast-joinable against billions of
 parsed log rows (``F.broadcast``; the log side never shuffles for this
 join). Nothing here touches an executor until the join.
 
+The report job reads the *compiled* ruleset (:func:`compile_ruleset`):
+the rule relation with its networks as numeric bounds, plus the
+statement identities, built once per SparkContext and config text —
+the config stays the same across the days of logs it is matched
+against.
+
 Grammar covered (public ASA syntax):
 
     object-group network <name>
@@ -47,7 +53,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..functions.net import cidr_bounds_sql
 from ..operators._util import values_df
+from .parquet import text_memo
 
 RULE_SCHEMA = T.StructType(
     [
@@ -257,20 +265,15 @@ def parse_asa_statements(text: str) -> tuple[list[dict], list[dict]]:
     return rows, statements
 
 
-def _local_relation(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    # VALUES needs at least one row: an empty expansion (a config with
-    # no access-list statement) keeps createDataFrame
-    if not rows:
-        return spark.createDataFrame([], schema)
-    ddl = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
-    return values_df(spark, rows, ddl)
+def _ddl(schema: T.StructType) -> str:
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
 
 
 def rules_relation(spark: SparkSession, rows: list[dict]) -> DataFrame:
     """The ``RULE_SCHEMA`` dimension of already-parsed rows (see
     :func:`rules_dataframe`)."""
     names = RULE_SCHEMA.fieldNames()
-    return _local_relation(spark, [tuple(r[n] for n in names) for r in rows], RULE_SCHEMA)
+    return values_df(spark, [tuple(r[n] for n in names) for r in rows], _ddl(RULE_SCHEMA))
 
 
 def rule_identities(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -282,7 +285,7 @@ def rule_identities(spark: SparkSession, rows: list[dict]) -> DataFrame:
     shuffle."""
     names = ("acl", "rule_id", "action")
     idents = sorted({tuple(r[n] for n in names) for r in rows})
-    return _local_relation(spark, idents, T.StructType([RULE_SCHEMA[n] for n in names]))
+    return values_df(spark, idents, _ddl(T.StructType([RULE_SCHEMA[n] for n in names])))
 
 
 def rules_dataframe(spark: SparkSession, config_text: str) -> DataFrame:
@@ -293,3 +296,45 @@ def rules_dataframe(spark: SparkSession, config_text: str) -> DataFrame:
     Catalyst knows its size and folds projections over it at planning
     time, and scanning it runs no Python workers."""
     return rules_relation(spark, parse_asa_config(config_text))
+
+
+def rule_bounds(rules: DataFrame) -> DataFrame:
+    """A ``RULE_SCHEMA`` relation with each network replaced by its
+    numeric address bounds ``src_lo, src_hi, dst_lo, dst_hi`` (BIGINT,
+    from ``functions.net.cidr_bounds_sql``, the one reader of a CIDR
+    string; both NULL for a malformed network, which then matches
+    nothing): ``(acl, rule_id, action, protocol, port_lo, port_hi,
+    src_lo, src_hi, dst_lo, dst_hi)``, the side of the first-match join
+    that tests containment as bare long comparisons."""
+    src_lo, src_hi = cidr_bounds_sql("src_net")
+    dst_lo, dst_hi = cidr_bounds_sql("dst_net")
+    return rules.selectExpr(
+        "acl", "rule_id", "action", "protocol", "port_lo", "port_hi",
+        f"{src_lo} AS src_lo", f"{src_hi} AS src_hi",
+        f"{dst_lo} AS dst_lo", f"{dst_hi} AS dst_hi",
+    )
+
+
+def compile_ruleset(spark: SparkSession, config_text: str) -> tuple[DataFrame, DataFrame]:
+    """``(bounded rules, identities)`` of a config, compiled once per
+    SparkContext and config text (``sources.parquet.text_memo``) and
+    then returned as the same two DataFrames: the :func:`rule_bounds`
+    relation of its expanded tuples, and the :func:`rule_identities` of
+    its statements.
+
+    The bounds are computed by Spark, not in Python: the projection
+    over the literal rule relation folds to a local table scan, so its
+    ``collect`` runs no Spark job, and the collected rows are
+    re-rendered as a literal relation of plain numbers. A report that
+    joins against it plans no CIDR parse and renders no ``VALUES``
+    literal once the config is compiled."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        rows, statements = parse_asa_statements(config_text)
+        bounded = rule_bounds(rules_relation(spark, rows))
+        return (
+            values_df(spark, bounded.collect(), _ddl(bounded.schema)),
+            rule_identities(spark, statements),
+        )
+
+    return text_memo(spark, config_text, "asa_ruleset", build)

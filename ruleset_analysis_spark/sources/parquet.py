@@ -83,9 +83,31 @@ def fingerprint(paths) -> str:
     return h.hexdigest()[:16]
 
 
-# corpus root -> (applicationId, fingerprint, {name: value})
-_MEMO: dict[str, tuple[str, str, dict]] = {}
+# memo scope (a corpus root, or ("text", digest)) -> (applicationId,
+# fingerprint, {name: value})
+_MEMO: dict[object, tuple[str, str, dict]] = {}
 _MEMO_LOCK = threading.Lock()
+
+
+def _scoped(spark: SparkSession, scope, fp: str, name: str, build, on_change=None):
+    """The memo itself: ``build()``'s result under ``scope``, stored
+    once per (``applicationId``, ``fp``). A different fingerprint for a
+    scope drops the scope's entries (after ``on_change()`` when the
+    context is the same); racing builders keep whichever value landed
+    first; a ``build`` that raises stores nothing."""
+    key = (spark.sparkContext.applicationId, fp)
+    with _MEMO_LOCK:
+        held = _MEMO.get(scope)
+        if held is None or held[:2] != key:
+            if held is not None and held[0] == key[0] and on_change is not None:
+                on_change()
+            held = _MEMO[scope] = (*key, {})
+    entries = held[2]
+    if name not in entries:
+        # built outside the lock (builds nest: a substrate loads its
+        # tables)
+        entries.setdefault(name, build())
+    return entries[name]
 
 
 def corpus_memo(spark: SparkSession, corpus_dir: str, name: str, build):
@@ -110,19 +132,21 @@ def corpus_memo(spark: SparkSession, corpus_dir: str, name: str, build):
         files = sorted(e.path for e in os.scandir(root))
     except OSError:  # absent or not a directory yet: nothing to hash
         files = []
-    key = (spark.sparkContext.applicationId, fingerprint(files))
-    with _MEMO_LOCK:
-        held = _MEMO.get(root)
-        if held is None or held[:2] != key:
-            if held is not None and held[0] == key[0]:
-                spark.catalog.refreshByPath(root)
-            held = _MEMO[root] = (*key, {})
-    entries = held[2]
-    if name not in entries:
-        # built outside the lock (builds nest: a substrate loads its
-        # tables); racing builders keep whichever value landed first
-        entries.setdefault(name, build())
-    return entries[name]
+    return _scoped(
+        spark, root, fingerprint(files), name, build,
+        on_change=lambda: spark.catalog.refreshByPath(root),
+    )
+
+
+def text_memo(spark: SparkSession, text: str, name: str, build):
+    """``build()``'s result for an in-memory input ``text`` (an ASA
+    config), under the same memo and rules as :func:`corpus_memo`: keyed
+    by ``applicationId`` plus a digest of the text, so equal text in one
+    context returns the same object and changed text builds afresh
+    (each distinct text is its own scope; a text seen again is still a
+    hit); a ``build`` that raises stores nothing."""
+    digest = hashlib.sha256(text.encode()).hexdigest()
+    return _scoped(spark, ("text", digest), digest, name, build)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -3,7 +3,9 @@
 Its contract — the same object while the corpus's files are unchanged,
 a fresh build after they change, nothing stored when a build raises —
 is pinned here on a scratch directory; the end-to-end rewrite check
-against the oracle lives in tests/test_fuzz_corpus.py.
+against the oracle lives in tests/test_fuzz_corpus.py. ``text_memo``
+is the same memo scoped by an in-memory text instead of a directory,
+under the same contract.
 """
 
 from __future__ import annotations
@@ -15,7 +17,7 @@ import time
 
 import pytest
 
-from ruleset_analysis_spark.sources.parquet import corpus_memo
+from ruleset_analysis_spark.sources.parquet import corpus_memo, text_memo
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -98,3 +100,34 @@ def test_concurrent_lookups_share_one_object(spark, tmp_path):
     assert len(got) == 16 * 20
     for i in range(20):
         assert len({id(v) for j, v in got if j == i}) == 1
+
+
+def test_text_memo_holds_for_equal_text_only(spark):
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    a = "access-list A extended permit ip any any\n"
+    first = text_memo(spark, a, "x", build)
+    assert text_memo(spark, "".join(list(a)), "x", build) is first  # equal, not identical
+    assert len(calls) == 1
+    b = a.replace("permit", "deny")
+    second = text_memo(spark, b, "x", build)
+    assert second is not first and len(calls) == 2
+    # each text is its own scope: the first one is still held
+    assert text_memo(spark, a, "x", build) is first
+    assert text_memo(spark, b, "x", build) is second
+    assert len(calls) == 2
+
+
+def test_text_memo_failed_build_stores_nothing(spark):
+    text = "object-group network MISSING\n"
+
+    def boom():
+        raise ValueError("undefined network object-group")
+
+    with pytest.raises(ValueError):
+        text_memo(spark, text, "probe", boom)
+    assert text_memo(spark, text, "probe", lambda: "built") == "built"

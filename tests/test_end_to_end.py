@@ -206,8 +206,8 @@ access-list OUTSIDE_IN extended deny ip any any
 def test_run_ruleset_analysis_config_without_rules(spark, archive):
     """A config with object-groups but no access-list statement expands
     to no rules: the report is empty, with the declared columns, and
-    building it must not raise (the literal-relation form cannot hold
-    zero rows, so this pins its fallback)."""
+    building it must not raise; its rule relations are empty JVM
+    LocalRelations, not pickled-RDD ``createDataFrame`` scans."""
     from ruleset_analysis_spark.pipeline import run_ruleset_analysis
 
     groups_only = "\n".join(
@@ -216,10 +216,57 @@ def test_run_ruleset_analysis_config_without_rules(spark, archive):
     assert asa_config.parse_asa_config(groups_only) == []
     report = run_ruleset_analysis(spark, archive, groups_only)
     assert report.collect() == []
+    optimized = report._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" not in optimized, optimized
     assert report.schema == run_ruleset_analysis(spark, archive, CONFIG).schema
     assert report.columns == [
         "acl", "rule_id", "action", "hits", "n_flows", "n_sources", "status"
     ]
+
+
+def test_compiled_ruleset_follows_the_config_text(
+    spark, archive, report_from_public_pieces, monkeypatch
+):
+    """The ruleset is compiled once per session and config text: config
+    A, then B (one rule's port edited), then A again. B's report shows
+    the edit; the second A call reuses A's compiled relations (no
+    ``spark.sql`` call at all, so no literal is rendered or parsed) and
+    equals the report composed from the public, uncompiled pieces."""
+    from pyspark.sql import SparkSession
+
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    config_b = CONFIG.replace("eq https", "eq 8443")
+    assert config_b != CONFIG
+    sql = SparkSession.sql
+    calls = [0]
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return sql(self, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", counting)
+
+    def report(config):
+        calls[0] = 0
+        rows = {(r["acl"], r["rule_id"]): tuple(r) for r in
+                run_ruleset_analysis(spark, archive, config).collect()}
+        return rows, calls[0]
+
+    a_rows, _ = report(CONFIG)
+    b_rows, b_sql = report(config_b)
+    assert b_sql > 0  # a changed text compiles afresh
+    tcp = sum(1 for i in range(200) if i % 3)
+    # B's https rule now waits for port 8443: its hits go to the catch-all
+    assert b_rows[("OUTSIDE_IN", 1)][3:] == (0, 0, 0, "UNUSED")
+    assert b_rows[("OUTSIDE_IN", 3)][3] == tcp
+    assert a_rows[("OUTSIDE_IN", 1)][3] == tcp
+    again, a_sql = report(CONFIG)
+    assert a_sql == 0
+    assert again == a_rows
+    monkeypatch.undo()
+    ref = report_from_public_pieces(archive, CONFIG)
+    assert sorted(again.values()) == sorted(map(tuple, ref.collect()))
 
 
 def test_pipeline_cli_main(spark, archive, tmp_path, capsys):

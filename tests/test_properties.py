@@ -1727,6 +1727,15 @@ def _report_days(draw):
     ["%ASA-6-106100: access-list A permitted tcp outside/10.1.0.1(40000) -> "
      "dmz/10.0.0.1(443) hit-cnt 99999999999999999999 300-second interval [0x1, 0x0]"],
 ))
+@example(day=(  # malformed config networks: NULL bounds match nothing
+    "access-list A extended permit tcp any host 999.1.1.1 eq 443\n"
+    "access-list A extended permit tcp 10.0.0 255.255.255.0 any\n"  # 10.0.0/24
+    "access-list A extended permit ip any any\n",
+    ["%ASA-6-106100: access-list A permitted tcp outside/{}({}) -> dmz/{}(443) "
+     "hit-cnt 1 300-second interval [0x1, 0x0]".format(*ep)
+     for ep in (("10.1.0.1", 40000, "999.1.1.1"), ("10.0.0.5", 40001, "10.0.0.1"),
+                ("10.0.0", 40002, "10.0.0.1"))],
+))
 @example(day=(  # no candidate line at all
     "access-list A extended permit ip any any\naccess-list B standard permit host 10.1.2.3\n",
     ["%ASA-6-302013: Built inbound TCP connection 1 for outside:10.1.0.1/40000"],
@@ -1736,48 +1745,24 @@ def _report_days(draw):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_ruleset_report_equals_join_of_its_public_pieces(spark, day):
+def test_ruleset_report_equals_join_of_its_public_pieces(spark, report_from_public_pieces, day):
     """``run_ruleset_analysis`` (rule identities folded into the per-rule
-    aggregate, non-matching lines dropped by the ``acl`` join) equals,
-    row for row and in schema, the report composed the plain way:
+    aggregate, non-matching lines dropped by the ``acl`` join, the
+    ruleset compiled once into numeric bounds) equals, row for row and
+    in schema, the report composed the plain way:
     ``parse_asa_hits`` → flows → ``match_flows_to_rules`` → per-rule
     usage → identities LEFT JOIN usage."""
     import gzip
     import tempfile
 
-    from ruleset_analysis_spark.pipeline import match_flows_to_rules, run_ruleset_analysis
-    from ruleset_analysis_spark.sources.asa_config import (
-        parse_asa_statements, rule_identities, rules_dataframe,
-    )
-    from ruleset_analysis_spark.sources.text_logs import parse_asa_hits, read_log_lines
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
 
     config, lines = day
     with tempfile.TemporaryDirectory() as d:
         with gzip.open(f"{d}/fw.log.gz", "wt") as f:
             f.write("".join(f"{ln}\n" for ln in lines))
 
-        flows = (
-            parse_asa_hits(read_log_lines(spark, d))
-            .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
-            .agg(F.sum("hit_cnt").alias("hit_cnt"))
-        )
-        usage = (
-            match_flows_to_rules(flows, rules_dataframe(spark, config))
-            .groupBy("acl", "rule_id")
-            .agg(
-                F.sum("hit_cnt").alias("hits"),
-                F.count(F.lit(1)).alias("n_flows"),
-                F.countDistinct("src_ip").alias("n_sources"),
-            )
-        )
-        idents = rule_identities(spark, parse_asa_statements(config)[1])
-        ref = idents.join(usage, ["acl", "rule_id"], "left").select(
-            "acl", "rule_id", "action",
-            F.coalesce("hits", F.lit(0)).alias("hits"),
-            F.coalesce("n_flows", F.lit(0)).alias("n_flows"),
-            F.coalesce("n_sources", F.lit(0)).alias("n_sources"),
-            F.when(F.col("hits").isNull(), "UNUSED").otherwise("ACTIVE").alias("status"),
-        )
+        ref = report_from_public_pieces(d, config)
         report = run_ruleset_analysis(spark, d, config)
         assert report.columns == ref.columns
         assert [f.dataType for f in report.schema] == [f.dataType for f in ref.schema]
