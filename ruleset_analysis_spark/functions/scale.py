@@ -4,10 +4,11 @@ Two patterns the 100 TB design leans on that deserve first-class,
 tested helpers rather than folklore:
 
 * **Bucketing** — persist both sides of a recurring equi-join bucketed
-  on the join key; Spark then plans a SortMergeJoin with NO exchange on
-  either side (the shuffle happened once, at write time, and is
-  amortized over every subsequent join). This is how the events⋈rules
-  hit-count join would run nightly at 100 TB.
+  on the join key (``sources.sinks.write_bucketed_table``); Spark then
+  plans a SortMergeJoin with NO exchange on either side (the shuffle
+  happened once, at write time, and is amortized over every subsequent
+  join). This is how the events⋈rules hit-count join would run nightly
+  at 100 TB.
 * **Salting** — when one join key value dominates (the reference's
   "busy rule" hot key), a keyed shuffle sends the whole hot key to one
   task. Salting splits the hot side into ``n_salts`` sub-keys and
@@ -19,29 +20,7 @@ tested helpers rather than folklore:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_cols: list[str], n_buckets: int = 8
-) -> None:
-    """Persist as a bucketed managed table (bucket-pruned, co-located
-    for joins/aggs on ``bucket_cols``). Sorted within buckets so the
-    downstream SortMergeJoin also skips its sort."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
-    )
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two tables bucketed on the same key/count: plans with zero
-    Exchange nodes (verified by tests/test_scale_utils.py)."""
-    return spark.table(left_table).join(spark.table(right_table), on=on, how=how)
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_join(

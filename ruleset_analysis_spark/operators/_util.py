@@ -63,12 +63,6 @@ def floor_long(expr: Column) -> Column:
     return F.when(ok, F.floor(expr)).otherwise(F.lit(None)).cast("long")
 
 
-def floor_cents_sql(expr: str, scale: str = "100.0") -> str:
-    """DuckDB twin of ``floor_long((expr) * scale)`` — the floored
-    exact-cents pattern used by the TPC-H revenue oracles."""
-    return f"TRY_CAST(floor(({expr}) * {scale}) AS BIGINT)"
-
-
 def bounded_block(df, key: str, cap: int, what: str):
     """In-plan guard: fail LOUDLY if any blocking-key group exceeds
     ``cap`` rows, instead of letting a label-blocked exact all-pairs

@@ -1518,14 +1518,13 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation (16+8+4+2 = 30 structs in a single explode — built as
     # one F.expr string: the per-literal Column constructor path costs
     # ~1.6 ms/py4j call, ~300 ms for this expression alone) and ONE
-    # (cfg, band_id, band_key)-keyed self-join. The r8 form planned 5
-    # separate band explodes + 5 self-joins + a 4-branch union — a
-    # 256-Exchange plan (plans/r09/dedup_lsh_band_tuning_before.txt)
-    # whose construction and planning dominated the query. Candidate
-    # sets per config are unchanged (the join key now simply includes
-    # the config tag), and cfg 0 IS the (16,1) superset the verify arm
-    # reads, so `sup` is a filter of the persisted candidates instead
-    # of its own join.
+    # (cfg, band_id, band_key)-keyed self-join. Separate band explodes
+    # and self-joins (5 + 5, plus a 4-branch union) plan 256 Exchange
+    # nodes, whose construction and planning dominated the query.
+    # Candidate sets per config are the same either way (the join key
+    # simply includes the config tag), and cfg 0 IS the (16,1) superset
+    # the verify arm reads, so `sup` is a filter of the persisted
+    # candidates instead of its own join.
     band_structs = ", ".join(
         f"struct({ci} AS cfg, {b} AS band_id,"
         " concat_ws(',', "

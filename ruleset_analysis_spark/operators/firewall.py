@@ -13,6 +13,19 @@ anti-join against a constructed rule dimension. The synthesize→parse
 round-trip exercises exactly the reference's schema-on-read surface
 while staying reproducible in both engines.
 
+Each decision has one definition here:
+
+* the configured rule dimension is :func:`_ruleset` (rules
+  ``0.._N_RULESET-1`` in every ACL of :func:`_acls`); every report over
+  configured rules starts from it;
+* the per-rule hit rollup is :func:`firewall_rule_hits`; the usage
+  report, the unused-rule list and the policy diff read it, and column
+  pruning drops what a reader does not select (the unused-rule
+  anti-join reduces it to the distinct ``(acl, rule_id)``);
+* a CIDR string is read only by ``functions.net.cidr_bounds_sql``,
+  projected over a literal rule relation, which Catalyst folds into
+  the relation at planning time.
+
 Scale notes: parsing is JVM regex inside codegen (the reference paid
 per-record CPython + pickling here); the rule dimension is broadcast;
 hit counting is a partial-aggregated groupBy.
@@ -22,8 +35,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.net import cidr_bounds_sql
 from ..plans.registry import register
 from ..sources.parquet import load
+from ._util import values_df
 
 _LINE_FMT = "%%ASA-6-106100: access-list acl_%s rule %d matched user %d"
 _LINE_RE = r"access-list (\w+) rule (\d+) matched user (\d+)"
@@ -52,6 +67,26 @@ def _parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_extract("line", _LINE_RE, 1).alias("acl"),
         F.regexp_extract("line", _LINE_RE, 2).try_cast("bigint").alias("rule_id"),
         F.regexp_extract("line", _LINE_RE, 3).try_cast("bigint").alias("src_user"),
+    )
+
+
+def _acls(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The configured ACLs, one ``acl_<event_type>`` per distinct event
+    type, broadcast: a handful of rows the rule dimensions cross."""
+    return F.broadcast(
+        load(spark, sf_dir, "events")
+        .select(F.concat(F.lit("acl_"), "event_type").alias("acl"))
+        .distinct()
+    )
+
+
+def _ruleset(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The configured rule dimension ``(rule_id, acl)``: rules
+    ``0.._N_RULESET-1`` in every ACL."""
+    return (
+        spark.range(_N_RULESET)
+        .select(F.col("id").cast("bigint").alias("rule_id"))
+        .crossJoin(_acls(spark, sf_dir))
     )
 
 
@@ -123,26 +158,10 @@ def rule_usage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP (also the ``entry()`` smoke query): the reference's full
     deliverable in one result — every rule with its hit count, distinct
     talkers, and an ACTIVE/UNUSED verdict ([R-mem] README: per-rule hit
-    report + the zero-hit removal candidates)."""
-    rules = (
-        spark.range(_N_RULESET)
-        .select(F.col("id").cast("bigint").alias("rule_id"))
-        .crossJoin(
-            F.broadcast(
-                load(spark, sf_dir, "events")
-                .select(F.concat(F.lit("acl_"), "event_type").alias("acl"))
-                .distinct()
-            )
-        )
-    )
-    hits = (
-        _parsed(spark, sf_dir)
-        .groupBy("acl", "rule_id")
-        .agg(
-            F.count(F.lit(1)).alias("hits"),
-            F.countDistinct("src_user").alias("n_users"),
-        )
-    )
+    report + the zero-hit removal candidates): the rule dimension LEFT
+    JOIN :func:`firewall_rule_hits`."""
+    rules = _ruleset(spark, sf_dir)
+    hits = firewall_rule_hits(spark, sf_dir)
     return rules.join(hits, on=["acl", "rule_id"], how="left").select(
         "acl",
         "rule_id",
@@ -173,20 +192,11 @@ def rule_usage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def firewall_unused_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rules with ZERO hits — the reference's raison d'être: the safe-to-
     remove list, via left-anti join of the rule dimension against
-    observed hits."""
-    rules = (
-        spark.range(_N_RULESET)
-        .select(F.col("id").cast("bigint").alias("rule_id"))
-        .crossJoin(
-            load(spark, sf_dir, "events")
-            .select(F.concat(F.lit("acl_"), "event_type").alias("acl"))
-            .distinct()
-        )
-    )
-    hits = _parsed(spark, sf_dir).select("acl", "rule_id").distinct()
-    return rules.join(hits, on=["acl", "rule_id"], how="left_anti").select(
-        "acl", "rule_id"
-    )
+    observed hits (column pruning reduces :func:`firewall_rule_hits` to
+    its distinct ``(acl, rule_id)``)."""
+    return _ruleset(spark, sf_dir).join(
+        firewall_rule_hits(spark, sf_dir), on=["acl", "rule_id"], how="left_anti"
+    ).select("acl", "rule_id")
 
 
 # Literal rule dimension for the CIDR-match query: nets chosen so the
@@ -242,23 +252,16 @@ def firewall_cidr_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     [R-mem] ``convert_ruleset_to_flows.py``; SURVEY §0 provenance).
 
     Destination addresses are synthesized deterministically from
-    user_id and the rule dimension is a broadcast literal table. Each
-    side is normalized ONCE before the join — the fact side projects a
-    numeric address in pure long arithmetic (identical to the oracle's
-    ``hits`` CTE), the 5-row dimension carries pre-computed net/mask
-    longs (query construction, driver-side) — so the
-    BroadcastNestedLoopJoin predicate is bare
-    ``(addr & mask) == (net & mask)`` codegen. An earlier form
-    round-tripped the synthetic address through a string +
-    ``ipv4_to_long`` parse; Catalyst re-expands that parse ~10× across
-    the join's pushed-down null filter and the projection (no CSE
-    across those boundaries), and the resulting codegen unit took
-    multi-second JIT warmup with sporadic 10-20× wall-clock spikes
-    under suite memory pressure — the string-parsing path
-    (``ipv4_to_long`` / ``ip_in_cidr``, functions/net.py) keeps its own
-    malformed-input tests. Normalizing before the join is the
-    scale-correct shape (predicate cost per pair, not parse cost per
-    pair). The oracle reproduces the same algebra in SQL."""
+    user_id in pure long arithmetic (identical to the oracle's ``hits``
+    CTE). The rule side is the literal ``_CIDR_RULES`` relation
+    projected through ``functions.net.cidr_bounds_sql``, the engine's
+    one reader of a CIDR string. Invariant: that projection is
+    deterministic over a ``LocalRelation``, so Catalyst folds it into
+    the literal at planning time — the optimized plan carries the
+    BIGINT bounds, no CIDR parse (no ``RLIKE``, no ``split``) — and the
+    BroadcastNestedLoopJoin predicate is a bare ``addr BETWEEN lo AND
+    hi`` per pair. The oracle tests the same containment as mask
+    algebra in SQL."""
     ev = load(spark, sf_dir, "events")
     hits = ev.select(
         "user_id",
@@ -268,29 +271,12 @@ def firewall_cidr_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (F.col("user_id") % 250 + 1)
         ).alias("addr"),
     )
-
-    def ip_long(s: str) -> int:
-        a, b, c, d = (int(x) for x in s.split("."))
-        return (a << 24) + (b << 16) + (c << 8) + d
-
-    rule_rows = [
-        (acl, rid, ip_long(net.split("/")[0]),
-         (0xFFFFFFFF << (32 - int(net.split("/")[1]))) & 0xFFFFFFFF)
-        for acl, rid, net in _CIDR_RULES
-    ]
-    # JVM VALUES literal (values_df): the createDataFrame form was a
-    # pickled-RDD local relation — Python workers on every run for a
-    # constant rule dim (guide §4)
-    from ._util import values_df
-
+    lo, hi = cidr_bounds_sql("net")
     rules = values_df(
-        spark, rule_rows, "acl string, rule_id int, net bigint, mask bigint"
-    )
-    cond = F.col("addr").bitwiseAND(F.col("mask")) == F.col("net").bitwiseAND(
-        F.col("mask")
-    )
+        spark, _CIDR_RULES, "acl string, rule_id int, net string"
+    ).selectExpr("acl", "rule_id", f"{lo} AS lo", f"{hi} AS hi")
     return (
-        hits.join(F.broadcast(rules), cond)
+        hits.join(F.broadcast(rules), F.expr("addr BETWEEN lo AND hi"))
         .groupBy("acl", "rule_id")
         .agg(
             F.count(F.lit(1)).alias("hits"),
@@ -403,18 +389,12 @@ def firewall_rule_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     horizon = per_rule.agg(F.max("last_hit_epoch").alias("now_epoch"))
-    rules = (
-        spark.range(_N_RULESET)
-        .select(F.col("id").cast("bigint").alias("rule_id"))
-        .crossJoin(
-            ev.select(F.concat(F.lit("acl_"), "event_type").alias("acl")).distinct()
-        )
-    )
     days_idle = F.floor(
         (F.col("now_epoch") - F.col("last_hit_epoch")) / F.lit(86400)
     )
     return (
-        rules.crossJoin(F.broadcast(horizon))
+        _ruleset(spark, sf_dir)
+        .crossJoin(F.broadcast(horizon))
         .join(per_rule, ["acl", "rule_id"], "left")
         .select(
             "acl",
@@ -738,16 +718,11 @@ def firewall_policy_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both generations are deterministic tiny dimensions (|ACL| × ~50
     rows) built from ``range()`` + the broadcast ACL list; the diff is
     a full outer join of two broadcast-sized relations, and the only
-    data-sized work is the hit aggregation the usage report already
-    does — partial-aggregated on (acl, rule_id), then a broadcast left
-    join from the filtered diff. At 100 TB of logs the plan is
-    unchanged: dimensions stay O(rules), facts stay one keyed
-    map-side-combined exchange."""
-    acls = F.broadcast(
-        load(spark, sf_dir, "events")
-        .select(F.concat(F.lit("acl_"), "event_type").alias("acl"))
-        .distinct()
-    )
+    data-sized work is :func:`firewall_rule_hits` (its ``hits`` column;
+    column pruning drops ``n_users``) — partial-aggregated on (acl,
+    rule_id), then a broadcast left join from the filtered diff. At
+    100 TB of logs the plan is unchanged: dimensions stay O(rules),
+    facts stay one keyed map-side-combined exchange."""
     base_action = (
         F.when(F.col("rule_id") % 3 == 0, "permit")
         .when(F.col("rule_id") % 3 == 1, "deny")
@@ -758,16 +733,13 @@ def firewall_policy_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("rule_id") % 3 == 1, "permit")
         .otherwise("log")
     )
-    old_gen = (
-        spark.range(_N_RULESET)
-        .select(F.col("id").cast("bigint").alias("rule_id"))
-        .crossJoin(acls)
-        .select("acl", "rule_id", base_action.alias("old_action"))
+    old_gen = _ruleset(spark, sf_dir).select(
+        "acl", "rule_id", base_action.alias("old_action")
     )
     new_gen = (
         spark.range(_DIFF_DROP_BELOW, _DIFF_ADD_ABOVE + _DIFF_DROP_BELOW)
         .select(F.col("id").cast("bigint").alias("rule_id"))
-        .crossJoin(acls)
+        .crossJoin(_acls(spark, sf_dir))
         .select(
             "acl",
             "rule_id",
@@ -791,16 +763,12 @@ def firewall_policy_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("change") != "UNCHANGED")
     )
-    hits = (
-        _parsed(spark, sf_dir)
-        .groupBy("acl", "rule_id")
-        .agg(F.count(F.lit(1)).alias("h"))
-    )
+    hits = firewall_rule_hits(spark, sf_dir).select("acl", "rule_id", "hits")
     return diff.join(hits, ["acl", "rule_id"], "left").select(
         "acl",
         "rule_id",
         "change",
         "old_action",
         "new_action",
-        F.coalesce("h", F.lit(0)).cast("long").alias("hits"),
+        F.coalesce("hits", F.lit(0)).cast("long").alias("hits"),
     )

@@ -203,9 +203,11 @@ def main(argv: list[str] | None = None) -> int:
         sort_within_partitions=["acl", "rule_id"],
     )
     # per-status summary from the written report (one row per rule),
-    # not from ``report``, which would re-run the job from the raw logs
+    # not from ``report``, which would re-run the job from the raw logs;
+    # read with the report's schema, since a config without access-lists
+    # writes no data file to infer one from
     for r in (
-        spark.read.parquet(args.out_dir)
+        spark.read.schema(report.schema).parquet(args.out_dir)
         .groupBy("status")
         .agg(F.count(F.lit(1)).alias("rules"), F.sum("hits").alias("hits"))
         .orderBy("status")

@@ -145,18 +145,3 @@ def normalize_type(dt: T.DataType) -> str:
     s = dt.simpleString()
     return "timestamp" if s.startswith("timestamp") else s
 
-
-def schema_diff(declared: T.StructType, actual: T.StructType) -> list[str]:
-    """Human-readable mismatches between a declared and observed schema."""
-    problems: list[str] = []
-    dec = {f.name: normalize_type(f.dataType) for f in declared.fields}
-    act = {f.name: normalize_type(f.dataType) for f in actual.fields}
-    for name, dtype in dec.items():
-        if name not in act:
-            problems.append(f"missing column {name}")
-        elif act[name] != dtype:
-            problems.append(f"{name}: declared {dtype}, file has {act[name]}")
-    for name in act:
-        if name not in dec:
-            problems.append(f"unexpected column {name}")
-    return problems

@@ -1,1 +1,1 @@
-from .parquet import TABLE_NAMES, load, load_all  # noqa: F401
+from .parquet import TABLE_NAMES, load  # noqa: F401

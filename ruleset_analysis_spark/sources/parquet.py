@@ -21,7 +21,6 @@ import threading
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from .. import schemas
 from ..session import ensure_session_defaults
 
 TABLE_NAMES = (
@@ -171,13 +170,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return normalize_event_ts(df) if name == "events" else df
 
     return corpus_memo(spark, sf_dir, f"table:{name}", build)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def validate(spark: SparkSession, sf_dir: str, name: str) -> list[str]:
-    """Diff the declared StructType against the loaded schema."""
-    df = load(spark, sf_dir, name)
-    return schemas.schema_diff(schemas.EXPECTED[name], df.schema)

@@ -290,6 +290,21 @@ def test_pipeline_cli_main(spark, archive, tmp_path, capsys):
     assert capsys.readouterr().out.splitlines() == want
 
 
+def test_pipeline_cli_main_without_rules(spark, archive, tmp_path, capsys):
+    """A config with no access-list writes an empty report (no data
+    file, only ``_SUCCESS``); the CLI still exits 0 and prints no
+    status line instead of failing to infer the schema it reads back."""
+    from ruleset_analysis_spark.pipeline import main
+
+    cfg = tmp_path / "groups_only.cfg"
+    cfg.write_text(
+        "\n".join(ln for ln in CONFIG.splitlines() if not ln.startswith("access-list"))
+    )
+    out = str(tmp_path / "report_out")
+    assert main([archive, str(cfg), out]) == 0
+    assert capsys.readouterr().out.splitlines() == []
+
+
 def test_curation_pipeline_composes(spark):
     """The one-call curation pipeline: attrition rows chain (each
     stage's n_out is the next stage's n_in), survivors match the final

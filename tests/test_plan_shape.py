@@ -647,12 +647,37 @@ def test_constant_dims_are_local_relations(spark, name):
     ExistingRDD scan — and agg_countmin_sketch's depth dimension must
     be the inline explode(sequence(..)), not a crossJoined Range (the
     BroadcastNestedLoopJoin + Range form cost 4 extra stages per
-    run)."""
+    run). firewall_cidr_match's ``cidr_bounds_sql`` projection must
+    fold into its literal rule relation: no CIDR parse survives
+    optimization."""
     plan = _physical(spark, name)
     assert "ExistingRDD" not in plan, f"{name}: pickled-RDD relation back"
     if name == "agg_countmin_sketch":
         assert "BroadcastNestedLoopJoin" not in plan
         assert "Range (" not in plan
+    if name == "firewall_cidr_match":
+        opt = _optimized(spark, name)
+        assert "RLIKE" not in opt and "split(" not in opt, opt
+
+
+
+def test_firewall_reports_agree_with_the_hit_rollup(spark):
+    """The registry's rule reports are one rule dimension and one hit
+    rollup: the unused-rule list is exactly the usage report's UNUSED
+    rows, and the ACTIVE rows carry firewall_rule_hits' counts."""
+    specs = all_specs()
+    report = specs["rule_usage_report"].builder(spark, SF_DIR).collect()
+    unused = {(r["acl"], r["rule_id"]) for r in report if r["status"] == "UNUSED"}
+    assert unused
+    unused_rows = specs["firewall_unused_rules"].builder(spark, SF_DIR).collect()
+    assert sorted(map(tuple, unused_rows)) == sorted(unused)
+    active = {
+        (r["acl"], r["rule_id"]): (r["hits"], r["n_users"])
+        for r in report
+        if r["status"] == "ACTIVE"
+    }
+    hits = specs["firewall_rule_hits"].builder(spark, SF_DIR).collect()
+    assert {(r["acl"], r["rule_id"]): (r["hits"], r["n_users"]) for r in hits} == active
 
 
 _REPORT_CONFIG = """

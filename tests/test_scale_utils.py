@@ -5,13 +5,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ruleset_analysis_spark.functions.scale import (
-    bucketed_join,
-    salted_join,
-    skew_aware_counts,
-    write_bucketed,
-)
+from ruleset_analysis_spark.functions.scale import salted_join, skew_aware_counts
 from ruleset_analysis_spark.sources.parquet import load
+from ruleset_analysis_spark.sources.sinks import write_bucketed_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -30,9 +26,9 @@ def bucketed_tables(spark, tmp_path_factory):
         shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
     orders = load(spark, SF_DIR, "orders")
     customer = load(spark, SF_DIR, "customer")
-    write_bucketed(orders, "b_orders", ["o_custkey"], n_buckets=4)
-    write_bucketed(
-        customer.withColumnRenamed("c_custkey", "o_custkey"), "b_customer", ["o_custkey"], 4
+    write_bucketed_table(orders, "b_orders", "o_custkey", n_buckets=4)
+    write_bucketed_table(
+        customer.withColumnRenamed("c_custkey", "o_custkey"), "b_customer", "o_custkey", 4
     )
     yield "b_orders", "b_customer"
     spark.sql("DROP TABLE IF EXISTS b_orders")
@@ -46,7 +42,7 @@ def test_bucketed_join_no_exchange(spark, bucketed_tables):
     # broadcast to expose the bucketed SortMergeJoin path used at scale
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = bucketed_join(spark, lt, rt, on=["o_custkey"])
+        df = spark.table(lt).join(spark.table(rt), on=["o_custkey"])
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
