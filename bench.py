@@ -10,11 +10,14 @@ truncation can reach it — round 1 lost its metric to exactly this):
                            "sf", "n_queries", "supplementary_min_of_2",
                            "supplementary_min_of_2_sum"}
     line 2 (last): compact {"metric", "value", "unit", "sf",
-                           "n_queries", "supplementary_min_of_2_sum"}
+                           "n_queries", "supplementary_min_of_2_sum",
+                           "family_seconds"}
 
-Both lines carry the same graded value. The full detail is also written
-to BENCH_DETAIL.json next to this script for round-over-round per-query
-regression tracking (see SCALE.md).
+Both lines carry the same graded value. ``family_seconds`` sums the
+graded pass per query category, rounded to 10 ms, so per-family
+timings survive a 2000-char tail that cuts the detail line. The full
+detail is also written to BENCH_DETAIL.json next to this script for
+round-over-round per-query regression tracking (see SCALE.md).
 
 Queries are materialized with the noop sink (full execution, zero
 collect/serialization cost) — the timing measures the engine, not
@@ -30,6 +33,19 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+
+def compact_line(summary: dict, timings: dict[str, float], specs) -> str:
+    """The last stdout line: the summary plus first-pass seconds per
+    query category (20 categories, a few hundred characters)."""
+    family: dict[str, float] = {}
+    for name, seconds in timings.items():
+        cat = specs[name].category
+        family[cat] = family.get(cat, 0.0) + seconds
+    return json.dumps({
+        **summary,
+        "family_seconds": {k: round(v, 2) for k, v in sorted(family.items())},
+    })
 
 
 def main() -> int:
@@ -142,7 +158,7 @@ def main() -> int:
         pass  # read-only checkout: stdout still carries everything
     print(json.dumps(detail))
     # compact line LAST: survives any tail-capture of stdout
-    print(json.dumps(summary), flush=True)
+    print(compact_line(summary, timings, specs), flush=True)
     return 0
 
 

@@ -71,75 +71,75 @@ OPERATOR_MODULES = (
 # genuinely new engine surface) and a REFRESH block that is exactly
 # the stalest-first prefix of the cumulative witness ledger
 # (tests/test_differential.py::test_refresh_block_is_oldest_first
-# recomputes it from the committed CORRECTNESS_r0*.json files, so a
+# recomputes it from the committed CORRECTNESS_r*.json files, so a
 # hand-ordering error fails loudly). 260 queries / 50 slots means the
 # full re-witness cycle is >= 5.2 rounds (SURVEY §5).
 #
-# ROUND-10 WINDOW (entries 1-50). CORRECTNESS_r09.json recorded the
-# round-9 window 50/50 green, so the rotation advances oldest-first
-# over the committed r1-r9 ledger exactly as the r9 verdict prescribed.
+# ROUND-11 WINDOW (entries 1-50). CORRECTNESS_r10.json recorded the
+# round-10 window (47/50: the 3 misses are the declared rows-only
+# sketches), so the rotation advances oldest-first over the committed
+# r1-r10 ledger.
 #   * FRONT: empty — no rows-only -> SQL oracle upgrades pending (the
 #     3 remaining rows-only entries are declared approximate sketches
 #     with no cross-engine twin) and the registry is frozen at 260.
-#   * REFRESH: the 12 rows whose latest record is r4 (event/stream/
-#     text tails, graph/multimodal singles, in r4 witness order) + the
-#     38 oldest r5 rows (the q12 re-witness + the r5 additions:
-#     scan roundtrips, sketch aggregates, IVF/MMR/kNN similarity,
-#     stream_exec engine probes, in r5 witness order).
+#   * REFRESH: the 10 rows whose latest record is r5 (as-of joins,
+#     stream_exec probes, dedup tails, in r5 witness order) + the 40
+#     oldest r6 rows (the r5 late additions, the pagerank re-witness
+#     and the first r1 refreshes, in r6 witness order).
 DRIVER_PRIORITY_FRONT: tuple[str, ...] = ()
 DRIVER_PRIORITY_REFRESH = (
-    # --- latest record r4 (6 rounds stale), r4 witness order ---
-    "event_concurrency_sweep",
-    "event_interpolate_linear",
-    "firewall_rule_staleness",
-    "graph_link_prediction",
-    "multimodal_audio_energy",
-    "sample_topk_reservoir",
-    "stream_late_data_policy",
-    "stream_lateness_histogram",
-    "text_bigram_surprisal",
-    "text_diversity_simpson",
-    "text_zipf_slope",
-    "window_ewma",
-    # --- latest record r5 (5 rounds stale), r5 witness order ---
-    "tpch_q12_late_shipments",
-    "join_asof_forward",
-    "agg_exact_percentiles_grouped",
-    "limit_topk",
-    "embed_kmeans_clusters",
-    "scan_partition_pruning",
-    "scan_csv_roundtrip",
-    "scan_jsonl_roundtrip",
-    "agg_linear_regression",
-    "doc_chunk_overlap",
-    "firewall_shadowed_rules",
-    "curation_sample_apply",
-    "funnel_conversion_lag",
-    "multimodal_dhash_fingerprint",
-    "agg_approx_count_distinct",
-    "agg_hll_mergeable",
-    "sim_ann_ivf",
-    "agg_quantiles_approx",
-    "multimodal_phash_radius_join",
-    "agg_weighted_median",
-    "join_interval_overlap",
-    "curation_pipeline_e2e",
-    "scan_syslog_gz",
-    "firewall_config_expansion",
-    "embed_mmr_rerank",
-    "scan_orc_roundtrip",
-    "scan_binary_files",
-    "event_attribution_utouch",
-    "event_wau_sliding_distinct",
-    "sim_knn_graph",
-    "scan_bucketed_join",
-    "stream_exec_tumbling",
-    "corpus_boilerplate_ngrams",
-    "sim_outlier_lowmax",
-    "graph_kcore_bounded",
-    "event_seasonality_hourweek",
-    "embed_recall_eval",
-    "stream_exec_stateful",
+    # --- latest record r5 (6 rounds stale), r5 witness order ---
+    "join_asof_nearest",
+    "stream_exec_sink_parquet",
+    "curation_dedup_rate_report",
+    "dedup_lsh_band_tuning",
+    "scan_merge_schema_evolution",
+    "agg_kmv_mergeable",
+    "join_asof_tolerance",
+    "dedup_incremental_newbatch",
+    "stream_exec_dedup",
+    "dedup_exact_substring",
+    # --- latest record r6 (5 rounds stale), r6 witness order ---
+    "graph_degree_distribution",
+    "agg_skewness_kurtosis",
+    "text_ngram_novelty",
+    "firewall_policy_diff",
+    "event_changepoint_cusum",
+    "sample_importance_weighted",
+    "agg_welch_ttest",
+    "scan_csv_malformed_policy",
+    "agg_chi2_independence",
+    "curation_temperature_mix",
+    "window_median_moving",
+    "agg_mann_whitney_u",
+    "event_dau_mau_stickiness",
+    "agg_ks_test",
+    "agg_benford_deviation",
+    "agg_gini_coefficient",
+    "udtf_table_arg_grouped",
+    "scan_partition_overwrite_dynamic",
+    "agg_autocorrelation_lag1",
+    "event_ohlc_bars",
+    "join_scd2_point_in_time",
+    "udf_iter_pandas",
+    "event_interarrival_burstiness",
+    "stream_exec_sliding",
+    "event_cohort_revenue_ltv",
+    "embed_drift_split_centroids",
+    "text_vocab_growth",
+    "graph_pagerank_cooccur",
+    "scan_parquet",
+    "scan_predicate_pushdown",
+    "scan_projection_pushdown",
+    "project_arithmetic",
+    "filter_equality",
+    "filter_conjunction",
+    "filter_range",
+    "filter_null_handling",
+    "agg_count_by_key",
+    "agg_multi",
+    "agg_count_distinct",
+    "agg_distinct_rows",
 )
 DRIVER_PRIORITY = DRIVER_PRIORITY_FRONT + DRIVER_PRIORITY_REFRESH
 

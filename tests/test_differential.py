@@ -323,7 +323,7 @@ def test_driver_priority_window():
 def test_refresh_block_is_oldest_first():
     """The REFRESH block must be EXACTLY the stalest-first prefix of
     the cumulative driver witness ledger — recomputed here from the
-    committed CORRECTNESS_r0*.json artifacts (latest round containing
+    committed CORRECTNESS_r*.json artifacts (latest round containing
     each name, position within that round's file as the tie-break), so
     the rotation can neither skip a stale query nor reorder by hand.
     The round list below is frozen per round ON PURPOSE: extend it
@@ -343,8 +343,8 @@ def test_refresh_block_is_oldest_first():
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     latest: dict[str, tuple[int, int]] = {}
-    for r in (1, 2, 3, 4, 5, 6, 7, 8, 9):
-        with open(os.path.join(root, f"CORRECTNESS_r0{r}.json")) as f:
+    for r in (1, 2, 3, 4, 5, 6, 7, 8, 9, 10):
+        with open(os.path.join(root, f"CORRECTNESS_r{r:02d}.json")) as f:
             for pos, name in enumerate(json.load(f)):
                 latest[name] = (r, pos)
     unrecorded = [n for n in SPECS if n not in latest]
