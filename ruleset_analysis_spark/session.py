@@ -23,7 +23,7 @@ Why each conf matters:
 * ``spark.sql.shuffle.partitions`` — 200 (default) over-parallelizes
   local-mode work; we size to ~cores. At cluster scale this would be
   set per-job from input statistics (or left to AQE coalescing, which
-  we also enable).
+  Spark enables by default).
 * Arrow execution — vectorized Python<->JVM transfer for the declared
   pandas-UDF surface and fast ``collect``.
 * ``spark.sql.codegen.cache.maxEntries`` — Spark keeps compiled
@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -55,8 +56,10 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # two above 2x for headroom.
 CODEGEN_CACHE_ENTRIES = 8192
 
-_SHIPPED_APPS: set[str] = set()
+# applications whose defaults are set and package shipped; the lock
+# makes concurrent first calls wait for the one that does the work
 _DEFAULTED_APPS: set[str] = set()
+_DEFAULTS_LOCK = threading.Lock()
 
 
 def shuffle_partitions(spark: SparkSession) -> int:
@@ -79,9 +82,6 @@ def _ship_package(spark: SparkSession) -> None:
     real cluster this would be the job's wheel/zip artifact) fixes the
     worker import path in every launch mode."""
     sc = spark.sparkContext
-    app_id = sc.applicationId
-    if app_id in _SHIPPED_APPS:
-        return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         tempfile.mkdtemp(prefix="ruleset_analysis_spark_"),
@@ -102,29 +102,33 @@ def _ship_package(spark: SparkSession) -> None:
     # addPyFile artifacts lazily from the registered path at their
     # first task (verified: deleting it here fails every job with
     # Utils.fetchFile). One small tempdir per SparkContext is the cost.
-    _SHIPPED_APPS.add(app_id)
 
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable defaults to any session. Memoized per
     application — load() calls this on every table load, and the py4j
-    conf round-trips are pure overhead after the first call."""
+    conf round-trips are pure overhead after the first call. An
+    application counts as done only once its confs are set and the
+    package is shipped, so a call that raised is retried by the next."""
     app_id = spark.sparkContext.applicationId
     if app_id in _DEFAULTED_APPS:
         return spark
-    _DEFAULTED_APPS.add(app_id)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Python UDTFs ride Arrow batches instead of pickled rows
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-    try:
-        if int(spark.conf.get("spark.sql.shuffle.partitions")) > 64:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-            )
-    except Exception:  # conf unreadable — leave as-is
-        pass
-    _ship_package(spark)
+    with _DEFAULTS_LOCK:
+        if app_id in _DEFAULTED_APPS:
+            return spark
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python UDTFs ride Arrow batches instead of pickled rows
+        spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
+        try:
+            if int(spark.conf.get("spark.sql.shuffle.partitions")) > 64:
+                spark.conf.set(
+                    "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
+                )
+        except Exception:  # conf unreadable — leave as-is
+            pass
+        _ship_package(spark)
+        _DEFAULTED_APPS.add(app_id)
     return spark
 
 
@@ -132,30 +136,27 @@ def get_spark(
     app_name: str = "ruleset-analysis-spark",
     cpus: int | None = None,
     driver_memory: str = "16g",
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build a tuned local-mode session.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then ``os.cpu_count()``.
     Local mode is one JVM; ``spark.driver.memory`` is the only memory
-    knob that matters there.
+    knob that matters there. The builder sets the static confs, the
+    shuffle sizing and Arrow; ``ensure_session_defaults`` sets the
+    rest, so each conf is set in one place.
     """
     try:
         env_cpus = int((os.environ.get("SPARK_GRAFT_CPUS") or "0").strip())
     except ValueError:  # non-numeric env value — fall back, don't die
         env_cpus = 0
     cpus = cpus or env_cpus or os.cpu_count() or 4
-    shuffle = shuffle_partitions or min(DEFAULT_SHUFFLE_PARTITIONS, max(8, cpus))
+    shuffle = min(DEFAULT_SHUFFLE_PARTITIONS, max(8, cpus))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.driver.memory", driver_memory)
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -35,14 +35,19 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
+from pyspark.sql.types import StructType
 
-from .text_logs import ASA_106100_RE
+from .text_logs import ASA_106100_RE, ASA_HIT_SCHEMA
 
-_DDL = (
-    "acl string, action string, protocol string, "
-    "src_if string, src_ip string, src_port int, "
-    "dst_if string, dst_ip string, dst_port int, hit_cnt bigint"
-)
+
+def _list_files(path: str) -> list[str]:
+    """The name-sorted files directly under a directory, or the matches
+    of a glob: the listing both readers plan their partitions from."""
+    if os.path.isdir(path):
+        return sorted(
+            f for f in glob.glob(os.path.join(path, "*")) if os.path.isfile(f)
+        )
+    return sorted(glob.glob(path))
 
 
 class AsaSyslogReader(DataSourceReader):
@@ -55,17 +60,9 @@ class AsaSyslogReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         # one partition per file: gzip is not splittable, and file
         # granularity is what a syslog archive layout provides
-        p = self._path
-        if os.path.isdir(p):
-            files = sorted(
-                f
-                for f in glob.glob(os.path.join(p, "*"))
-                if os.path.isfile(f)
-            )
-        else:
-            files = sorted(glob.glob(p))
+        files = _list_files(self._path)
         if not files:
-            raise FileNotFoundError(f"asa_syslog: no input files under {p!r}")
+            raise FileNotFoundError(f"asa_syslog: no input files under {self._path!r}")
         return [InputPartition(f) for f in files]
 
     def read(self, partition: InputPartition) -> Iterator[tuple]:
@@ -137,19 +134,11 @@ class AsaSyslogStreamReader(DataSourceStreamReader):
             raise ValueError("asa_syslog: .load(path) is required")
         self._path = path
 
-    def _files(self) -> list[str]:
-        p = self._path
-        if os.path.isdir(p):
-            return sorted(
-                f for f in glob.glob(os.path.join(p, "*")) if os.path.isfile(f)
-            )
-        return sorted(glob.glob(p))
-
     def initialOffset(self) -> dict:
         return {"idx": 0, "last": ""}
 
     def latestOffset(self) -> dict:
-        files = self._files()
+        files = _list_files(self._path)
         return {"idx": len(files), "last": files[-1] if files else ""}
 
     @staticmethod
@@ -172,7 +161,7 @@ class AsaSyslogStreamReader(DataSourceStreamReader):
             )
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        files = self._files()
+        files = _list_files(self._path)
         self._validate(files, start, "start")
         self._validate(files, end, "end")
         # an empty micro-batch still needs a partition list
@@ -190,8 +179,8 @@ class AsaSyslogDataSource(DataSource):
     def name(cls) -> str:
         return "asa_syslog"
 
-    def schema(self) -> str:
-        return _DDL
+    def schema(self) -> StructType:
+        return ASA_HIT_SCHEMA
 
     def reader(self, schema) -> AsaSyslogReader:
         return AsaSyslogReader(self.options)

@@ -34,7 +34,7 @@ def main() -> int:
         print(f"unknown queries: {unknown}")
         return 2
 
-    spark = get_spark(app_name="check", cpus=8, driver_memory="8g")
+    spark = get_spark(app_name="check", driver_memory="8g")
     con = duck_connect(args.sf)
     failures = 0
     for name in names:

@@ -268,7 +268,7 @@ def main() -> int:
         print(f"unknown queries: {unknown}")
         return 2
 
-    spark = get_spark(app_name="fuzz_sweep", cpus=8, driver_memory="8g")
+    spark = get_spark(app_name="fuzz_sweep", driver_memory="8g")
     con = duck_connect(out_dir)
     failures: list[str] = []
     for name in names:

@@ -1,33 +1,66 @@
 #!/usr/bin/env python
-"""Physical-plan audit: one row per registered query → PLANS.md.
+"""Registry profiler: one row per registered query → PLANS.md, and a
+per-query ledger of first-pass counts and times → the JSON file beside
+it (``PLANS.json``).
 
-Counts the plan features that matter at 100 TB, straight from
-``executedPlan`` (the same source tests/test_plan_shape.py asserts
-against), so a reviewer can see the scale discipline of all ~170
-queries at a glance instead of reading 170 explain dumps:
+Two passes over the queries, in name order:
 
-* ``exch``    — Exchange count (shuffles; the unit of cluster cost)
-* ``bhj/smj/bnl`` — broadcast-hash / sort-merge / broadcast-nested-loop
-  join counts (bnl is allowlisted to O(1)-row build sides by
-  tests/test_plan_shape.py)
-* ``push``    — a parquet scan carries PushedFilters
-* ``topk``    — TakeOrderedAndProject (per-partition heaps, no global
-  sort)
-* ``arrow``   — Arrow-batched Python nodes (the declared §2.H/G
-  surface); BatchEvalPython (row-at-a-time) is banned by tests and
-  would show in this column as ``PY!``
+1. **Ledger.** The session is warmed with ``bench.py``'s own
+   ``warm_up`` (warmup queries, pagerank substrate, hot base tables)
+   and every query is materialized with bench's noop sink under AQE,
+   so the times are bench's. Each query runs under its own job group:
 
-Usage: python scripts/plan_audit.py [--sf DIR] [--out PLANS.md]
+   * ``jobs``     — jobs of the query's group over its first pass (the
+     builder call plus the first run; in-builder probe actions count,
+     a streaming query's micro-batches do not: Structured Streaming
+     runs them under the stream's own job group)
+   * ``stages``   — stages of those jobs that ran at least one task; a
+     stage skipped because its shuffle output was reused does not
+     count (as in perfbench's ``scheduler.stages``)
+   * ``compiles`` — whole-stage codegen compiles over the same span
+     (``JvmCounters``)
+   * ``build``, ``run1``, ``run2`` — seconds of the builder call, the
+     first run and a fresh build's run (the steady-state floor); to
+     stdout and the JSON ledger only
+
+2. **Static plans.** A second, cold session with AQE off builds every
+   query again and counts features of ``executedPlan`` (the source
+   tests/test_plan_shape.py asserts against), with the stored child
+   plan of each InMemoryRelation dropped (``_strip_cached_subtrees``):
+
+   * ``exch``    — Exchange count (shuffles; the unit of cluster cost)
+   * ``bhj/smj/bnl`` — broadcast-hash / sort-merge / broadcast-nested-
+     loop join counts (bnl is allowlisted to O(1)-row build sides by
+     tests/test_plan_shape.py)
+   * ``push``    — a parquet scan carries PushedFilters
+   * ``topk``    — TakeOrderedAndProject (per-partition heaps, no
+     global sort)
+   * ``arrow``   — Arrow-batched Python nodes (the declared §2.H/G
+     surface); BatchEvalPython (row-at-a-time) is banned by tests and
+     would show in this column as ``PY!``
+
+Usage: python scripts/plan_audit.py [query ...] [--sf DIR] [--out PLANS.md]
+
+Naming queries profiles only those; give such a run its own ``--out``.
+One query's plan is printed by ``scripts/check.py NAME --explain``.
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import re
 import sys
+import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from bench import run, warm_up  # noqa: E402
+
+COLUMNS = ("exch", "bhj", "smj", "bnl", "push", "topk", "arrow",
+           "jobs", "stages", "compiles")
 
 
 def _strip_cached_subtrees(plan: str) -> str:
@@ -54,83 +87,144 @@ def _strip_cached_subtrees(plan: str) -> str:
     return "\n".join(out)
 
 
+def plan_features(df) -> dict[str, str]:
+    """The static plan columns of ``df``."""
+    plan = _strip_cached_subtrees(df._jdf.queryExecution().executedPlan().toString())
+    arrow = sum(plan.count(n) for n in (
+        "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas",
+        "BatchEvalUDTF", "PythonUDTF",
+    ))
+    return {
+        "exch": str(len(re.findall(r"\bExchange\b", plan))),
+        "bhj": str(plan.count("BroadcastHashJoin")),
+        "smj": str(plan.count("SortMergeJoin")),
+        "bnl": str(plan.count("BroadcastNestedLoopJoin")),
+        "push": "y" if re.search(r"PushedFilters: \[[^\]]", plan) else "",
+        "topk": "y" if "TakeOrderedAndProject" in plan else "",
+        "arrow": (str(arrow) if arrow else "") + ("PY!" if "BatchEvalPython" in plan else ""),
+    }
+
+
+def group_counts(sc, group: str) -> tuple[int, int]:
+    """(jobs, stages that ran a task) of one job group so far."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    ran = [tracker.getStageInfo(s) for s in stages]
+    return len(jobs), sum(1 for s in ran if s and s.numCompletedTasks > 0)
+
+
+def ledger_record(spark, builder, name: str, sf_dir: str, jvm) -> dict:
+    """One ledger record: first-pass counts and build/run1/run2 times."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, f"plan_audit: {name}")
+    compiles0 = jvm.codegen()[0]
+    t0 = time.perf_counter()
+    df = builder(spark, sf_dir)
+    t1 = time.perf_counter()
+    run(df)
+    t2 = time.perf_counter()
+    jobs, stages = group_counts(sc, name)
+    compiles = jvm.codegen()[0] - compiles0
+    t3 = time.perf_counter()
+    run(builder(spark, sf_dir))
+    t4 = time.perf_counter()
+    return {"jobs": jobs, "stages": stages, "compiles": compiles,
+            "build": round(t1 - t0, 3), "run1": round(t2 - t1, 3), "run2": round(t4 - t3, 3)}
+
+
+def each_query(names, step) -> dict[str, dict]:
+    """``step(name)`` per query; a query that raises is shown and
+    left out of the result."""
+    out = {}
+    for name in names:
+        try:
+            out[name] = step(name)
+        except Exception as exc:  # show and continue
+            print(f"[ERR ] {name}: {type(exc).__name__}: {str(exc)[:200]}", flush=True)
+    return out
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*", help="query names (default: all)")
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument(
-        "--out",
-        default=os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "PLANS.md",
-        ),
-    )
+    ap.add_argument("--out", default=os.path.join(ROOT, "PLANS.md"))
     args = ap.parse_args()
 
     from ruleset_analysis_spark.plans.registry import all_specs
     from ruleset_analysis_spark.session import get_spark
 
-    spark = get_spark(app_name="plan-audit", cpus=8, driver_memory="8g")
-    # static plans for the readout: AQE's executed query stages print
-    # "== Final Plan ==" sections whose indentation resets, which both
-    # defeats _strip_cached_subtrees and double-prints exchanges the
-    # runtime reuses — the audit counts the STATIC plan features the
-    # plan-shape tests assert on
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sys.path.append(os.path.join(ROOT, "perfbench"))
+    from sparkstats import JvmCounters
+
     specs = all_specs()
+    names = args.names or sorted(specs)
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
+
+    spark = get_spark(app_name="plan-audit", driver_memory="8g")
+    warm_up(spark, args.sf, specs)
+    jvm = JvmCounters(spark)
+
+    def timed(name: str) -> dict:
+        rec = ledger_record(spark, specs[name].builder, name, args.sf, jvm)
+        print(f"{name:40s} build={rec['build']:7.3f} run1={rec['run1']:7.3f} "
+              f"run2={rec['run2']:7.3f} jobs={rec['jobs']:>3} "
+              f"stages={rec['stages']:>3} compiles={rec['compiles']:>4}", flush=True)
+        return rec
+
+    ledger = each_query(names, timed)
+    spark.stop()
+
+    # The static plans come from a second, cold session with AQE off,
+    # the state tests/test_plan_shape.py asserts in. In the warmed one
+    # a hot base table hides its scan's PushedFilters behind an
+    # InMemoryRelation, and a substrate persisted under AQE prints
+    # "== Final Plan ==" sections whose indentation resets, which
+    # defeats _strip_cached_subtrees. The ledger runs first so that this
+    # pass's probe actions cannot pre-compile the ledger's code.
+    spark = get_spark(app_name="plan-audit", driver_memory="8g")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    plans = each_query(names, lambda name: plan_features(specs[name].builder(spark, args.sf)))
 
     rows = []
-    for name in sorted(specs):
-        try:
-            df = specs[name].builder(spark, args.sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # builder executes eagerly and failed
-            rows.append((name, specs[name].category, "ERR", str(exc)[:40], "", "", "", "", ""))
-            continue
-        plan = _strip_cached_subtrees(plan)
-        exch = len(re.findall(r"\bExchange\b", plan))
-        bhj = plan.count("BroadcastHashJoin")
-        smj = plan.count("SortMergeJoin")
-        bnl = plan.count("BroadcastNestedLoopJoin")
-        push = "y" if re.search(r"PushedFilters: \[[^\]]", plan) else ""
-        topk = "y" if "TakeOrderedAndProject" in plan else ""
-        arrow = (
-            plan.count("ArrowEvalPython")
-            + plan.count("MapInPandas")
-            + plan.count("FlatMapGroupsInPandas")
-            + plan.count("BatchEvalUDTF")
-            + plan.count("PythonUDTF")
-        )
-        py_bad = "PY!" if "BatchEvalPython" in plan else ""
-        rows.append(
-            (
-                name,
-                specs[name].category,
-                str(exch),
-                str(bhj),
-                str(smj),
-                str(bnl),
-                push,
-                topk,
-                (str(arrow) if arrow else "") + py_bad,
-            )
-        )
+    for name in names:
+        if name in plans and name in ledger:
+            cells = [str({**plans[name], **ledger[name]}[c]) for c in COLUMNS]
+        else:
+            cells = ["ERR"] + [""] * (len(COLUMNS) - 1)
+        rows.append((name, specs[name].category, *cells))
 
+    cmd = " ".join(["python scripts/plan_audit.py", *args.names, "--sf", args.sf])
     hdr = (
-        "# PLANS — physical-plan audit of every registered query\n\n"
-        f"Generated by `python scripts/plan_audit.py --sf {args.sf}`.\n"
+        "# PLANS — physical-plan audit and first-pass ledger of every registered query\n\n"
+        f"Generated by `{cmd}`.\n"
         "Column meanings in the script docstring; the invariants the\n"
-        "numbers must respect are ASSERTED by tests/test_plan_shape.py\n"
+        "plan numbers must respect are ASSERTED by tests/test_plan_shape.py\n"
         "(BatchEvalPython banned, cartesian banned, BNLJ allowlisted to\n"
         "O(1)-row build sides, pushdown/pruning/top-k pinned per query)\n"
-        "— this file is the human-readable readout, not the enforcement.\n\n"
-        "| query | family | exch | bhj | smj | bnl | push | topk | arrow |\n"
-        "| --- | --- | --- | --- | --- | --- | --- | --- | --- |\n"
+        "— this file is the human-readable readout, not the enforcement.\n"
+        "`jobs`, `stages` and `compiles` count each query's first pass\n"
+        "(builder call plus first run) after bench.py's warm-up; the\n"
+        "build/run1/run2 seconds of the same run are in the JSON file\n"
+        "beside this one.\n\n"
+        "| query | family | " + " | ".join(COLUMNS) + " |\n"
+        + "| --- " * (len(COLUMNS) + 2) + "|\n"
     )
-    body = "".join("| " + " | ".join(r) + " |\n" for r in rows)
     with open(args.out, "w") as f:
-        f.write(hdr + body)
-    print(f"wrote {args.out}: {len(rows)} queries")
-    return 0
+        f.write(hdr + "".join("| " + " | ".join(r) + " |\n" for r in rows))
+    ledger_path = os.path.splitext(args.out)[0] + ".json"
+    with open(ledger_path, "w") as f:
+        json.dump(ledger, f, indent=1, sort_keys=True)
+    tot = {k: round(sum(v[k] for v in ledger.values()), 2)
+           for k in ("build", "run1", "run2", "jobs", "stages", "compiles")}
+    print(f"wrote {args.out}, {ledger_path}: {len(rows)} queries")
+    print("TOTALS:", json.dumps(tot))
+    return 0 if len(plans) == len(ledger) == len(names) else 1
 
 
 if __name__ == "__main__":

@@ -11,7 +11,7 @@ SF_DIR = os.environ.get("DIFF_SF_DIR", "/root/testdata/sf0.01")
 def spark():
     from ruleset_analysis_spark.session import get_spark
 
-    s = get_spark(app_name="ruleset-analysis-tests", cpus=8, driver_memory="8g")
+    s = get_spark(app_name="ruleset-analysis-tests", driver_memory="8g")
     yield s
 
 

@@ -62,3 +62,64 @@ def test_compact_bench_line_fits_the_tail():
     families = parsed["family_seconds"]
     assert set(families) == {s.category for s in specs.values()}
     assert sum(families.values()) == pytest.approx(1234.567 * len(specs))
+
+
+def test_session_defaults_record_success(monkeypatch):
+    """``ensure_session_defaults`` marks an application done only once
+    its package shipped: a failed ship is retried by the next call, and
+    concurrent first calls ship it once."""
+    import threading
+    import time
+    from types import SimpleNamespace
+
+    from ruleset_analysis_spark import session
+
+    ships = []
+
+    def ship(spark):
+        ships.append(spark.sparkContext.applicationId)
+        if len(ships) == 1:
+            raise OSError("addPyFile failed")
+        time.sleep(0.05)
+
+    class Conf(dict):
+        def set(self, key, value):
+            self[key] = value
+
+    monkeypatch.setattr(session, "_ship_package", ship)
+    monkeypatch.setattr(session, "_DEFAULTED_APPS", set())
+    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"), conf=Conf())
+    with pytest.raises(OSError):
+        session.ensure_session_defaults(app)
+    callers = [
+        threading.Thread(target=session.ensure_session_defaults, args=(app,))
+        for _ in range(8)
+    ]
+    for t in callers:
+        t.start()
+    for t in callers:
+        t.join(timeout=30)
+    assert not any(t.is_alive() for t in callers)
+    assert ships == ["app-1", "app-1"]
+    assert app.conf["spark.sql.session.timeZone"] == "UTC"
+
+
+def test_profiler_warms_like_bench():
+    """The registry profiler measures after bench.py's own warm-up, and
+    no script restates the warm-up list."""
+    import importlib.util
+    import pathlib
+
+    import bench
+
+    scripts = pathlib.Path(bench.__file__).parent / "scripts"
+    spec = importlib.util.spec_from_file_location("plan_audit", scripts / "plan_audit.py")
+    plan_audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plan_audit)
+    assert plan_audit.warm_up is bench.warm_up
+    assert plan_audit.run is bench.run
+    for path in scripts.rglob("*"):
+        if path.is_file() and path.suffix != ".pyc":
+            text = path.read_text()
+            assert "pagerank_float_fixpoint" not in text, path
+            assert "multimodal_binary_features" not in text, path
