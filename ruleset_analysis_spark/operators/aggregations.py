@@ -423,13 +423,11 @@ def date_series_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     column and its distinct types are exactly the corpus min/max and
     distinct set (nulls group and are ignored by min/max identically)
     — so the corpus is scanned once instead of three times."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events")
     daily = (
         ev.groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     bounds = daily.select(
         F.min("day").alias("lo"),
@@ -478,8 +476,6 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, and unpersisted the sketch-build corpus pass ran twice, which
     is exactly what the materialize-the-daily-sketches pattern this
     query demonstrates exists to avoid. Day-cardinality rows."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events")
     daily = (
         ev.groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -487,7 +483,7 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("user_id").alias("sk"),
             F.countDistinct("user_id").alias("exact"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     per_day = daily.select(
         F.unix_timestamp("day").alias("day_epoch"),
@@ -1047,7 +1043,7 @@ def agg_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
+        .cache()
     )
     # r10 (guide §2.4): the depth dimension is generated INLINE with
     # explode(sequence(0, depth-1)) instead of
@@ -1143,11 +1139,10 @@ def agg_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("shiftleft(CAST(1 AS BIGINT), CAST(user_id % 32 AS INT))")
         ).alias("mask")
     )
-    from pyspark import StorageLevel
 
     # three consumers (both pair sides + totals) — same persist
     # discipline as every multi-referenced substrate in this repo
-    words = words.persist(StorageLevel.MEMORY_AND_DISK)
+    words = words.cache()
     totals = words.groupBy("event_type").agg(
         F.sum(F.bit_count("mask")).alias("n")
     )
@@ -1362,8 +1357,6 @@ def _rank_pick_two_level(base, gcol, vcol, magg, picks):
     two. The relation is value-domain-bounded (|domain|/4096 rows per
     group), never corpus-sized, so the persist budget is O(buckets)
     at any scale."""
-    from pyspark import StorageLevel
-
     b2 = base.withColumn("bkt", _bucket_col(vcol))
     wg = Window.partitionBy(gcol)
     rb = b2.groupBy(gcol, "bkt").agg(magg.alias("bm"))
@@ -1375,7 +1368,7 @@ def _rank_pick_two_level(base, gcol, vcol, magg, picks):
         .over(wg.orderBy("bkt").rowsBetween(Window.unboundedPreceding, 0))
         .alias("cum"),
         F.sum("bm").over(wg).alias("tw"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).cache()
     # all crossing buckets in ONE conditional aggregation over the
     # (tiny) bucket relation, melted to (group, pick) rows — one small
     # job instead of a filter+agg+join chain per pick
@@ -1674,7 +1667,7 @@ def agg_kmv_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = (
         uh.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _KMV_K)
-        .persist()
+        .cache()
     )
     digest = F.md5(
         F.concat_ws(
@@ -2045,8 +2038,6 @@ def _value_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     taxonomy — dimension-sized at ANY corpus scale, so the persist
     budget is O(|types|·|values|), never O(corpus). With the cache the
     corpus is touched once ACROSS both queries (r9, guide §2.4)."""
-    from pyspark import StorageLevel
-
     c0 = cents("value")
     b = (
         load(spark, sf_dir, "events")
@@ -2060,7 +2051,7 @@ def _value_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         b.groupBy("event_type", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -2072,8 +2063,6 @@ def _value_grid_cum(cells: DataFrame) -> DataFrame:
     window produced — bit-identical). Same dimension-bounded budget as
     `_value_cells`; the window partition is one type's value column
     (≤ 2M rows), inside the repo's bounded-partition discipline."""
-    from pyspark import StorageLevel
-
     types = cells.select("event_type").distinct()
     values = cells.select("v").distinct()
     grid = (
@@ -2088,7 +2077,7 @@ def _value_grid_cum(cells: DataFrame) -> DataFrame:
     )
     return grid.select(
         "event_type", "v", "cnt", F.sum("cnt").over(wcum).alias("cum_le")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).cache()
 
 
 @register(
@@ -2369,8 +2358,6 @@ def agg_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (allowlisted O(1) pattern). The 9-row count relation is
     PERSISTED (r9, guide §2.4): the total derives from it, and
     unpersisted that second reference re-ran the corpus scan."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events").select(cents("value").alias("c"))
     pos = ev.filter(F.col("c").isNotNull() & (F.col("c") > 0))
     digits = pos.select(
@@ -2379,7 +2366,7 @@ def agg_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         digits.groupBy("digit")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     # JVM VALUES literal (values_df): the createDataFrame form was a
     # pickled-RDD local relation — Python workers on every run for 9
@@ -2427,13 +2414,11 @@ def _gini_moments(ev: DataFrame, gcol: str) -> DataFrame:
     relation and the fine cumulative reference it, and without the
     cache the corpus-wide pass planned and ran twice. It is
     domain-bounded (|groups| × |distinct cents|), never corpus-sized."""
-    from pyspark import StorageLevel
-
     r1 = (
         ev.withColumn("bkt", _bucket_col("c"))
         .groupBy(gcol, "bkt", "c")
         .agg(F.count(F.lit(1)).cast("long").alias("m"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     rb = r1.groupBy(gcol, "bkt").agg(F.sum("m").alias("bm"))
     wg = Window.partitionBy(gcol)

@@ -567,8 +567,6 @@ def curation_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, and unpersisted the corpus-sized tokenize-and-sum scan planned
     and ran twice (three times in curation_sample_apply, which builds
     on this query). Source-cardinality rows — trivially bounded."""
-    from pyspark import StorageLevel
-
     d = load(spark, sf_dir, "documents")
     per = (
         d.groupBy("source")
@@ -577,7 +575,7 @@ def curation_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("tok_count")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     mx = per.agg(F.expr("max(tok_count) * 4 div 5").alias("cap"))
     per = per.join(F.broadcast(mx))

@@ -76,10 +76,9 @@ def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Persisted: the jaccard/simhash queries self-join it and all three
     near-dup queries share the identical plan, so one session-wide
     cache entry replaces 2-3 recomputations per query. Size ≈ the
-    tokenized corpus; MEMORY_AND_DISK spills if it outgrows memory —
+    tokenized corpus; `.cache()` spills it to disk if it outgrows memory —
     at true 100 TB scale this is the materialize-the-shingle-table
     decision, made explicitly here."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents")
@@ -103,7 +102,7 @@ def _exploded_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         tri.groupBy("doc_id", "source", "s")
         .agg(F.lit(1))
         .select("doc_id", "source", "s")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -222,16 +221,14 @@ def _minhash_sketch(spark: SparkSession, sf_dir: str):
     joins 2-4 more times, and column pruning makes those subtrees
     canonically different, so ReuseExchange can never kick in. The
     relation is 16 longs + a count per doc — ~1/1000th of the corpus
-    at 100 TB, exactly what one deliberately persist(MEMORY_AND_DISK)s.
+    at 100 TB, exactly what one deliberately caches (spilling to disk).
     Both MinHash queries build from THIS helper, so the session cache
     holds exactly one copy of the sketch."""
-    from pyspark import StorageLevel
-
     exploded = _exploded_shingles(spark, sf_dir)
     per_doc = (
         exploded.groupBy("doc_id")
         .agg(*_mh_agg_cols())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     return exploded, per_doc
 
@@ -251,8 +248,6 @@ def _band_candidates(per_doc: DataFrame) -> DataFrame:
     bounded by banding — the same ~1/1000-corpus budget class as the
     signature cache — and dedup_near_minhash shares the identical plan,
     so one cache entry serves both queries."""
-    from pyspark import StorageLevel
-
     bands = per_doc.select(
         "doc_id",
         F.explode(
@@ -280,7 +275,7 @@ def _band_candidates(per_doc: DataFrame) -> DataFrame:
         )
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -487,14 +482,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(_SIMHASH_BITS)
         )
     )
-    from pyspark import StorageLevel
 
     # persisted: the band self-join references the sketch relation twice
     # and column pruning defeats ReuseExchange (same rationale as the
     # MinHash per_doc cache); one 64-bit long per doc
-    sk = bitsums.select("doc_id", pack.alias("simhash")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sk = bitsums.select("doc_id", pack.alias("simhash")).cache()
     bands = sk.select(
         "doc_id",
         "simhash",
@@ -643,8 +635,6 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _propagate_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     # Persist the (tiny: two longs per near-dup pair) edge list and each
     # round's label snapshot: every round references labels up to 4× and
     # edges once, so without the cache the pair-generation lineage is
@@ -657,14 +647,14 @@ def _propagate_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         dedup_ngram_jaccard(spark, sf_dir)
         .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     edges = (
         pairs.unionByName(
             pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
         )
         .toDF("u", "v")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     # Iterate ONLY the edge-connected subgraph. A doc with no near-dup
     # pair is its own cluster by definition and its label can never
@@ -973,7 +963,6 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ubiquitous shingles (df = D, idf = 0) contribute nothing and a
     df > D/2 prune would drop them from the join entirely at 100 TB
     (kept here for oracle parity)."""
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     tri = _exploded_shingles(spark, sf_dir).withColumnRenamed("s", "tri")
@@ -1002,7 +991,7 @@ def dedup_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.log(F.col("n_docs") / F.col("df")) * 1000).cast("long"),
         )
         .select("doc_id", "source", "tri", "w")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     totals = wtri.groupBy("doc_id").agg(F.sum("w").alias("tw"))
     a, b = wtri.alias("a"), wtri.alias("b")
@@ -1481,8 +1470,6 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup pipeline maintains anyway, and at scale the tuning curve
     would read that maintained sketch, so the suite-ordered cost model
     is the honest one."""
-    from pyspark import StorageLevel
-
     k_terms = F.lit(0)
     for t in _TUNE_SAMPLE_THRESHOLDS:
         k_terms = k_terms + (F.col("nd") > F.lit(t)).cast("int")
@@ -1500,7 +1487,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc_full = (
         exploded_full.groupBy("doc_id")
         .agg(*_mh_agg_cols())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     # The gated (sample) sketch is persisted in its own right: 6
     # downstream references (4 band explodes + the two size joins)
@@ -1511,7 +1498,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_doc_full.crossJoin(F.broadcast(krel))
         .filter(_gate)
         .drop("k")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
     # r9 plan collapse: the four bandings are ONE cfg-tagged band
@@ -1551,7 +1538,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.doc_id").alias("doc_b"),
         )
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     sup = cand_all.filter(F.col("cfg") == 0).select("doc_a", "doc_b")
     # r9: the verify arm's shingle relation is gated by SEMI-JOINING
@@ -1586,7 +1573,7 @@ def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
                 3 * F.col("i") >= F.col("na") + F.col("nb"), F.lit(False)
             ).alias("is_true"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     # one grouped pass over the tagged candidates replaces 4 global
     # aggregations; the left join off the literal config dim restores
@@ -1702,8 +1689,6 @@ def dedup_incremental_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to `dedup_near_minhash` — one protocol, two deployment
     modes; the oracle appends the cross-side restriction to the same
     shared `_minhash_base_cte` chain."""
-    from pyspark import StorageLevel
-
     exploded = _exploded_shingles(spark, sf_dir)
     # IDENTICAL plan to dedup_near_minhash's sketch — the is_new split
     # happens DOWNSTREAM of the persist so CacheManager's plan-identity
@@ -1713,7 +1698,7 @@ def dedup_incremental_newbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_doc = (
         exploded.groupBy("doc_id")
         .agg(*_mh_agg_cols())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     bands = per_doc.select(
         "doc_id",
@@ -1840,8 +1825,6 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     `corpus_boilerplate_ngrams` already reports per-doc, so dropping
     them HERE is correct, not lossy (df-trimmed windows can't witness
     a rare pairwise copy)."""
-    from pyspark import StorageLevel
-
     d = load(spark, sf_dir, "documents")
     tk = d.select("doc_id", tokens("text").alias("toks")).withColumn(
         "n", F.size("toks")
@@ -1862,7 +1845,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
         # referenced twice (df count + the doc-list rollup); persist is
         # the narrow (doc_id, md5) relation — cheaper than recompute,
         # same budget class as the shingle substrate
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     keep = (
         win.groupBy("h")

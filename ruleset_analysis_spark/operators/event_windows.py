@@ -184,8 +184,6 @@ def stream_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     widening the re-aggregated ``sum(n)`` to HUGEINT (now CAST back to
     BIGINT in the hour/day CTEs) and the float reintroduced by the
     cents/100.0 division (now dropped on both sides)."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events")
     # The minute tier IS the materialized continuous aggregate — so
     # materialize it: the three-tier union references its lineage three
@@ -197,7 +195,7 @@ def stream_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     minute = (
         ev.groupBy(F.date_trunc("minute", "ts").alias("b"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum(cents("value")).alias("sv"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     hour = minute.groupBy(
         F.date_trunc("hour", "b").alias("b"), "event_type"
@@ -340,14 +338,12 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort relation is PERSISTED (r9, guide §2.4): the size rollup and
     the activity join both read it, and unpersisted the signup-filtered
     corpus aggregation ran twice. User-cardinality rows."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events")
     cohort = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.date_trunc("week", F.min("ts")).alias("cw"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     sizes = cohort.groupBy("cw").agg(F.count(F.lit(1)).alias("n_cohort"))
     activity = ev.select(
@@ -1869,15 +1865,13 @@ def event_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized dedup exchange planned and ran three times — the
     cache is what makes the docstring's touched-once claim true.
     |user-days| rows of two narrow values."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     ud = (
         ev.select("user_id", F.to_date("ts").alias("d"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     dau = ud.groupBy(F.col("d").alias("report_day")).agg(
         F.countDistinct("user_id").alias("dau")

@@ -363,8 +363,6 @@ def firewall_rule_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
     now reads the PERSISTED per-rule rollup (bounded at |acls|×|rules|
     rows) instead of re-running the regex parse over the whole corpus
     a second time — one parse pass instead of two at any scale."""
-    from pyspark import StorageLevel
-
     ev = load(spark, sf_dir, "events")
     lines = ev.select(
         F.format_string(
@@ -386,7 +384,7 @@ def firewall_rule_staleness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("hits"),
             F.max("hit_epoch").alias("last_hit_epoch"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     horizon = per_rule.agg(F.max("last_hit_epoch").alias("now_epoch"))
     days_idle = F.floor(

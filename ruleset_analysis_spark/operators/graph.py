@@ -154,8 +154,6 @@ def strong_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     from .joins import basket_pair_counts
 
     pairs = basket_pair_counts(spark, sf_dir)
@@ -165,7 +163,7 @@ def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.filter(F.col("n_orders") >= strong_tau(p))
         .select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
         .repartition(n_parts, "u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -353,8 +351,6 @@ def _pagerank_out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     edges = cooccur_edges(spark, sf_dir)
     # SIZE the persisted edge partitioning from the edge count instead
     # of inheriting spark.sql.shuffle.partitions: every one of the 8
@@ -374,7 +370,7 @@ def _out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = edges.repartition(int(n_parts), "src")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # out-degree rides the edge relation: one wide row per src
-    return edges.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    return edges.join(deg, "src").cache()
 
 
 def pagerank_float_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,8 +497,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     fires across canonically-different pruned subtrees); edge
     generation rides the shared MEMOIZED pair substrate
     (joins.basket_pair_counts) and the persisted strong-edge cache."""
-    from pyspark import StorageLevel
-
     e = strong_cooccur_edges(spark, sf_dir)
     deg = (
         e.select(F.col("u").alias("w"))
@@ -525,7 +519,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("t"),
             F.greatest("rku", "rkv").alias("t_rk"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     w1, w2, c = o.alias("w1"), o.alias("w2"), o.alias("c")
     return (
@@ -674,11 +668,9 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per node — one relation serves the wedge join and both degree
     # lookups. Persisted: three references, and the wedge self-join
     # prunes columns differently per side so ReuseExchange never fires.
-    from pyspark import StorageLevel
-
     a2 = (
         adj.join(F.broadcast(hubs), adj.w == F.col("hub"), "left_anti")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     deg2 = a2.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
     x, y = a2.alias("x"), a2.alias("y")

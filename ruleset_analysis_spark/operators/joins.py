@@ -530,8 +530,6 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     baskets = (
         load(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -551,7 +549,7 @@ def _basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("p.part_a", "p.part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -757,8 +755,6 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer day arithmetic (inclusive endpoints), bit-identical
     cross-engine. The interval relation itself is one groupBy over the
     order→lineitem join (keyed on orderkey, AQE-coalesced)."""
-    from pyspark import StorageLevel
-
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
@@ -776,7 +772,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").alias("lo"),
             "hi",
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     a, b = iv.alias("a"), iv.alias("b")
     overlap = (

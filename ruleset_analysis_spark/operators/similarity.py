@@ -87,10 +87,8 @@ def normalized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans it maxIter times), and the plan is identical across queries,
     so one session-wide cache entry serves them all. Size is
     |vectors| × dim doubles — the normalized copy of a table one would
-    keep hot on a serving cluster anyway; MEMORY_AND_DISK spills
+    keep hot on a serving cluster anyway; `.cache()` spills to disk
     rather than OOMs if it ever doesn't fit."""
-    from pyspark import StorageLevel
-
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double("embedding").alias("vd")
     )
@@ -104,7 +102,7 @@ def normalized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(
             "vd", lambda x: x / F.nullif(F.col("nrm"), F.lit(0.0))
         ).alias("vn"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).cache()
 
 
 @register(
@@ -362,7 +360,6 @@ def _lsh_buckets(spark: SparkSession, e: DataFrame) -> DataFrame:
     relation more than once, and column pruning defeats ReuseExchange;
     the relation is 3 ints per (vector, table) — a true sketch."""
     import numpy as np
-    from pyspark import StorageLevel
 
     planes = _PLANES.reshape(_LSH_TABLES * _LSH_BITS_MAX, 64).T.copy()
     weights = 1 << np.arange(_LSH_BITS_MAX, dtype=np.int64)
@@ -413,7 +410,7 @@ def _lsh_buckets(spark: SparkSession, e: DataFrame) -> DataFrame:
     return (
         e.crossJoin(F.broadcast(_lsh_depth_rel(e)))
         .mapInPandas(kernel, "vec_id long, table_id int, bucket int")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -835,7 +832,6 @@ def _quantized(e: DataFrame) -> DataFrame:
     qabs = F.aggregate(
         "q", F.lit(0).cast("long"), lambda acc, x: acc + F.abs(x)
     )
-    from pyspark import StorageLevel
 
     # persisted (plan-keyed by the CacheManager, one entry per corpus):
     # IVF assignment, the k-means iterations (3 rounds × 2 references
@@ -848,7 +844,7 @@ def _quantized(e: DataFrame) -> DataFrame:
         .withColumn("qabs", qabs)
         .filter(F.col("qabs") > 0)
         .drop("qabs")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
 
 
@@ -872,8 +868,6 @@ def _ivf_index(
 def _build_ivf_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, DataFrame]:
-    from pyspark import StorageLevel
-
     qv = _quantized(normalized_vectors(spark, sf_dir))
     # nlist seed vectors by md5 order — deterministic, scale-stable,
     # and O(nlist·d) to the driver (model parameters, like the KMeans
@@ -903,7 +897,7 @@ def _build_ivf_index(
         (F.array_position(scores, F.array_max(scores)) - 1)
         .cast("int")
         .alias("cell"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).cache()
     return seed_qs, assigned
 
 

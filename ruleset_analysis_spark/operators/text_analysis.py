@@ -85,13 +85,11 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix is the canonical TF-IDF pipeline decision — it is the
     rolled-up token table (≈ distinct (doc, term) pairs), the same
     budget class as the dedup family's shingle substrate."""
-    from pyspark import StorageLevel
-
     tf = (
         _tokens_exploded(spark, sf_dir)
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = load(spark, sf_dir, "documents").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -666,15 +664,13 @@ def text_collocations_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm). Same pairs by construction: slice(tk,1,n-1)[i] = tk[i],
     slice(tk,2,n-1)[i] = tk[i+1]; docs with < 2 tokens (and NULL text,
     whose size() is NULL) produce no bigram either way."""
-    from pyspark import StorageLevel
-
     d = load(spark, sf_dir, "documents")
     toked = d.select(tokens("text").alias("tk"))
     uni = (
         toked.select(F.explode("tk").alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     tot = uni.agg(F.sum("n").cast("long").alias("big_n"))
     bg = (
@@ -906,8 +902,6 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup shingle substrate. The left-context count c1 is Σ n2 per w1
     over the vocabulary²-bounded c2 — the identical integers the third
     corpus pass used to recompute."""
-    from pyspark import StorageLevel
-
     tok = (
         load(spark, sf_dir, "documents")
         .select("doc_id", F.posexplode(tokens("text")).alias("pos", "term"))
@@ -920,7 +914,7 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("term", 1).over(w).alias("w2"),
         )
         .filter(F.col("w2").isNotNull())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     c2 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n2"))
     c1 = c2.groupBy("w1").agg(F.sum("n2").cast("long").alias("n1"))
@@ -1032,8 +1026,6 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     second grouping level extends the recipe past 10^12 docs). The
     n < 10 degenerate case holds too: duplicate-rank boundaries
     collapse in the count-of-strictly-smaller expression."""
-    from pyspark import StorageLevel
-
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = d.select("doc_id", F.explode(tokens("text")).alias("term"))
     # Per-doc token counts, persisted (r9, guide §2.4): doc-sized (two
@@ -1047,7 +1039,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     dtc = (
         toks.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_tok"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     docs = dtc.select("doc_id")
     # integer division, NOT floor(x/4096): the float quotient is exact

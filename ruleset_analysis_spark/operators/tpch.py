@@ -511,8 +511,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scalar max and the final join, and unpersisted each reference
     re-ran the fact-table aggregate; supplier-cardinality rows, so the
     cache is dimension-sized at any scale."""
-    from pyspark import StorageLevel
-
     li = (
         load(spark, sf_dir, "lineitem")
         .filter(
@@ -524,7 +522,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = (
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(F.sum(_revenue_cents()).alias("total_revenue_cents"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     mx = rev.agg(F.max("total_revenue_cents").alias("_mx"))
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -1222,8 +1220,6 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension join — two fact passes where the docstring promises one.
     The cache holds only the one-brand slice (a small corpus
     fraction), the standard materialize-the-slice decision."""
-    from pyspark import StorageLevel
-
     p = (
         load(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#23") & (F.col("p_size") <= 25))
@@ -1234,7 +1230,7 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey", "l_quantity", "l_extendedprice")
         .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_partkey", "l_quantity", "l_extendedprice")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     pavg = pl.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(F.col("l_quantity").cast("long")).alias("qsum"),
@@ -1379,8 +1375,6 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference re-ran the fact⋈orders join and its aggregate — two fact
     passes. The cache holds one row per distinct (order, supplier)
     pair — already the rolled-up relation, a fraction of the fact."""
-    from pyspark import StorageLevel
-
     o = (
         load(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
@@ -1399,7 +1393,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_pair = (
         j.groupBy("l_orderkey", "l_suppkey")
         .agg(F.max("late").alias("any_late"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .cache()
     )
     per_order = per_pair.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("n_supp"),

@@ -120,13 +120,10 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Python UDTFs ride Arrow batches instead of pickled rows
         spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        try:
-            if int(spark.conf.get("spark.sql.shuffle.partitions")) > 64:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
-                )
-        except Exception:  # conf unreadable — leave as-is
-            pass
+        if shuffle_partitions(spark) > 64:  # an unreadable value reads as the default
+            spark.conf.set(
+                "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
+            )
         _ship_package(spark)
         _DEFAULTED_APPS.add(app_id)
     return spark

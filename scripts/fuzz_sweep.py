@@ -9,7 +9,7 @@ actually grades — *value agreement with the DuckDB oracle on a fresh
 draw of the data*. It regenerates all ten tables with the same schemas
 and value domains as ``TESTDATA.md``'s generator but a different seed
 and deliberately nastier structure, then runs the full differential
-sweep against the mutated directory:
+sweep against the mutated directory (``scripts/check.py --sf DIR``):
 
 * ``events``: new user/value/ts draws, a heavy-user skew slice, 1% of
   timestamps pushed late (out-of-order arrival), same-(user,ts)
@@ -43,14 +43,12 @@ from __future__ import annotations
 import argparse
 import os
 import shutil
+import subprocess
 import sys
-import time
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = "/root/testdata/sf0.01"
 
@@ -256,43 +254,11 @@ def main() -> int:
     out_dir = args.out or f"/tmp/fuzz_sf0.01_seed{args.seed}"
     print(f"generating mutated corpus (seed={args.seed}, base={args.base}) -> {out_dir}")
     generate(args.seed, out_dir, args.base)
-
-    from ruleset_analysis_spark.oracle import compare, duck_connect
-    from ruleset_analysis_spark.plans.registry import all_specs
-    from ruleset_analysis_spark.session import get_spark
-
-    specs = all_specs()
-    names = args.names or sorted(specs)
-    unknown = [n for n in names if n not in specs]
-    if unknown:
-        print(f"unknown queries: {unknown}")
-        return 2
-
-    spark = get_spark(app_name="fuzz_sweep", driver_memory="8g")
-    con = duck_connect(out_dir)
-    failures: list[str] = []
-    for name in names:
-        spec = specs[name]
-        t0 = time.time()
-        try:
-            df = spec.builder(spark, out_dir)
-            res = compare(name, df, con, spec.oracle)
-        except Exception as e:  # noqa: BLE001 — a crash IS the finding
-            print(f"[ERR] {name}: {type(e).__name__}: {str(e)[:200]}")
-            failures.append(name)
-            continue
-        print(f"{res} ({time.time() - t0:.2f}s)", flush=True)
-        if not res.ok:
-            failures.append(name)
-
-    print()
-    if failures:
-        print(f"{len(failures)} FAILURES on mutated corpus: {failures}")
-    else:
-        print(f"{len(names)}/{len(names)} ok on mutated corpus (seed={args.seed})")
+    check = os.path.join(os.path.dirname(os.path.abspath(__file__)), "check.py")
+    rc = subprocess.call([sys.executable, check, "--sf", out_dir, *args.names])
     if not args.keep and args.out is None:
         shutil.rmtree(out_dir, ignore_errors=True)
-    return 1 if failures else 0
+    return rc
 
 
 if __name__ == "__main__":

@@ -8,12 +8,13 @@ Two passes over the queries, in name order:
 1. **Ledger.** The session is warmed with ``bench.py``'s own
    ``warm_up`` (warmup queries, pagerank substrate, hot base tables)
    and every query is materialized with bench's noop sink under AQE,
-   so the times are bench's. Each query runs under its own job group:
+   so the times are bench's. Queries run one at a time, and job ids
+   are sequential within one SparkContext, so a query's jobs are the
+   ids submitted between its builder call and the end of its first run:
 
-   * ``jobs``     — jobs of the query's group over its first pass (the
-     builder call plus the first run; in-builder probe actions count,
-     a streaming query's micro-batches do not: Structured Streaming
-     runs them under the stream's own job group)
+   * ``jobs``     — jobs of the query's first pass (the builder call
+     plus the first run; in-builder probe actions and a streaming
+     query's micro-batches count)
    * ``stages``   — stages of those jobs that ran at least one task; a
      stage skipped because its shuffle output was reused does not
      count (as in perfbench's ``scheduler.stages``)
@@ -105,27 +106,34 @@ def plan_features(df) -> dict[str, str]:
     }
 
 
-def group_counts(sc, group: str) -> tuple[int, int]:
-    """(jobs, stages that ran a task) of one job group so far."""
+def jobs_submitted(sc) -> int:
+    """Jobs submitted so far in this SparkContext; the next job's id."""
+    return sc._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def jobs_since(sc, first_job: int) -> tuple[int, int]:
+    """(jobs, stages that ran a task) of the jobs with ids from
+    ``first_job`` on."""
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    jobs = range(first_job, jobs_submitted(sc))
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    stages = {s for info in infos if info for s in info.stageIds}
     ran = [tracker.getStageInfo(s) for s in stages]
     return len(jobs), sum(1 for s in ran if s and s.numCompletedTasks > 0)
 
 
-def ledger_record(spark, builder, name: str, sf_dir: str, jvm) -> dict:
+def ledger_record(spark, builder, sf_dir: str, jvm) -> dict:
     """One ledger record: first-pass counts and build/run1/run2 times."""
     sc = spark.sparkContext
-    sc.setJobGroup(name, f"plan_audit: {name}")
+    first_job = jobs_submitted(sc)
     compiles0 = jvm.codegen()[0]
     t0 = time.perf_counter()
     df = builder(spark, sf_dir)
     t1 = time.perf_counter()
     run(df)
     t2 = time.perf_counter()
-    jobs, stages = group_counts(sc, name)
+    jobs, stages = jobs_since(sc, first_job)
     compiles = jvm.codegen()[0] - compiles0
     t3 = time.perf_counter()
     run(builder(spark, sf_dir))
@@ -171,7 +179,7 @@ def main() -> int:
     jvm = JvmCounters(spark)
 
     def timed(name: str) -> dict:
-        rec = ledger_record(spark, specs[name].builder, name, args.sf, jvm)
+        rec = ledger_record(spark, specs[name].builder, args.sf, jvm)
         print(f"{name:40s} build={rec['build']:7.3f} run1={rec['run1']:7.3f} "
               f"run2={rec['run2']:7.3f} jobs={rec['jobs']:>3} "
               f"stages={rec['stages']:>3} compiles={rec['compiles']:>4}", flush=True)

@@ -454,6 +454,7 @@ def main() -> int:
     args = ap.parse_args()
     names = args.queries or FAMILIES[args.family]
 
+    from bench import run
     from ruleset_analysis_spark.plans.registry import all_specs
     from ruleset_analysis_spark.session import get_spark
 
@@ -486,7 +487,7 @@ def main() -> int:
         for m in args.mult:
             best, nrows = None, None
             try:
-                # Time a NOOP-SINK WRITE (bench.py's convention), NOT
+                # Time bench.py's noop-sink write (bench.run), NOT
                 # .count(): count() lets Catalyst prune every column the
                 # final filter doesn't reference, so a query whose cost
                 # lives in row-preserving projections (as-of fills,
@@ -514,9 +515,7 @@ def main() -> int:
                 try:
                     for _ in range(2):
                         t0 = time.time()
-                        spec.builder(spark, dirs[m]).write.format("noop").mode(
-                            "overwrite"
-                        ).save()
+                        run(spec.builder(spark, dirs[m]))
                         dt = time.time() - t0
                         best = dt if best is None else min(best, dt)
                     nrows = spec.builder(spark, dirs[m]).count()

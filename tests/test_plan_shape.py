@@ -36,7 +36,7 @@ PYTHON_ALLOWED = {
     "udtf_table_arg_grouped",
     "pack_greedy_bins",
     "embed_pca_project",
-    # r9: the LSH bucket substrate moved to an Arrow mapInPandas kernel
+    # the LSH bucket substrate is an Arrow mapInPandas kernel
     # (fold-order-preserving accumulation, bit-identical to the JVM HOF
     # form — see similarity._lsh_buckets); every consumer of the
     # signature relation therefore carries one declared MapInPandas
@@ -45,17 +45,15 @@ PYTHON_ALLOWED = {
     "sim_knn_graph",
     "sim_outlier_lowmax",
     "embed_recall_eval",
-    # r9 optimization round: Lloyd assignment+partials moved to an
-    # Arrow kernel (integer-exact; see similarity._km_partials_kernel)
-    # — the interpreted zip_with/aggregate distance fold and the 64×
-    # posexplode per update were the cost, same CodegenFallback tax
-    # the LSH substrate paid before its kernel rewrite
+    # Lloyd assignment+partials run in an Arrow kernel (integer-exact;
+    # see similarity._km_partials_kernel): an interpreted
+    # zip_with/aggregate distance fold and a 64× posexplode per update
+    # pay the same CodegenFallback tax as a JVM HOF LSH substrate
     "embed_kmeans_clusters",
-    # r9 optimization round: label-blocked tau scoring routed through
-    # the same grouped Arrow kernel (similarity._bucket_pair_scores);
-    # the label self-join evaluated the per-pair HOF fold INTERPRETED
-    # twice (join condition + projection). Bit-identical by the twin
-    # test's tau arm.
+    # label-blocked tau scoring runs in the same grouped Arrow kernel
+    # (similarity._bucket_pair_scores); a label self-join evaluates the
+    # per-pair HOF fold INTERPRETED twice (join condition +
+    # projection). Bit-identical by the twin test's tau arm.
     "sim_pairwise_threshold",
     "dedup_embedding_cosine",
 }

@@ -123,3 +123,32 @@ def test_profiler_warms_like_bench():
             text = path.read_text()
             assert "pagerank_float_fixpoint" not in text, path
             assert "multimodal_binary_features" not in text, path
+
+
+def test_substrates_share_the_hot_table_storage_level(spark):
+    """Every relation the engine persists is stored like the hot base
+    tables bench.py pins with ``.cache()``: Spark's
+    ``spark.sql.defaultCacheStorageLevel``, deserialized. No operator
+    names a storage level of its own."""
+    from ruleset_analysis_spark.plans.registry import all_specs
+    from ruleset_analysis_spark.sources.parquet import load
+
+    sf_dir = "/root/testdata/sf0.001"
+    hot = load(spark, sf_dir, "events")
+    want = hot.cache().storageLevel
+    hot.unpersist()
+    assert want.deserialized
+
+    specs = all_specs()
+    for name in ("dedup_ngram_jaccard", "embed_knn_classify",
+                 "graph_triangle_count", "text_zipf_slope"):
+        _noop(specs[name].builder(spark, sf_dir))
+
+    levels = [rdd.getStorageLevel()
+              for rdd in spark.sparkContext._jsc.getPersistentRDDs().values()]
+    assert levels
+    for level in levels:
+        assert (level.useDisk(), level.useMemory(), level.useOffHeap(),
+                level.deserialized(), level.replication()) == (
+            want.useDisk, want.useMemory, want.useOffHeap,
+            want.deserialized, want.replication), level.description()
