@@ -47,6 +47,14 @@ lazy DataFrame composition:
   day with the same config renders no literal and plans no CIDR
   parse: the analyzed plan's only ``RLIKE``s are the flow side's two
   address parses;
+* reports reuse each other's flows: the job is ``usage_report`` over
+  ``log_flows``, and the flows are memoized per session on the
+  fingerprint of the files Spark lists for the log path
+  (``sources.parquet.files_memo``). The first report over some files
+  caches nothing; the second caches that same flows object, so every
+  later report over those files (after a config edit too) scans the
+  in-memory flows instead of re-reading and re-parsing the gzip. When
+  the files change, the old flows are unpersisted and rebuilt;
 * the rule identities are folded into the per-rule aggregate as extra
   input rows (``identities UNION ALL matched`` grouped by ``(acl,
   rule_id)``; only identity rows carry ``action``, only matched rows a
@@ -73,6 +81,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.net import ipv4_to_long_sql
 from .sources.asa_config import compile_ruleset, rule_bounds
+from .sources.parquet import files_memo
 from .sources.text_logs import asa_hit_fields, read_log_lines
 
 
@@ -133,27 +142,47 @@ def _first_match(flows: DataFrame, bounded_rules: DataFrame) -> DataFrame:
     )
 
 
-def run_ruleset_analysis(
-    spark: SparkSession, log_path: str, config_text: str
-) -> DataFrame:
-    """Full pipeline: log dir/glob (.gz ok) + raw ASA config text →
-    per-rule usage report ``(acl, rule_id, action, hits, n_flows,
-    n_sources, status)`` covering EVERY configured rule, UNUSED rows
-    included — the reference's deliverable (hit report + zero-hit
-    removal candidates) in one DataFrame."""
-    # pre-aggregate to distinct flows: containment-join work is then
-    # O(|flows| × |rules|) regardless of raw log volume. The fields are
-    # the UNFILTERED projection: a candidate line without a match has
-    # acl = '', which the acl equi-join drops (config ACL names are
-    # whitespace-split tokens, never ''), so no filter re-runs the regex
-    flows = (
-        asa_hit_fields(read_log_lines(spark, log_path))
-        .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
-        .agg(F.expr("sum(hit_cnt) AS hit_cnt"))
-    )
-    # compiled once per session and config text: later days reuse both
-    # literal relations as they are
-    rules, identities = compile_ruleset(spark, config_text)
+def log_flows(spark: SparkSession, log_path: str) -> DataFrame:
+    """The day's flows: ``sum(hit_cnt)`` per 5-tuple ``(acl, protocol,
+    src_ip, dst_ip, dst_port)`` over the log dir/glob (.gz ok).
+
+    Pre-aggregating to distinct flows makes the containment join
+    O(|flows| × |rules|) regardless of raw log volume. The fields are
+    the UNFILTERED projection: a candidate line without a match has
+    ``acl = ''``, which the ``acl`` equi-join drops (config ACL names
+    are whitespace-split tokens, never ``''``), so no filter re-runs
+    the regex.
+
+    Reused per session and log files (``sources.parquet.files_memo``):
+    the first call returns the lazy aggregate and caches nothing, so a
+    one-shot report pays no cache build; a later call over the same
+    files returns the same object, cached from that second use on, so
+    later reports (another config included) read the flows from memory
+    instead of re-reading and re-parsing the gzip."""
+    lines = read_log_lines(spark, log_path)
+    built = False
+
+    def build() -> DataFrame:
+        nonlocal built
+        built = True
+        return (
+            asa_hit_fields(lines)
+            .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
+            .agg(F.expr("sum(hit_cnt) AS hit_cnt"))
+        )
+
+    flows = files_memo(spark, log_path, lines.inputFiles(), "flows", build)
+    if not built and not flows.is_cached:
+        flows.cache()
+    return flows
+
+
+def usage_report(flows: DataFrame, rules: DataFrame, identities: DataFrame) -> DataFrame:
+    """Per-rule usage report ``(acl, rule_id, action, hits, n_flows,
+    n_sources, status)`` of :func:`log_flows` against a compiled
+    ruleset (``asa_config.compile_ruleset``: the bounded rules and the
+    statement identities): the first match, then one per-rule aggregate
+    that lists every statement, UNUSED ones included."""
     matched = _first_match(flows, rules).selectExpr(
         "acl", "rule_id", "hit_cnt", "src_ip", "1 AS flow"
     )
@@ -176,6 +205,22 @@ def run_ruleset_analysis(
             F.expr("CASE WHEN sum(hit_cnt) IS NULL THEN 'UNUSED' ELSE 'ACTIVE' END AS status"),
         )
     )
+
+
+def run_ruleset_analysis(
+    spark: SparkSession, log_path: str, config_text: str
+) -> DataFrame:
+    """Full pipeline: log dir/glob (.gz ok) + raw ASA config text →
+    per-rule usage report ``(acl, rule_id, action, hits, n_flows,
+    n_sources, status)`` covering EVERY configured rule, UNUSED rows
+    included — the reference's deliverable (hit report + zero-hit
+    removal candidates) in one DataFrame. It is
+    :func:`usage_report` over :func:`log_flows` and the compiled
+    ruleset."""
+    flows = log_flows(spark, log_path)
+    # compiled once per session and config text: later days reuse both
+    # literal relations as they are
+    return usage_report(flows, *compile_ruleset(spark, config_text))
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -50,10 +50,13 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Compiles of one full registry pass at sf0.1 with the cache unbounded
 # (CodegenMetrics.METRIC_COMPILATION_TIME, PySpark 4.1.2): 2,617. That
-# counts cache entries, not sources: the cache keys on the class loader
-# too, and local mode compiles each class twice (a one-stage
-# ``spark.range(1)`` query counts 2). Rounded up to the next power of
-# two above 2x for headroom.
+# counts cache entries, not sources: the cache keys on (context class
+# loader, source), and local mode compiles each whole-stage class twice
+# from the same source, once on the driver thread (the compile check
+# before execution) and once in the first task, whose executor class
+# loader differs; later tasks hit the task-side entry (a one-stage
+# ``spark.range(1)`` query counts 2, with 1 or 8 tasks). Rounded up to
+# the next power of two above 2x for headroom.
 CODEGEN_CACHE_ENTRIES = 8192
 
 # applications whose defaults are set and package shipped; the lock

@@ -17,6 +17,7 @@ from __future__ import annotations
 import hashlib
 import os
 import threading
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -82,8 +83,8 @@ def fingerprint(paths) -> str:
     return h.hexdigest()[:16]
 
 
-# memo scope (a corpus root, or ("text", digest)) -> (applicationId,
-# fingerprint, {name: value})
+# memo scope (a corpus root, ("text", digest) or ("files", path)) ->
+# (applicationId, fingerprint, {name: value})
 _MEMO: dict[object, tuple[str, str, dict]] = {}
 _MEMO_LOCK = threading.Lock()
 
@@ -91,15 +92,15 @@ _MEMO_LOCK = threading.Lock()
 def _scoped(spark: SparkSession, scope, fp: str, name: str, build, on_change=None):
     """The memo itself: ``build()``'s result under ``scope``, stored
     once per (``applicationId``, ``fp``). A different fingerprint for a
-    scope drops the scope's entries (after ``on_change()`` when the
-    context is the same); racing builders keep whichever value landed
-    first; a ``build`` that raises stores nothing."""
+    scope drops the scope's entries (after ``on_change(old_entries)``
+    when the context is the same); racing builders keep whichever value
+    landed first; a ``build`` that raises stores nothing."""
     key = (spark.sparkContext.applicationId, fp)
     with _MEMO_LOCK:
         held = _MEMO.get(scope)
         if held is None or held[:2] != key:
             if held is not None and held[0] == key[0] and on_change is not None:
-                on_change()
+                on_change(held[2])
             held = _MEMO[scope] = (*key, {})
     entries = held[2]
     if name not in entries:
@@ -133,7 +134,7 @@ def corpus_memo(spark: SparkSession, corpus_dir: str, name: str, build):
         files = []
     return _scoped(
         spark, root, fingerprint(files), name, build,
-        on_change=lambda: spark.catalog.refreshByPath(root),
+        on_change=lambda _old: spark.catalog.refreshByPath(root),
     )
 
 
@@ -146,6 +147,33 @@ def text_memo(spark: SparkSession, text: str, name: str, build):
     hit); a ``build`` that raises stores nothing."""
     digest = hashlib.sha256(text.encode()).hexdigest()
     return _scoped(spark, ("text", digest), digest, name, build)
+
+
+def files_memo(spark: SparkSession, path: str, files: list[str], name: str, build):
+    """``build()``'s result for the files Spark reads under ``path`` (a
+    directory or glob of log files), under the same memo and rules as
+    :func:`corpus_memo`. ``files`` are the URIs Spark lists for
+    ``path`` (``DataFrame.inputFiles()``: Hadoop glob syntax applied,
+    hidden files skipped); the key is ``applicationId`` plus their
+    :func:`fingerprint`. The scope is the path as given, made absolute
+    (``dir`` and ``dir/`` share one).
+
+    On a fingerprint change every DataFrame the scope held is
+    unpersisted before the new value is built: a new lazy plan over the
+    same path equals the old one, so the CacheManager would otherwise
+    serve the old files' blocks. A path with any non-local (not
+    ``file:``) file is not memoized: ``build()`` runs on every call."""
+    uris = [urlparse(f) for f in files]
+    if any(u.scheme != "file" for u in uris):
+        return build()
+
+    def unpersist(old: dict) -> None:
+        for value in old.values():
+            if isinstance(value, DataFrame):
+                value.unpersist()
+
+    fp = fingerprint(unquote(u.path) for u in uris)
+    return _scoped(spark, ("files", os.path.abspath(path)), fp, name, build, on_change=unpersist)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

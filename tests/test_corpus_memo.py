@@ -5,7 +5,8 @@ a fresh build after they change, nothing stored when a build raises —
 is pinned here on a scratch directory; the end-to-end rewrite check
 against the oracle lives in tests/test_fuzz_corpus.py. ``text_memo``
 is the same memo scoped by an in-memory text instead of a directory,
-under the same contract.
+under the same contract, and ``files_memo`` the same memo scoped by a
+log path and keyed on the files Spark lists for it.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import time
 
 import pytest
 
-from ruleset_analysis_spark.sources.parquet import corpus_memo, text_memo
+from ruleset_analysis_spark.sources.parquet import corpus_memo, files_memo, text_memo
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -131,3 +132,33 @@ def test_text_memo_failed_build_stores_nothing(spark):
     with pytest.raises(ValueError):
         text_memo(spark, text, "probe", boom)
     assert text_memo(spark, text, "probe", lambda: "built") == "built"
+
+
+def test_files_memo_keys_on_the_listed_files(spark, tmp_path):
+    """One scope per path as given (``dir`` and ``dir/`` share it),
+    keyed on the listed files: the same object while they are
+    unchanged, a fresh build after one changes; a superseded DataFrame
+    is unpersisted; non-local files are never memoized."""
+    d = tmp_path / "logs"
+    d.mkdir()
+    f = d / "a.log"
+    f.write_text("one\n")
+    files = [f"file://{f}"]
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(len(calls))
+
+    first = files_memo(spark, str(d), files, "x", build)
+    assert files_memo(spark, f"{d}/", files, "x", build) is first
+    assert len(calls) == 1
+    first.cache()
+    f.write_text("two!\n")  # rewritten in place: size and mtime move
+    second = files_memo(spark, str(d), files, "x", build)
+    assert second is not first and len(calls) == 2
+    assert not first.is_cached
+    remote = ["hdfs://nn/logs/a.log"]
+    assert files_memo(spark, "hdfs://nn/logs", remote, "x", build) is not (
+        files_memo(spark, "hdfs://nn/logs", remote, "x", build)
+    )

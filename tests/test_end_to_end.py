@@ -269,6 +269,117 @@ def test_compiled_ruleset_follows_the_config_text(
     assert sorted(again.values()) == sorted(map(tuple, ref.collect()))
 
 
+def _write_log(path, n, first=0):
+    """A gzipped log file of ``n`` 106100 lines hitting rule 1 (tcp/https)
+    and rule 2 (udp/domain) of ``CONFIG``."""
+    lines = []
+    for i in range(first, first + n):
+        dst, port, proto = ("10.0.1.5", 443, "tcp") if i % 3 else ("10.0.1.9", 53, "udp")
+        lines.append(
+            f"%ASA-6-106100: access-list OUTSIDE_IN permitted {proto} "
+            f"outside/198.51.100.{i % 200 + 1}({30000 + i}) -> dmz/{dst}({port}) "
+            f"hit-cnt {i % 4 + 1} 300-second interval [0x{i:x}, 0x0]"
+        )
+    with gzip.open(path, "wt") as f:
+        f.write("\n".join(lines) + "\n")
+
+
+def _outside_cached_relations(plan: str) -> str:
+    """A physical plan's text without the subtrees of its
+    ``InMemoryRelation`` nodes, which print the plan each cached
+    relation was built from rather than what the query runs."""
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    kept, cut = [], None
+    for ln in plan.splitlines():
+        if cut is not None and depth(ln) > cut:
+            continue
+        cut = depth(ln) if "InMemoryRelation" in ln else None
+        kept.append(ln)
+    return "\n".join(kept)
+
+
+def test_report_follows_the_log_files(spark, tmp_path, report_from_public_pieces):
+    """The flows are memoized per session on the listed files'
+    fingerprint and cached from their second use. In one session and
+    one log directory, each step reports twice (so the current flows
+    are cached before the next change) and both reports must equal the
+    report composed from the public pieces over the current files:
+    reported twice as written, a file rewritten in place with another
+    size, a file added, a file removed; then the same sequence through
+    a glob. A lazy plan over the same directory equals the cached one,
+    so a memo that does not unpersist the superseded flows (or scopes
+    them by file set) answers from the old files' blocks."""
+    from ruleset_analysis_spark.pipeline import log_flows, run_ruleset_analysis
+
+    d = tmp_path / "logs"
+    d.mkdir()
+
+    def check(path):
+        ref = sorted(map(tuple, report_from_public_pieces(path, CONFIG).collect()))
+        for _ in range(2):
+            got = sorted(map(tuple, run_ruleset_analysis(spark, path, CONFIG).collect()))
+            assert got == ref
+        return sum(r[3] for r in got)
+
+    hits = []
+    for path in (str(d), f"{d}/*.gz"):
+        _write_log(d / "a.log.gz", 15)
+        _write_log(d / "b.log.gz", 30, first=15)
+        hits.append(check(path))
+        assert log_flows(spark, path).is_cached
+        _write_log(d / "a.log.gz", 40)  # rewritten in place, another size
+        hits.append(check(path))
+        _write_log(d / "c.log.gz", 100, first=70)  # added
+        hits.append(check(path))
+        (d / "b.log.gz").unlink()  # removed
+        hits.append(check(path))
+        (d / "c.log.gz").unlink()
+    # every step changed the answer, so a stale one cannot pass as fresh
+    assert len(set(hits[:4])) == 4 and hits[4:] == hits[:4], hits
+
+
+def test_one_shot_report_caches_nothing(spark, tmp_path):
+    """A single report (the CLI's case) persists nothing: the flows are
+    cached only from their second use, so a one-shot job pays no cache
+    build."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    def cached_rdds():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+                if i.numCachedPartitions() > 0}
+
+    d = tmp_path / "day"
+    d.mkdir()
+    _write_log(d / "fw.log.gz", 50)
+    before = cached_rdds()
+    report = run_ruleset_analysis(spark, str(d), CONFIG)
+    sinks.write_parquet(report, str(tmp_path / "out"), partition_by=["status"])
+    assert cached_rdds() <= before
+
+
+def test_config_edit_reruns_only_the_match(spark, tmp_path, report_from_public_pieces):
+    """Config A twice caches the day's flows; config B (one rule
+    appended) then plans the flows as an ``InMemoryTableScan`` with no
+    ``FileScan text``: no re-read, no re-parse, and B's rows equal the
+    public-pieces report for B."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    d = tmp_path / "day"
+    d.mkdir()
+    _write_log(d / "fw.log.gz", 60)
+    for _ in range(2):
+        run_ruleset_analysis(spark, str(d), CONFIG).collect()
+    config_b = CONFIG + "access-list RETIRED extended permit udp any any eq domain\n"
+    report = run_ruleset_analysis(spark, str(d), config_b)
+    rows = sorted(map(tuple, report.collect()))
+    plan = _outside_cached_relations(report._jdf.queryExecution().executedPlan().toString())
+    assert "InMemoryTableScan" in plan and "FileScan text" not in plan, plan
+    assert rows == sorted(map(tuple, report_from_public_pieces(str(d), config_b).collect()))
+    assert ("RETIRED", 2, "permit", 0, 0, 0, "UNUSED") in rows
+
+
 def test_pipeline_cli_main(spark, archive, tmp_path, capsys):
     """The CLI entrypoint (run_analysis.sh analog): args in, partitioned
     parquet out, per-status summary printed — and the summary agrees
