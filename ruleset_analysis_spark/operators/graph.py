@@ -137,17 +137,21 @@ def strong_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     graded tier, see _STRONG_TAU_THRESHOLDS), persisted once per
     corpus (``corpus_memo``).
 
-    r9 optimization (guide §2.2): the persisted relation is
-    REPARTITIONED from the pair count before caching instead of
-    inheriting the pair substrate's 32 partitions — every wedge
-    consumer (triangles, k-core, link prediction, degree histogram)
-    runs one stage per cached partition per reference, so 32
-    partitions for a few-thousand-row graded edge relation was pure
-    task-launch overhead (the same scheduler tax the pagerank edge
-    cache already sheds with the same formula). The divisor is the
-    PAIR count — the one integer already collected for τ, so sizing
-    costs no extra job — and at 100 TB the same formula yields
-    thousands of partitions; partitioning never affects values."""
+    The persisted relation is hash-partitioned on ``u`` into a count
+    sized from the pair count (one partition per ~2M pairs) — the one
+    integer already collected for τ, so sizing costs no extra job; at
+    100 TB the same formula yields thousands of partitions, and
+    partitioning never affects values. The count is explicit on
+    purpose, although the session lets AQE size other persisted
+    relations (``session.py``): AQE never coalesces a
+    ``repartition(n, col)``, so the cache keeps a hash partitioning on
+    ``u`` that the wedge consumers' ``u``-keyed aggregates and joins
+    read without a shuffle. An AQE-sized ``repartition("u")`` is
+    coalesced, and a coalesced read satisfies no such requirement:
+    ``scripts/plan_audit.py`` at sf0.001 then counted 1-2 more
+    exchanges in each of
+    triangles, link prediction and the degree histogram (link
+    prediction 13 -> 18 first-pass jobs)."""
     return corpus_memo(
         spark, sf_dir, "strong_edges", lambda: _strong_edges(spark, sf_dir)
     )
@@ -352,17 +356,20 @@ def _pagerank_out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _out_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cooccur_edges(spark, sf_dir)
-    # SIZE the persisted edge partitioning from the edge count instead
-    # of inheriting spark.sql.shuffle.partitions: every one of the 8
-    # unrolled rounds runs one stage per edge partition, so a 70k-row
-    # graph spread over 32 partitions pays ~770 task launches of pure
-    # scheduler overhead per query (measured: ~9.3 s hot at sf0.1; 1
-    # partition per ~2M edge rows cuts it to the single-digit stages
-    # the data actually needs). Partition count NEVER affects values —
-    # the quantized update is associative BIGINT arithmetic — and at
-    # 100 TB the same formula yields thousands of partitions, so the
-    # plan keeps its cluster shape; AQE cannot do this for us because
-    # the join aligns to the CACHED relation's fixed partitioning.
+    # SIZE the persisted edge partitioning from the edge count (1
+    # partition per ~2M edge rows): every one of the 8 unrolled rounds
+    # runs one task per edge partition, so a 70k-row graph spread over
+    # 32 partitions paid ~770 task launches of pure scheduler overhead
+    # per query (~9.3 s hot at sf0.1). Partition count NEVER affects
+    # values — the quantized update is associative BIGINT arithmetic —
+    # and at 100 TB the same formula yields thousands of partitions.
+    # The count stays explicit although the session lets AQE size
+    # persisted relations: each round's join aligns to the CACHED
+    # relation's hash partitioning on src, which AQE keeps only for a
+    # repartition(n, col). An AQE-sized repartition("src") is
+    # coalesced, its cache reports no src partitioning, and the query
+    # ran 2 more first-pass jobs (scripts/plan_audit.py, sf0.001:
+    # 17 -> 19) and slower warm runs.
     from .joins import basket_pair_counts
 
     m2 = 2 * basket_pair_counts(spark, sf_dir).count()  # symmetric rows

@@ -53,8 +53,13 @@ lazy DataFrame composition:
   (``sources.parquet.files_memo``). The first report over some files
   caches nothing; the second caches that same flows object, so every
   later report over those files (after a config edit too) scans the
-  in-memory flows instead of re-reading and re-parsing the gzip. When
-  the files change, the old flows are unpersisted and rebuilt;
+  in-memory flows instead of re-reading and re-parsing the gzip. The
+  flows are cached in the layout the first match reads: with their
+  numeric addresses already computed, and in as many partitions as
+  AQE sizes them to (one for a day's few hundred flows; see
+  ``session.py``), so a cached report parses nothing and runs a few
+  tasks. When the files change, the old flows are unpersisted and
+  rebuilt, and a log path whose files are all gone is dropped;
 * the rule identities are folded into the per-rule aggregate as extra
   input rows (``identities UNION ALL matched`` grouped by ``(acl,
   rule_id)``; only identity rows carry ``action``, only matched rows a
@@ -88,7 +93,9 @@ from .sources.text_logs import asa_hit_fields, read_log_lines
 def match_flows_to_rules(flows: DataFrame, rules: DataFrame) -> DataFrame:
     """First-match-wins rule attribution for aggregated flows.
 
-    ``flows``: (acl, protocol, src_ip, dst_ip, dst_port, hit_cnt[,...]).
+    ``flows``: (acl, protocol, src_ip, dst_ip, dst_port, hit_cnt[,...]);
+    flows that already carry numeric ``src_addr``/``dst_addr`` (those of
+    :func:`log_flows`) are matched on them.
     ``rules``: the ``asa_config.RULE_SCHEMA`` dimension.
 
     A flow matches a rule when the ACL names agree, the rule's protocol
@@ -102,21 +109,14 @@ def match_flows_to_rules(flows: DataFrame, rules: DataFrame) -> DataFrame:
 
 def _first_match(flows: DataFrame, bounded_rules: DataFrame) -> DataFrame:
     """:func:`match_flows_to_rules` against rules whose networks are
-    already numeric bounds (``asa_config.rule_bounds``)."""
+    already numeric bounds (``asa_config.rule_bounds``). Flows without
+    ``src_addr``/``dst_addr`` get them computed here."""
     r = F.broadcast(bounded_rules.alias("r"))
-    # non-nullable on purpose: a nullable address makes Catalyst infer
-    # isnotnull(addr) from the join predicate and push it through the
-    # flow aggregate to the line scan, re-parsing every raw line; -1
-    # is inside no rule's [lo, hi] (lo >= 0)
-    f = flows.selectExpr(
-        "*",
-        f"coalesce({ipv4_to_long_sql('src_ip')}, -1) AS src_addr",
-        f"coalesce({ipv4_to_long_sql('dst_ip')}, -1) AS dst_addr",
-    ).alias("f")
-    # the port range is tested on coalesce(dst_port, -1) for the same
-    # reason (port_lo >= 0, so -1 matches nothing): a bare nullable
-    # dst_port would bring back an inferred isnotnull(try_cast(...))
-    # that re-runs the line regex per log line
+    f = (flows if "src_addr" in flows.columns else _with_addresses(flows)).alias("f")
+    # the port range is tested on coalesce(dst_port, -1) for the reason
+    # the addresses are non-nullable (port_lo >= 0, so -1 matches
+    # nothing): a bare nullable dst_port would bring back an inferred
+    # isnotnull(try_cast(...)) that re-runs the line regex per log line
     cond = F.expr(
         "f.acl = r.acl"
         " AND (r.protocol = 'ip' OR r.protocol = f.protocol)"
@@ -142,9 +142,26 @@ def _first_match(flows: DataFrame, bounded_rules: DataFrame) -> DataFrame:
     )
 
 
+def _with_addresses(flows: DataFrame) -> DataFrame:
+    """``flows`` plus their numeric ``src_addr``/``dst_addr``.
+
+    Non-nullable on purpose: a nullable address makes Catalyst infer
+    isnotnull(addr) from the join predicate and push it through the
+    flow aggregate to the line scan, re-parsing every raw line; -1 is
+    inside no rule's [lo, hi] (lo >= 0)."""
+    return flows.selectExpr(
+        "*",
+        f"coalesce({ipv4_to_long_sql('src_ip')}, -1) AS src_addr",
+        f"coalesce({ipv4_to_long_sql('dst_ip')}, -1) AS dst_addr",
+    )
+
+
 def log_flows(spark: SparkSession, log_path: str) -> DataFrame:
     """The day's flows: ``sum(hit_cnt)`` per 5-tuple ``(acl, protocol,
-    src_ip, dst_ip, dst_port)`` over the log dir/glob (.gz ok).
+    src_ip, dst_ip, dst_port)`` over the log dir/glob (.gz ok), with
+    each flow's addresses as the numbers the first match compares
+    (``src_addr``, ``dst_addr``: non-nullable, ``-1`` for a malformed
+    address).
 
     Pre-aggregating to distinct flows makes the containment join
     O(|flows| × |rules|) regardless of raw log volume. The fields are
@@ -158,14 +175,16 @@ def log_flows(spark: SparkSession, log_path: str) -> DataFrame:
     one-shot report pays no cache build; a later call over the same
     files returns the same object, cached from that second use on, so
     later reports (another config included) read the flows from memory
-    instead of re-reading and re-parsing the gzip."""
+    instead of re-reading and re-parsing the gzip. The addresses are
+    part of what is cached, so a cached report runs no address parse
+    either."""
     lines = read_log_lines(spark, log_path)
     built = False
 
     def build() -> DataFrame:
         nonlocal built
         built = True
-        return (
+        return _with_addresses(
             asa_hit_fields(lines)
             .groupBy("acl", "protocol", "src_ip", "dst_ip", "dst_port")
             .agg(F.expr("sum(hit_cnt) AS hit_cnt"))

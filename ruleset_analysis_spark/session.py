@@ -36,6 +36,20 @@ Why each conf matters:
   registry passes at sf0.01. It is a static conf, read once when the
   JVM builds the cache, so ``ensure_session_defaults`` cannot raise it
   on an externally built session: that session keeps Spark's 100.
+* ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``
+  — lets AQE coalesce the final shuffle of every persisted relation
+  (``.cache()``: memoized substrates, the report's flows) to the
+  data's size, as it does for any other query. Spark's default keeps
+  a cached plan at ``spark.sql.shuffle.partitions`` partitions, so a
+  day's 500 flows sat in 8 partitions and every scan of them ran 8
+  tasks. Spark's caveat: a query that reads the cached data "may
+  need an extra shuffle", because a coalesced cache reports no key
+  partitioning for a join or aggregate on that key to reuse (graph.py
+  keeps two explicit edge partitionings for that reason). PLANS.md
+  counts every query's exchanges and, from its AQE-on ledger pass,
+  the jobs and stages of its first run, so such a shuffle shows up
+  there. It is a runtime SQL conf, so an externally built session
+  gets it too.
 """
 
 from __future__ import annotations
@@ -123,6 +137,10 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Python UDTFs ride Arrow batches instead of pickled rows
         spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
+        # AQE sizes every persisted relation's partitions to its data
+        spark.conf.set(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         if shuffle_partitions(spark) > 64:  # an unreadable value reads as the default
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)

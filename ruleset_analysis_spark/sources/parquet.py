@@ -86,6 +86,8 @@ def fingerprint(paths) -> str:
 # memo scope (a corpus root, ("text", digest) or ("files", path)) ->
 # (applicationId, fingerprint, {name: value})
 _MEMO: dict[object, tuple[str, str, dict]] = {}
+# ("files", path) scope -> the local files it was last keyed on
+_LISTED: dict[tuple[str, str], list[str]] = {}
 _MEMO_LOCK = threading.Lock()
 
 
@@ -161,19 +163,32 @@ def files_memo(spark: SparkSession, path: str, files: list[str], name: str, buil
     On a fingerprint change every DataFrame the scope held is
     unpersisted before the new value is built: a new lazy plan over the
     same path equals the old one, so the CacheManager would otherwise
-    serve the old files' blocks. A path with any non-local (not
-    ``file:``) file is not memoized: ``build()`` runs on every call."""
+    serve the old files' blocks. Every call over local files first
+    drops the scopes none of whose files exists any more (a deleted log
+    directory), with what they held, so reported paths do not stay
+    resident until the SparkContext stops. A path with any non-local
+    (not ``file:``) file is not memoized: ``build()`` runs on every
+    call."""
     uris = [urlparse(f) for f in files]
     if any(u.scheme != "file" for u in uris):
         return build()
+    local = [unquote(u.path) for u in uris]
+    scope = ("files", os.path.abspath(path))
+    app_id = spark.sparkContext.applicationId
+    with _MEMO_LOCK:
+        for gone in [s for s, held in _LISTED.items() if not any(map(os.path.exists, held))]:
+            del _LISTED[gone]
+            entries = _MEMO.pop(gone, None)
+            if entries is not None and entries[0] == app_id:
+                _unpersist(entries[2])
+        _LISTED[scope] = local
+    return _scoped(spark, scope, fingerprint(local), name, build, on_change=_unpersist)
 
-    def unpersist(old: dict) -> None:
-        for value in old.values():
-            if isinstance(value, DataFrame):
-                value.unpersist()
 
-    fp = fingerprint(unquote(u.path) for u in uris)
-    return _scoped(spark, ("files", os.path.abspath(path)), fp, name, build, on_change=unpersist)
+def _unpersist(entries: dict) -> None:
+    for value in entries.values():
+        if isinstance(value, DataFrame):
+            value.unpersist()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -340,23 +340,73 @@ def test_report_follows_the_log_files(spark, tmp_path, report_from_public_pieces
     assert len(set(hits[:4])) == 4 and hits[4:] == hits[:4], hits
 
 
+def _cached_rdds(spark) -> dict:
+    """Cached RDDs of the session: id -> (partitions, cached partitions)."""
+    return {i.id(): (i.numPartitions(), i.numCachedPartitions())
+            for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            if i.numCachedPartitions() > 0}
+
+
 def test_one_shot_report_caches_nothing(spark, tmp_path):
     """A single report (the CLI's case) persists nothing: the flows are
     cached only from their second use, so a one-shot job pays no cache
     build."""
     from ruleset_analysis_spark.pipeline import run_ruleset_analysis
 
-    def cached_rdds():
-        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-                if i.numCachedPartitions() > 0}
-
     d = tmp_path / "day"
     d.mkdir()
     _write_log(d / "fw.log.gz", 50)
-    before = cached_rdds()
+    before = set(_cached_rdds(spark))
     report = run_ruleset_analysis(spark, str(d), CONFIG)
     sinks.write_parquet(report, str(tmp_path / "out"), partition_by=["status"])
-    assert cached_rdds() <= before
+    assert set(_cached_rdds(spark)) <= before
+
+
+def test_cached_report_reads_one_match_ready_partition(spark, tmp_path):
+    """A small day's third report scans the flows cached by the second
+    in one partition (AQE sizes the cached plan to the data), and runs
+    neither the log scan nor an address parse: outside the cached
+    relations its plan has no ``FileScan text`` and no ``RLIKE``,
+    because the flows are cached with their numeric addresses."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    d = tmp_path / "day"
+    d.mkdir()
+    _write_log(d / "fw.log.gz", 80)
+    before = _cached_rdds(spark)
+    for _ in range(3):
+        report = run_ruleset_analysis(spark, str(d), CONFIG)
+        report.collect()
+    added = {k: v for k, v in _cached_rdds(spark).items() if k not in before}
+    assert list(added.values()) == [(1, 1)], added
+    plan = _outside_cached_relations(report._jdf.queryExecution().executedPlan().toString())
+    assert "InMemoryTableScan" in plan, plan
+    assert "FileScan text" not in plan and "RLIKE" not in plan.upper(), plan
+
+
+def test_deleted_log_paths_leave_the_memo(spark, tmp_path):
+    """Three log directories reported twice each (so their flows are
+    cached) and then deleted hold no cached block once a fourth
+    directory is reported."""
+    import shutil
+
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    before = set(_cached_rdds(spark))
+    for k in range(3):
+        d = tmp_path / f"day{k}"
+        d.mkdir()
+        _write_log(d / "fw.log.gz", 20 + k, first=k)
+        for _ in range(2):
+            run_ruleset_analysis(spark, str(d), CONFIG).collect()
+    assert len(set(_cached_rdds(spark)) - before) == 3
+    for k in range(3):
+        shutil.rmtree(tmp_path / f"day{k}")
+    d = tmp_path / "day3"
+    d.mkdir()
+    _write_log(d / "fw.log.gz", 30)
+    run_ruleset_analysis(spark, str(d), CONFIG).collect()
+    assert set(_cached_rdds(spark)) <= before
 
 
 def test_config_edit_reruns_only_the_match(spark, tmp_path, report_from_public_pieces):

@@ -104,6 +104,22 @@ def test_session_defaults_record_success(monkeypatch):
     assert app.conf["spark.sql.session.timeZone"] == "UTC"
 
 
+def test_cached_plans_may_change_their_partitioning(spark, monkeypatch):
+    """AQE may coalesce a persisted relation's partitions: the conf is
+    set on a ``get_spark`` session and on a session defaulted only
+    through ``ensure_session_defaults``."""
+    from ruleset_analysis_spark import session
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    assert spark.conf.get(key) == "true"
+    fresh = spark.newSession()  # shares the context, not the SQL confs
+    assert fresh.conf.get(key) == "false"
+    monkeypatch.setattr(session, "_ship_package", lambda _spark: None)
+    monkeypatch.setattr(session, "_DEFAULTED_APPS", set())
+    session.ensure_session_defaults(fresh)
+    assert fresh.conf.get(key) == "true"
+
+
 def test_profiler_warms_like_bench():
     """The registry profiler measures after bench.py's own warm-up, and
     no script restates the warm-up list."""
