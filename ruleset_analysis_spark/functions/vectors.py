@@ -2,10 +2,17 @@
 
 All JVM-side higher-order functions (Spark ≥3.1) — no Python in the row
 path, no explode/shuffle: a dot product over a 64-dim embedding is one
-codegen'd fold per row. Elements are cast to double *before*
-arithmetic so accumulation runs in double precision, matching an
-oracle that sums unnested doubles (float32 accumulation would drift at
-the 1e-6 level and break rounded comparisons).
+fold per row. The fold is not compiled: in Spark 4.1.2
+``ArrayAggregate``, ``ZipWith`` and ``ArrayTransform`` implement
+``CodegenFallback``, so the generated stage around them calls their
+interpreted ``eval`` and every lambda runs once per element, per row.
+The fold is kept anyway because its sum is a sequential left-to-right
+double accumulation, the order the DuckDB oracles' normalize-then-dot
+SQL is written against, and the oracle parity of every rounded cosine
+relies on it. Elements are cast to double *before* arithmetic so
+accumulation runs in double precision, matching an oracle that sums
+unnested doubles (float32 accumulation would drift at the 1e-6 level
+and break rounded comparisons).
 """
 
 from __future__ import annotations

@@ -523,7 +523,9 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair (second exchange). Measured vs the distinct+self-join form at
     sf0.1: 1.35 s vs 1.75 s warm — one fewer exchange, and the join's
     probe/build of the whole item relation becomes per-row array
-    algebra inside codegen."""
+    algebra. That algebra is interpreted, not compiled: in Spark 4.1.2
+    ``ArrayTransform`` is ``CodegenFallback``, so the generated stage
+    evaluates each pair-building lambda per element through ``eval``."""
     return corpus_memo(
         spark, sf_dir, "basket_pairs", lambda: _basket_pairs(spark, sf_dir)
     )

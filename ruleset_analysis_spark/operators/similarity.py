@@ -88,9 +88,29 @@ def normalized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     so one session-wide cache entry serves them all. Size is
     |vectors| × dim doubles — the normalized copy of a table one would
     keep hot on a serving cluster anyway; `.cache()` spills to disk
-    rather than OOMs if it ever doesn't fit."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double("embedding").alias("vd")
+    rather than OOMs if it ever doesn't fit.
+
+    The raw rows are spread round-robin over ``defaultParallelism``
+    partitions before the per-vector projections. A corpus file is one
+    parquet row group, so ``embeddings`` scans as one partition, and
+    the cache and every consumer's per-vector work (scoring folds,
+    k-means assignment, LSH signatures) inherited it: at sf0.1 on a
+    4-core host ``embed_knn_classify``'s scoring stage ran its 74,556
+    dot products as one task of 0.20-0.23 s with three cores idle.
+    Spread, that stage runs 4 tasks in 0.07-0.09 s, and perfbench's
+    ``substrates_sf0.1`` ``warm_pass_s`` fell from a median 1.436 s to
+    1.294 s over fifteen alternating seed pairs, 12 of them faster
+    (``embed_knn_classify`` warm 0.419 s to 0.305 s, faster in all
+    15). Spreading after
+    the projections instead gained less (−9.6% in a prototype), and
+    spreading every hot table in ``load()`` made first passes slower.
+    AQE never coalesces a ``repartition(n)``, so the count holds under
+    ``canChangeCachedPlanOutputPartitioning``."""
+    e = (
+        load(spark, sf_dir, "embeddings")
+        .select("vec_id", "label", "embedding")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select("vec_id", "label", as_double("embedding").alias("vd"))
     )
     with_norm = e.select("vec_id", "label", "vd", norm(F.col("vd")).alias("nrm"))
     # nullif: a zero-norm (all-zero) vector yields NULL components —

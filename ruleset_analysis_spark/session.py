@@ -57,6 +57,7 @@ from __future__ import annotations
 import os
 import tempfile
 import threading
+import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -73,9 +74,11 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # the next power of two above 2x for headroom.
 CODEGEN_CACHE_ENTRIES = 8192
 
-# applications whose defaults are set and package shipped; the lock
-# makes concurrent first calls wait for the one that does the work
-_DEFAULTED_APPS: set[str] = set()
+# sessions whose runtime confs are set, and applications whose package
+# is shipped; the lock makes concurrent first calls wait for the one
+# that does the work
+_DEFAULTED_SESSIONS: weakref.WeakSet = weakref.WeakSet()
+_SHIPPED_APPS: set[str] = set()
 _DEFAULTS_LOCK = threading.Lock()
 
 
@@ -122,16 +125,20 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def ensure_session_defaults(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable defaults to any session. Memoized per
-    application — load() calls this on every table load, and the py4j
-    conf round-trips are pure overhead after the first call. An
-    application counts as done only once its confs are set and the
-    package is shipped, so a call that raised is retried by the next."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _DEFAULTED_APPS:
+    """Apply runtime-settable defaults to any session.
+
+    Runtime SQL confs belong to one SparkSession (``spark.newSession()``
+    starts from the context's confs, not its parent's), so they are set
+    once per session; the package is shipped once per application,
+    whose Python workers every session shares. Memoized, because load()
+    calls this on every table load and the py4j conf round-trips are
+    pure overhead after the first call. A session counts as done only
+    once its confs are set and its application's package is shipped,
+    so a call that raised is retried by the next."""
+    if spark in _DEFAULTED_SESSIONS:
         return spark
     with _DEFAULTS_LOCK:
-        if app_id in _DEFAULTED_APPS:
+        if spark in _DEFAULTED_SESSIONS:
             return spark
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -145,8 +152,11 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
             spark.conf.set(
                 "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
             )
-        _ship_package(spark)
-        _DEFAULTED_APPS.add(app_id)
+        app_id = spark.sparkContext.applicationId
+        if app_id not in _SHIPPED_APPS:
+            _ship_package(spark)
+            _SHIPPED_APPS.add(app_id)
+        _DEFAULTED_SESSIONS.add(spark)
     return spark
 
 

@@ -203,12 +203,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     re-infers the footer schema and rebuilds the file index on every
     call (~0.1-0.25 s of driver work), and returning the same object is
     what the CacheManager keys substrate persists and hot tables on.
+    The memo is per SparkContext, so every session that calls this is
+    defaulted here, outside it: a ``spark.newSession()`` that only hits
+    the memo still gets its runtime confs.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    ensure_session_defaults(spark)
 
     def build() -> DataFrame:
-        ensure_session_defaults(spark)
         df = spark.read.parquet(path_for(sf_dir, name))
         return normalize_event_ts(df) if name == "events" else df
 

@@ -18,6 +18,8 @@ Two passes over the queries, in name order:
    * ``stages``   — stages of those jobs that ran at least one task; a
      stage skipped because its shuffle output was reused does not
      count (as in perfbench's ``scheduler.stages``)
+   * ``tasks``    — tasks those stages completed; a stage of one task
+     over work worth more runs on one core while the others idle
    * ``compiles`` — whole-stage codegen compiles over the same span
      (``JvmCounters``)
    * ``build``, ``run1``, ``run2`` — seconds of the builder call, the
@@ -61,7 +63,7 @@ sys.path.insert(0, ROOT)
 from bench import run, warm_up  # noqa: E402
 
 COLUMNS = ("exch", "bhj", "smj", "bnl", "push", "topk", "arrow",
-           "jobs", "stages", "compiles")
+           "jobs", "stages", "tasks", "compiles")
 
 
 def _strip_cached_subtrees(plan: str) -> str:
@@ -111,16 +113,16 @@ def jobs_submitted(sc) -> int:
     return sc._jsc.sc().dagScheduler().numTotalJobs()
 
 
-def jobs_since(sc, first_job: int) -> tuple[int, int]:
-    """(jobs, stages that ran a task) of the jobs with ids from
-    ``first_job`` on."""
+def jobs_since(sc, first_job: int) -> tuple[int, int, int]:
+    """(jobs, stages that ran a task, tasks those stages completed) of
+    the jobs with ids from ``first_job`` on."""
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = range(first_job, jobs_submitted(sc))
     infos = [tracker.getJobInfo(j) for j in jobs]
     stages = {s for info in infos if info for s in info.stageIds}
-    ran = [tracker.getStageInfo(s) for s in stages]
-    return len(jobs), sum(1 for s in ran if s and s.numCompletedTasks > 0)
+    ran = [s for s in map(tracker.getStageInfo, stages) if s and s.numCompletedTasks > 0]
+    return len(jobs), len(ran), sum(s.numCompletedTasks for s in ran)
 
 
 def ledger_record(spark, builder, sf_dir: str, jvm) -> dict:
@@ -133,12 +135,12 @@ def ledger_record(spark, builder, sf_dir: str, jvm) -> dict:
     t1 = time.perf_counter()
     run(df)
     t2 = time.perf_counter()
-    jobs, stages = jobs_since(sc, first_job)
+    jobs, stages, tasks = jobs_since(sc, first_job)
     compiles = jvm.codegen()[0] - compiles0
     t3 = time.perf_counter()
     run(builder(spark, sf_dir))
     t4 = time.perf_counter()
-    return {"jobs": jobs, "stages": stages, "compiles": compiles,
+    return {"jobs": jobs, "stages": stages, "tasks": tasks, "compiles": compiles,
             "build": round(t1 - t0, 3), "run1": round(t2 - t1, 3), "run2": round(t4 - t3, 3)}
 
 
@@ -182,7 +184,8 @@ def main() -> int:
         rec = ledger_record(spark, specs[name].builder, args.sf, jvm)
         print(f"{name:40s} build={rec['build']:7.3f} run1={rec['run1']:7.3f} "
               f"run2={rec['run2']:7.3f} jobs={rec['jobs']:>3} "
-              f"stages={rec['stages']:>3} compiles={rec['compiles']:>4}", flush=True)
+              f"stages={rec['stages']:>3} tasks={rec['tasks']:>4} "
+              f"compiles={rec['compiles']:>4}", flush=True)
         return rec
 
     ledger = each_query(names, timed)
@@ -216,7 +219,7 @@ def main() -> int:
         "(BatchEvalPython banned, cartesian banned, BNLJ allowlisted to\n"
         "O(1)-row build sides, pushdown/pruning/top-k pinned per query)\n"
         "— this file is the human-readable readout, not the enforcement.\n"
-        "`jobs`, `stages` and `compiles` count each query's first pass\n"
+        "`jobs`, `stages`, `tasks` and `compiles` count each query's first pass\n"
         "(builder call plus first run) after bench.py's warm-up; the\n"
         "build/run1/run2 seconds of the same run are in the JSON file\n"
         "beside this one.\n\n"
@@ -229,7 +232,7 @@ def main() -> int:
     with open(ledger_path, "w") as f:
         json.dump(ledger, f, indent=1, sort_keys=True)
     tot = {k: round(sum(v[k] for v in ledger.values()), 2)
-           for k in ("build", "run1", "run2", "jobs", "stages", "compiles")}
+           for k in ("build", "run1", "run2", "jobs", "stages", "tasks", "compiles")}
     print(f"wrote {args.out}, {ledger_path}: {len(rows)} queries")
     print("TOTALS:", json.dumps(tot))
     return 0 if len(plans) == len(ledger) == len(names) else 1

@@ -585,6 +585,81 @@ def test_bucket_pair_scoring_never_rejoins_payloads(spark, name):
         )
 
 
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _shuffles_outside_caches(plan) -> int:
+    """Shuffle exchanges of a physical plan and of its subqueries. An
+    InMemoryTableScan is a leaf, so the stored plan of a persisted
+    relation (built once, then scanned) is not walked; unlike
+    ``scripts/plan_audit.py``'s text stripping, this also holds when
+    that plan printed AQE "Final Plan" sections."""
+    here = int(plan.nodeName() == "Exchange")
+    below = _seq(plan.children()) + _seq(plan.subqueries())
+    return here + sum(map(_shuffles_outside_caches, below))
+
+
+# static shuffle count (AQE off, persisted relations not walked) of
+# every query that reads similarity.normalized_vectors, as PLANS.md
+# counted them before the substrate was spread
+_SIMILARITY_EXCHANGES = {
+    "dedup_embedding_cosine": 2, "embed_kmeans_clusters": 2,
+    "embed_knn_classify": 2, "embed_mmr_rerank": 0, "embed_recall_eval": 4,
+    "sim_ann_ivf": 0, "sim_ann_lsh": 2, "sim_cosine_topk": 1,
+    "sim_knn_graph": 2, "sim_outlier_lowmax": 3, "sim_pairwise_bucketed": 2,
+    "sim_pairwise_threshold": 2,
+}
+
+
+def test_normalized_vectors_are_spread_before_their_projections(spark):
+    """The normalized-vector substrate is spread round-robin over
+    ``defaultParallelism`` partitions below its per-vector projections
+    (cast, norm, divide), so the build and every consumer's per-vector
+    work run one task per core; the cached relation keeps that count
+    under AQE (``canChangeCachedPlanOutputPartitioning``), every
+    partition holds rows, and the consumers plan no shuffle more."""
+    from ruleset_analysis_spark.operators.similarity import normalized_vectors
+
+    cores = spark.sparkContext.defaultParallelism
+    vectors = normalized_vectors(spark, SF_DIR)
+    cached = (
+        spark._jsparkSession.sharedState().cacheManager()
+        .lookupCachedData(vectors._jdf).get().cachedRepresentation().cacheBuilder()
+    )
+    plan = cached.cachedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    chain = []  # root to leaf, codegen wrappers skipped
+    while plan is not None:
+        if not plan.nodeName().startswith(("WholeStageCodegen", "InputAdapter")):
+            chain.append(plan)
+        kids = _seq(plan.children())
+        plan = kids[0] if kids else None
+    names = [p.nodeName() for p in chain]
+    assert names[:4] == ["Project", "Project", "Project", "Exchange"], names
+    assert all("lambdafunction" in p.toString() for p in chain[:3]), names
+    assert chain[3].outputPartitioning().toString() == f"RoundRobinPartitioning({cores})"
+
+    assert cached.cachedColumnBuffers().getNumPartitions() == cores
+    used = vectors.select(F.spark_partition_id().alias("p")).distinct().collect()
+    assert sorted(r.p for r in used) == list(range(cores))
+
+    specs = all_specs()
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got = {
+            name: _shuffles_outside_caches(
+                specs[name].builder(spark, SF_DIR)._jdf.queryExecution().executedPlan()
+            )
+            for name in _SIMILARITY_EXCHANGES
+        }
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    assert got == _SIMILARITY_EXCHANGES
+
+
 def test_values_df_matches_create_dataframe(spark):
     """values_df (r10, guide §4) must be a DROP-IN twin of
     spark.createDataFrame(rows, ddl): identical analyzed schema

@@ -1767,3 +1767,60 @@ def test_ruleset_report_equals_join_of_its_public_pieces(spark, report_from_publ
         assert report.columns == ref.columns
         assert [f.dataType for f in report.schema] == [f.dataType for f in ref.schema]
         assert sorted(map(tuple, report.collect())) == sorted(map(tuple, ref.collect()))
+
+
+# ------------------------------------------- similarity substrate layout
+
+# every registered query that reads similarity.normalized_vectors
+_SIMILARITY_CONSUMERS = (
+    "sim_cosine_topk", "sim_pairwise_threshold", "dedup_embedding_cosine",
+    "sim_ann_lsh", "sim_pairwise_bucketed", "sim_ann_ivf",
+    "embed_knn_classify", "embed_kmeans_clusters", "embed_mmr_rerank",
+    "sim_knn_graph", "sim_outlier_lowmax", "embed_recall_eval",
+)
+
+
+@pytest.fixture(scope="module")
+def similarity_rows_by_partitions(spark):
+    """{partitions: {query: sorted rows}} for every similarity consumer
+    on sf0.001, with ``normalized_vectors`` spread over 1 partition (a
+    one-row-group corpus file's own layout), over the session's
+    ``defaultParallelism`` and over 7. Each layout starts from an empty
+    corpus memo, so fitted models (k-means centroids, the IVF index)
+    are fitted on that layout too."""
+    from pyspark import SparkContext
+
+    from ruleset_analysis_spark.operators.similarity import normalized_vectors
+    from ruleset_analysis_spark.plans.registry import all_specs
+    from ruleset_analysis_spark.sources import parquet
+
+    sf_dir = "/root/testdata/sf0.001"
+    specs = all_specs()
+    cores = spark.sparkContext.defaultParallelism
+    out = {}
+    for n in (1, cores, 7):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(parquet, "_MEMO", {})
+            mp.setattr(SparkContext, "defaultParallelism", property(lambda _sc: n))
+            vectors = normalized_vectors(spark, sf_dir)
+            assert vectors.rdd.getNumPartitions() == n
+            out[n] = {
+                name: sorted(map(tuple, specs[name].builder(spark, sf_dir).collect()), key=repr)
+                for name in _SIMILARITY_CONSUMERS
+            }
+            if n != cores:
+                vectors.unpersist()  # the session's own layout stays cached
+    return out
+
+
+@pytest.mark.parametrize("name", _SIMILARITY_CONSUMERS)
+def test_similarity_rows_do_not_depend_on_the_substrate_partitions(
+    similarity_rows_by_partitions, name
+):
+    """Spreading the normalized-vector substrate over the cores changes
+    where each vector is scored, never the answer: every consumer
+    returns the same rows, bit for bit, whatever the partition count."""
+    rows = {n: by_query[name] for n, by_query in similarity_rows_by_partitions.items()}
+    assert rows[1], name
+    for n, got in rows.items():
+        assert got == rows[1], (name, n)

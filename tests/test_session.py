@@ -65,11 +65,12 @@ def test_compact_bench_line_fits_the_tail():
 
 
 def test_session_defaults_record_success(monkeypatch):
-    """``ensure_session_defaults`` marks an application done only once
-    its package shipped: a failed ship is retried by the next call, and
-    concurrent first calls ship it once."""
+    """``ensure_session_defaults`` marks a session done only once its
+    application's package shipped: a failed ship is retried by the
+    next call, and concurrent first calls ship it once."""
     import threading
     import time
+    import uuid
     from types import SimpleNamespace
 
     from ruleset_analysis_spark import session
@@ -86,9 +87,14 @@ def test_session_defaults_record_success(monkeypatch):
         def set(self, key, value):
             self[key] = value
 
+    class Session:  # a stand-in that, unlike SimpleNamespace, takes weak references
+        def __init__(self, app_id):
+            self.sparkContext = SimpleNamespace(applicationId=app_id)
+            self.conf = Conf()
+
     monkeypatch.setattr(session, "_ship_package", ship)
-    monkeypatch.setattr(session, "_DEFAULTED_APPS", set())
-    app = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app-1"), conf=Conf())
+    app_id = f"app-{uuid.uuid4()}"  # an application no other test has defaulted
+    app = Session(app_id)
     with pytest.raises(OSError):
         session.ensure_session_defaults(app)
     callers = [
@@ -100,11 +106,18 @@ def test_session_defaults_record_success(monkeypatch):
     for t in callers:
         t.join(timeout=30)
     assert not any(t.is_alive() for t in callers)
-    assert ships == ["app-1", "app-1"]
+    assert ships == [app_id, app_id]
     assert app.conf["spark.sql.session.timeZone"] == "UTC"
 
+    # a second session of the same application gets its own confs and
+    # reuses the shipped package
+    other = Session(app_id)
+    session.ensure_session_defaults(other)
+    assert ships == [app_id, app_id]
+    assert other.conf["spark.sql.session.timeZone"] == "UTC"
 
-def test_cached_plans_may_change_their_partitioning(spark, monkeypatch):
+
+def test_cached_plans_may_change_their_partitioning(spark):
     """AQE may coalesce a persisted relation's partitions: the conf is
     set on a ``get_spark`` session and on a session defaulted only
     through ``ensure_session_defaults``."""
@@ -114,10 +127,40 @@ def test_cached_plans_may_change_their_partitioning(spark, monkeypatch):
     assert spark.conf.get(key) == "true"
     fresh = spark.newSession()  # shares the context, not the SQL confs
     assert fresh.conf.get(key) == "false"
-    monkeypatch.setattr(session, "_ship_package", lambda _spark: None)
-    monkeypatch.setattr(session, "_DEFAULTED_APPS", set())
     session.ensure_session_defaults(fresh)
     assert fresh.conf.get(key) == "true"
+
+
+def test_new_session_gets_the_runtime_defaults(spark):
+    """A ``spark.newSession()`` of a context that already has the
+    defaults starts from Spark's own runtime confs and gets every one
+    of ours from ``ensure_session_defaults``; the package is already
+    shipped, so nothing is added to the context's Python includes."""
+    from ruleset_analysis_spark import session
+
+    want = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.execution.pythonUDTF.arrow.enabled": "true",
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    }
+    assert {k: spark.conf.get(k) for k in want} == want
+    fresh = spark.newSession()  # shares the context, not the SQL confs
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    includes = list(spark.sparkContext._python_includes)
+    assert session.ensure_session_defaults(fresh) is fresh
+    assert {k: fresh.conf.get(k) for k in want} == want
+    assert list(spark.sparkContext._python_includes) == includes
+
+    # a session that only loads tables, whose plans the context's
+    # corpus memo already holds, is defaulted too
+    from ruleset_analysis_spark.sources.parquet import load
+
+    sf_dir = "/root/testdata/sf0.001"
+    loader = spark.newSession()
+    region = load(spark, sf_dir, "region")
+    assert load(loader, sf_dir, "region") is region
+    assert {k: loader.conf.get(k) for k in want} == want
 
 
 def test_profiler_warms_like_bench():
